@@ -623,22 +623,20 @@ w{step} AS MATERIALIZED (
 
 
 def _q_pagerank_csr_transcripts(spark, sf_dir):
-    """CSR-block PageRank over Cuttana partitions — cogroup AND executor-
-    resident transports in one graded query (round 6 consolidation). The
-    resident run (blockstore.py: only the O(V) frontier enters each
-    superstep's plan; workers mmap decoded blocks from the node-shared
-    arena) shares the cogroup path's kernels, so its scores must be BIT-
-    identical; ``resident_match`` asserts per-vertex e9-rounded equality —
-    a transport bug (stale arena, wrong pid routing, dropped chunk) fails
-    the driver hash. Oracled: converged scores are partition-independent, so
-    3 unrolled relational PR supersteps (_pagerank_csr_sql) check the CSR
-    gather-scatter end-to-end. Top-50 is selected AFTER rounding to e9 so
-    the cut is engine-identical."""
-    import shutil
-    import tempfile
-
-    from cuttana_spark.analytics.blockstore import drop_block_store
-    from cuttana_spark.analytics.pagerank import pagerank_csr
+    """CSR-block PageRank over Cuttana partitions, checked against the
+    df-join engine in one graded query. ``pagerank_csr`` gathers against
+    the executor-resident block store (blockstore.py: only the O(V)
+    frontier enters each superstep's plan; workers mmap decoded blocks from
+    the node-shared arena); ``resident_match`` asserts its per-vertex
+    e9-rounded scores equal the df-join ``pagerank``'s after the same 3
+    supersteps — a different engine, so a transport bug (stale arena, wrong
+    pid routing, dropped chunk) or a kernel bug fails the driver hash. The
+    two engines' scores differ only in summation order, far below e9.
+    Oracled: the scores are partition-independent, so 3 unrolled relational
+    PR supersteps (_pagerank_csr_sql) check the CSR gather-scatter
+    end-to-end. Top-50 is selected AFTER rounding to e9 so the cut is
+    engine-identical."""
+    from cuttana_spark.analytics.pagerank import pagerank, pagerank_csr
     from cuttana_spark.operators import edges as E
     from cuttana_spark.partition.batched import cuttana_partition_df_batched
 
@@ -648,20 +646,12 @@ def _q_pagerank_csr_transcripts(spark, sf_dir):
     vp = res.to_spark_df(spark).select("vertex", "partition_id")
     sym = E.symmetrize(eids)
     pr = pagerank_csr(spark, sym, vp, max_iter=3, tol=0.0)
-    store = tempfile.mkdtemp(prefix="cuttana-blockstore-")
-    pr_res = pagerank_csr(
-        spark, sym, vp, max_iter=3, tol=0.0, block_store=store + "/blocks"
-    )
-    # both results are eagerly localCheckpointed inside pagerank_csr, so the
-    # returned plans no longer read the store — reclaim the tempdir and the
-    # /dev/shm arena generations now rather than leaking tmpfs memory
-    drop_block_store(store + "/blocks")
-    shutil.rmtree(store, ignore_errors=True)
+    pr_df = pagerank(spark, sym, max_iter=3, tol=0.0)
     e9 = lambda df: df.select(
         "vertex", F.round(F.col("score") * 1e9).cast("long").alias("score_e9")
     )
     flag = _multiset_equal_flag(
-        e9(pr), e9(pr_res), ["vertex", "score_e9"], "resident_match"
+        e9(pr), e9(pr_df), ["vertex", "score_e9"], "resident_match"
     )
     top = e9(pr).orderBy(F.desc("score_e9"), "vertex").limit(50)
     return top.crossJoin(F.broadcast(flag))

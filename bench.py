@@ -151,21 +151,11 @@ def main() -> None:
         PR_ITERS * 2 * n_edges / queries["pagerank_df"], 1
     )
 
-    # bucketed blocks: packed once by the warm-up call, reused shuffle-free
-    # by every later superstep (exchange elided — see pagerank_csr docstring).
-    # NB: the in-memory catalog forgets tables between sessions but the
-    # managed-table directory persists — remove both.
-    spark.sql("DROP TABLE IF EXISTS bench_pr_blocks")
-    import shutil
-
-    shutil.rmtree("spark-warehouse/bench_pr_blocks", ignore_errors=True)
-    pagerank_csr(
-        spark, sym, vp, max_iter=1, tol=0.0, bucketed_table="bench_pr_blocks"
-    ).agg(F.sum("score")).collect()
+    # default call: each call packs a call-scoped block store and drops it
+    # on return, so the timed leaf includes the O(E) pack
+    pagerank_csr(spark, sym, vp, max_iter=1, tol=0.0).agg(F.sum("score")).collect()
     with timed("pagerank_csr"):
-        pr = pagerank_csr(
-            spark, sym, vp, max_iter=PR_ITERS, tol=0.0, bucketed_table="bench_pr_blocks"
-        )
+        pr = pagerank_csr(spark, sym, vp, max_iter=PR_ITERS, tol=0.0)
         pr.agg(F.sum("score")).collect()
     extra["pagerank_supersteps_per_sec"] = round(PR_ITERS / queries["pagerank_csr"], 3)
     extra["pagerank_edges_per_sec"] = round(
@@ -200,7 +190,6 @@ def main() -> None:
     # perturbed by memory pressure from dead cached data
     vp.unpersist()
     sym.unpersist()
-    spark.sql("DROP TABLE IF EXISTS bench_pr_blocks")
 
     with timed("connected_components"):
         cc = connected_components(spark, eids)

@@ -92,42 +92,6 @@ pagerank(spark, sym, max_iter=iters, tol=0.0, checkpoint_interval=1, iter_walls=
 print("RESULT " + json.dumps({{"cpus": cpus, "edges": n_edges, "walls": [round(w, 3) for w in walls]}}))
 """
 
-CSR_WORKER = r"""
-import json, sys, time
-sys.path.insert(0, "{repo}")
-cpus = int(sys.argv[1]); iters = int(sys.argv[2]); nconv = int(sys.argv[3]); shuf = int(sys.argv[4])
-from pyspark.sql import functions as F
-from cuttana_spark.session import get_spark
-from cuttana_spark.operators import edges as E
-from cuttana_spark.analytics.pagerank import pagerank_csr
-
-# AQE off for the whole worker: per-superstep jobs, fixed-shape query —
-# same choice pagerank() makes internally for the df path (round 4).
-spark = get_spark(app=f"scale-csr-{{cpus}}", master=f"local[{{cpus}}]", shuffle_partitions=shuf,
-                  extra={{"spark.local.dir": "/dev/shm/spark-scale",
-                         "spark.sql.adaptive.enabled": "false"}})
-spark.sparkContext.setLogLevel("ERROR")
-tdf = spark.read.parquet("{repo}/fixtures/scale_transcripts_{{}}.parquet".format(nconv))
-nodes, eids = E.transcript_edges(tdf, mode="hash")
-sym = E.symmetrize(eids)
-n_edges = sym.count()
-vp = spark.read.parquet("{repo}/fixtures/scale_partition_{{}}_k{{}}.parquet".format(nconv, shuf)).cache()
-vp.count()
-# bucketed blocks: the ONLY mode whose per-superstep plan elides the blocks-
-# side exchange (cache mode re-shuffles the packed blocks every superstep —
-# plan-checked). Packed once per JVM (setup, not measured); the in-memory
-# catalog forgets tables between sessions so each worker recreates it.
-import shutil
-spark.sql("DROP TABLE IF EXISTS scale_pr_blocks")
-shutil.rmtree("{repo}/spark-warehouse/scale_pr_blocks", ignore_errors=True)
-walls = []
-pagerank_csr(spark, sym, vp, max_iter=iters, tol=0.0, checkpoint_interval=1,
-             iter_walls=walls, bucketed_table="scale_pr_blocks")
-spark.sql("DROP TABLE IF EXISTS scale_pr_blocks")
-shutil.rmtree("{repo}/spark-warehouse/scale_pr_blocks", ignore_errors=True)
-print("RESULT " + json.dumps({{"cpus": cpus, "edges": n_edges, "walls": [round(w, 3) for w in walls]}}))
-"""
-
 RES_WORKER = r"""
 import json, shutil, sys, time
 sys.path.insert(0, "{repo}")
@@ -137,7 +101,8 @@ from cuttana_spark.session import get_spark
 from cuttana_spark.operators import edges as E
 from cuttana_spark.analytics.pagerank import pagerank_csr
 
-# AQE off as in CSR_WORKER (per-superstep jobs, fixed-shape query)
+# AQE off for the whole worker: per-superstep jobs, fixed-shape query —
+# same choice pagerank() makes internally for the df path (round 4).
 spark = get_spark(app=f"scale-res-{{cpus}}", master=f"local[{{cpus}}]", shuffle_partitions=shuf,
                   extra={{"spark.local.dir": "/dev/shm/spark-scale",
                          "spark.sql.adaptive.enabled": "false"}})
@@ -329,7 +294,6 @@ def main() -> None:
         )
     subjects = {
         "pagerank": PR_WORKER,
-        "pagerank_csr": CSR_WORKER,
         "pagerank_res": RES_WORKER,
     }
     if "--subjects" in sys.argv:
@@ -431,10 +395,8 @@ def main() -> None:
         return round(d[b][job][key] / (4 * d[a][job][key]), 3)
 
     # headline = the most cluster-faithful subject that actually ran:
-    # resident store > bucketed CSR > df join
-    headline = next(
-        s for s in ("pagerank_res", "pagerank_csr", "pagerank") if s in subjects
-    )
+    # resident store > df join
+    headline = next(s for s in ("pagerank_res", "pagerank") if s in subjects)
     result = {
         "metric": "pagerank_scaling_efficiency_N_to_4N",
         "value": eff(headline, 2, 8),
@@ -477,8 +439,8 @@ def main() -> None:
         "note": "local[N] proxies N executors on a 32-core box; the 2->8 "
         "pair is the N->4N proxy. Both subjects run AQE-off per-superstep "
         "jobs. pagerank (df) shuffles the full O(E) transition join "
-        "(149 MB/superstep at 10.5M edges); pagerank_csr shuffles only the "
-        "O(V) frontier against cached CSR blocks and is the design intended "
+        "(149 MB/superstep at 10.5M edges); pagerank_res shuffles only the "
+        "O(V) frontier against the resident block store and is the design intended "
         "at cluster scale. The 8->32 shortfall on the df path is NOT a "
         "memory-bus hard cap and NOT shuffle volume (bytes identical): the "
         "profiled floor is 73% parallel task time whose CPU-seconds inflate "

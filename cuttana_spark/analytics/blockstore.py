@@ -1,27 +1,23 @@
-"""Executor-resident CSR block store — frontier-only Arrow transfer.
+"""Executor-resident CSR block store — the one block transport.
 
-The bucketed-table mode of the CSR path (csr.py, pagerank_csr) elides the
-O(E) SHUFFLE each superstep, but still re-scans the block table and re-feeds
-every block binary through the Arrow pipe into the Python workers on EVERY
-superstep. With the sort-free kernels that transfer is tolerable on one box
-(jobs/bench_density.py), but it is still O(E) executor→Python bytes per
-superstep — at 10^12-edge scale it is the recurring cost the frontier-only
-design exists to avoid.
+pagerank_csr, label_propagation_csr, k_core_csr and connected_components'
+contraction pre-pass all gather over packed CSR blocks (csr.py), and all of
+them keep those blocks here, next to the workers:
 
-This module removes it structurally, the way a long-lived cluster would:
-
-* ``write_block_store`` packs the blocks ONCE (csr.pack_blocks — the same
-  one-shuffle routing) and lays them out as a parquet dataset partitioned by
+* ``write_block_store`` packs the blocks ONCE (csr.pack_blocks — one
+  routing shuffle) and lays them out as a parquet dataset partitioned by
   ``partition_id`` — one directory per Cuttana partition, readable without
   Spark by any worker (local disk here; DFS/object store on a cluster).
-* ``scatter_gather_resident`` / ``gather_label_counts_resident`` run the
-  SAME kernels as csr.py (imported, not copied — bit-identical scores), but
-  the superstep is ``applyInPandas`` over the frontier ALONE, grouped by
-  partition_id. Blocks never enter the plan: workers materialize them from
-  the store through a NODE-SHARED mmap arena (see the arena section below)
-  — decoded once per node, mapped read-only by every worker process — so a
+* ``gather`` runs one kernel spec (csr.PR / csr.LPA / csr.MIN) as
+  ``applyInPandas`` over the frontier ALONE, grouped by partition_id.
+  Blocks never enter the plan: workers materialize them from the store
+  through a NODE-SHARED mmap arena (see the arena section below) — decoded
+  once per node, mapped read-only by every worker process — so a
   steady-state superstep moves O(V) rows through Arrow and zero block
   bytes: gather·multiply·bincount against shared memory-resident arrays.
+* ``resident_store`` is the transport choice every algorithm shares: reuse
+  (or pack) the store at a caller-given path, or pack a call-scoped store
+  and drop it when the call returns.
 
 Cache coherence: arena directories and handle-cache keys include the
 store's ``_SUCCESS`` mtime at NANOSECOND resolution (``st_mtime_ns`` — a
@@ -42,13 +38,15 @@ back to the local tempdir when the tmpfs base is absent or full — a node
 serving many partitions degrades to page-cache speed instead of
 exhausting /dev/shm.
 
-Measured (round 5): the resident engine is the fastest PageRank transport
-in the bench suite (9.17 s vs csr-cogroup 10.20 / df-join 11.01, 5
-supersteps) and the best-scaling one — N→4N (local[2]→local[8]) efficiency
-0.81-0.87 across 3 fresh-JVM profile reps with CPU-seconds inflating only
-+7-13% at identical shuffle bytes (BENCH_PROFILE_RES{2,8}_r5.json;
-cogroup path: +34%), because the per-superstep working set is the O(V)
-frontier alone.
+Measured: the resident store was the fastest PageRank transport at bench
+scale (round 5: 9.17 s vs cached-cogroup 10.20 s / df-join 11.01 s, 5
+supersteps) and the best-scaling one (N→4N efficiency 0.81-0.87, CPU-seconds
++7-13% where the cogroup path inflated +34%). The cached-cogroup and
+bucketed-table transports, which re-fed every block byte through Arrow each
+superstep, were removed once no measured regime favored them (BENCH.md,
+"One block transport"). Scores from different transports, maps or chunk
+sizes are equal up to summation order, not bit-identical: the kernels add a
+vertex's contributions block by block.
 
 The reference (Jacob-Chmura/cuttana, src/partitioner.rs) is the partitioner
 that PRODUCES the vertex→partition map; this store is how the analytics
@@ -60,24 +58,21 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import tempfile
 from collections import OrderedDict
+from contextlib import contextmanager
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cuttana_spark.analytics.csr import (
-    _EMPTY_CONTRIB,
+    PACK_VERSION,
+    Kernel,
     _check_frontier,
     _sorted_frontier,
     _vertex_digest,
-    PACK_VERSION,
-    lpa_partials,
-    min_partials,
     pack_blocks,
-    pr_partials,
 )
 
 _FP_MARKER = "_CUTTANA_STORE_FP"
@@ -413,6 +408,20 @@ def _load_arena(arena: str, pid: int):
     return blocks
 
 
+def _drop_stale_handles() -> None:
+    """Forget cached handles of stores that were dropped or rewritten since:
+    a mapped view keeps its arena file's pages (tmpfs: RAM) alive even after
+    drop_block_store unlinks it, so call-scoped stores would otherwise pin
+    one dead arena per call in every reused worker."""
+    live: dict = {}
+    for key in list(_CACHE):
+        store, path = key[0], key[0][0]
+        if path not in live:
+            live[path] = _store_key(path)
+        if live[path] != store:
+            del _CACHE[key]
+
+
 def load_blocks(path: str, pid: int) -> list:
     """Decoded CSR blocks for one partition: mmap views onto the node-shared
     arena (built on first touch by whichever worker gets there first), held
@@ -424,16 +433,10 @@ def load_blocks(path: str, pid: int) -> list:
     base falls through to the next."""
     key = (_store_key(path), int(pid))
     hit = _CACHE.get(key)
-    log = os.environ.get("CUTTANA_BLOCK_LOG")
-    if log:  # diagnostic only: one line per lookup, keyed by worker pid
-        with open(log, "a") as fh:
-            fh.write(
-                f"{os.getpid()} {int(pid)} {'hit' if hit is not None else 'miss'} "
-                f"{__import__('time').time():.3f}\n"
-            )
     if hit is not None:
         _CACHE.move_to_end(key)
         return hit
+    _drop_stale_handles()
     part_dir = os.path.join(os.path.abspath(path), f"partition_id={int(pid)}")
     blocks = None
     if not os.path.isdir(part_dir):
@@ -477,77 +480,62 @@ def load_blocks(path: str, pid: int) -> list:
 # ---------------------------------------------------------------------------
 
 
-def scatter_gather_resident(
-    spark: SparkSession, store_path: str, scores: DataFrame
-) -> DataFrame:
-    """One PageRank-style superstep against the resident store. Same math as
-    csr.scatter_gather (shared pr_partials kernel); the plan's only inputs
-    are the O(V) frontier (one hash exchange on partition_id) and the
-    partial-sum exchange of the final groupBy(dst) — block bytes never enter
-    the plan."""
+@contextmanager
+def resident_store(
+    spark: SparkSession,
+    trans: DataFrame,
+    vertex_partitions: DataFrame,
+    block_store: str | None,
+    src_pid=None,
+    kind: str = "",
+):
+    """Yield the path of a block store packed from (trans, vertex_partitions).
 
-    def step(key, pdf: pd.DataFrame):
+    ``block_store`` set: ensure_block_store at that path (reused when its
+    fingerprint matches) — the caller owns its lifetime. ``block_store``
+    None: pack into a call-scoped ``tempfile.mkdtemp`` store and
+    drop_block_store it on exit, so the caller's result must be eagerly
+    checkpointed before the ``with`` block ends. A call-scoped store lives on
+    the driver's local disk, which only a ``local[...]`` master's workers can
+    read: load_blocks treats a missing partition directory as a partition
+    with no edges, so executors elsewhere would silently gather nothing."""
+    if block_store is not None:
+        ensure_block_store(
+            trans, vertex_partitions, block_store, src_pid=src_pid, kind=kind
+        )
+        yield block_store
+        return
+    master = spark.sparkContext.master
+    if not re.fullmatch(r"local(\[.*\])?", master):
+        raise ValueError(
+            "block_store=None packs into driver-local temp storage, which "
+            f"executors of master {master!r} cannot read — pass a block_store "
+            "path on storage shared by the driver and every executor"
+        )
+    path = tempfile.mkdtemp(prefix="cuttana-blockstore-")
+    try:
+        write_block_store(trans, vertex_partitions, path, src_pid=src_pid, kind=kind)
+        yield path
+    finally:
+        drop_block_store(path)
+
+
+def gather(store_path: str, frontier: DataFrame, kernel: Kernel) -> DataFrame:
+    """One gather against the resident store: ``frontier`` (vertex,
+    partition_id, kernel.value) is grouped by partition_id and each group
+    runs ``kernel.partials`` over its partition's blocks. The plan's only
+    input is the O(V) frontier (one hash exchange on partition_id) — block
+    bytes never enter it. Each group's vertex set must equal the packed
+    partition's exactly (csr._check_frontier raises otherwise)."""
+
+    def step(key, pdf):
         blocks = load_blocks(store_path, int(key[0]))
         if not blocks or pdf.empty:
-            return pd.DataFrame(_EMPTY_CONTRIB)
-        sv, ss = _sorted_frontier(pdf, "score", np.float64)
+            return kernel.empty()
+        sv, vals = _sorted_frontier(pdf, kernel.value, kernel.dtype)
         dg = _vertex_digest(sv)
         for b in blocks:
             _check_frontier(b, sv, dg)
-        return pr_partials(blocks, ss)
+        return kernel.partials(blocks, vals)
 
-    partials = scores.groupby("partition_id").applyInPandas(
-        step, "dst long, contrib double"
-    )
-    return partials.groupBy("dst").agg(F.sum("contrib").alias("contrib"))
-
-
-def gather_label_counts_resident(
-    spark: SparkSession, store_path: str, labels: DataFrame
-) -> DataFrame:
-    """One label-propagation gather against the resident store (shared
-    lpa_partials kernel; see csr.gather_label_counts for semantics)."""
-
-    def step(key, pdf: pd.DataFrame):
-        blocks = load_blocks(store_path, int(key[0]))
-        if not blocks or pdf.empty:
-            return pd.DataFrame(
-                {
-                    "dst": pd.Series(dtype="int64"),
-                    "label": pd.Series(dtype="int64"),
-                    "cnt": pd.Series(dtype="int64"),
-                }
-            )
-        lv, lb = _sorted_frontier(pdf, "label", np.int64)
-        dg = _vertex_digest(lv)
-        for b in blocks:
-            _check_frontier(b, lv, dg)
-        return lpa_partials(blocks, lb)
-
-    return labels.groupby("partition_id").applyInPandas(
-        step, "dst long, label long, cnt long"
-    )
-
-
-def gather_min_resident(
-    spark: SparkSession, store_path: str, labels: DataFrame
-) -> DataFrame:
-    """One min-propagation gather against the resident store (shared
-    csr.min_partials kernel; see csr.gather_min for semantics). Used by
-    connected_components' contraction pre-pass in block_store mode — the
-    O(E) block bytes stay node-resident; each round ships only the O(V)
-    label frontier."""
-
-    def step(key, pdf: pd.DataFrame):
-        blocks = load_blocks(store_path, int(key[0]))
-        if not blocks or pdf.empty:
-            return pd.DataFrame(
-                {"dst": pd.Series(dtype="int64"), "mlab": pd.Series(dtype="int64")}
-            )
-        lv, lb = _sorted_frontier(pdf, "label", np.int64)
-        dg = _vertex_digest(lv)
-        for b in blocks:
-            _check_frontier(b, lv, dg)
-        return min_partials(blocks, lb)
-
-    return labels.groupby("partition_id").applyInPandas(step, "dst long, mlab long")
+    return frontier.groupby("partition_id").applyInPandas(step, kernel.schema)

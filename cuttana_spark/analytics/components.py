@@ -105,14 +105,11 @@ def connected_components(
     is below ``accel_min_edges``.
 
     WHEN IT PAYS (measured): the pre-pass moves O(V) per round where a star
-    round moves O(E) — so it wins when E ≫ V AND block bytes don't re-enter
-    the plan each round, i.e. with ``block_store`` set (the node-resident
-    mmap arena, blockstore.py). On the E≈V bench graph it is a wash, and in
-    cogroup mode (block_store=None) the per-round O(E) Arrow re-feed eats
-    the savings even at E/V=5 — keep it off unless the graph is dense and a
-    store path (shared storage on a real cluster, tmpfs locally) is
-    available. ``block_store``: directory for the packed blocks; the caller
-    owns the lifecycle (drop_block_store when done).
+    round moves O(E), and its blocks stay in the node-resident mmap arena
+    (blockstore.py), so it wins when E ≫ V. On the E≈V bench graph it is a
+    wash — keep it off unless the graph is dense. ``block_store``:
+    directory for the packed blocks, owned by the caller (drop_block_store
+    when done); None packs a call-scoped store (blockstore.resident_store).
 
     AQE (round 7): measured A/B at the 1.3M-edge bench graph — star rounds
     run ~1.6x FASTER with AQE ON (11.4-12.3 s vs 17.8-20.9 s for the full
@@ -164,7 +161,8 @@ def _connected_components_impl(
     if accel_rounds > 0 and runner is None and e.count() >= accel_min_edges:
         import time as _time
 
-        from cuttana_spark.analytics.csr import gather_min, pack_blocks
+        from cuttana_spark.analytics.blockstore import gather, resident_store
+        from cuttana_spark.analytics.csr import MIN
         from cuttana_spark.analytics.graphstore import sym_unit_graph
 
         # Canonical shared payload + synthetic hash map (graphstore.py) —
@@ -179,57 +177,41 @@ def _connected_components_impl(
         # equals k_core_csr's / label_propagation_csr's over the same edges
         # DataFrame and partition count — one pack serves all three.
         sym, vp, _pid_of = sym_unit_graph(edges, accel_partitions)
-        if block_store is not None:
-            from cuttana_spark.analytics.blockstore import (
-                ensure_block_store,
-                gather_min_resident,
-            )
-
-            ensure_block_store(
-                sym, vp, block_store, src_pid=_pid_of(F.col("src")),
-                kind="sym-unit",
-            )
-            blocks = None
-            _gather = lambda lbls: gather_min_resident(spark, block_store, lbls)
-        else:
-            blocks = pack_blocks(sym, vp, src_pid=_pid_of(F.col("src"))).cache()
-            blocks.count()  # one O(E) pack shuffle, reused every accel round
-            _gather = lambda lbls: gather_min(spark, blocks, lbls)
         # One shuffle per round: the vertex's own label rides in the same
         # union as the gathered neighbor partials, so min-combining them IS
-        # the new label relation — no join, no per-round eager checkpoint
-        # (the rounds chain lazily like pagerank's fixed-iteration mode and
-        # materialize as ONE dag inside the final checkpoint; intermediate
-        # rounds persist only as reusable shuffle outputs).
+        # the new label relation — no join. Each round's labels are
+        # checkpointed, so nothing after the loop reads the store.
         lck = CheckpointCycler(spark, keep_generations=1)
         labels = lck.checkpoint(vp.withColumn("label", F.col("vertex")))
-        for r in range(accel_rounds):
-            t0 = _time.monotonic()
-            partials = _gather(labels).select("dst", "mlab")
-            labels = lck.checkpoint(
-                partials.unionAll(
-                    labels.select(
-                        F.col("vertex").alias("dst"), F.col("label").alias("mlab")
+        with resident_store(
+            spark, sym, vp, block_store, src_pid=_pid_of(F.col("src")),
+            kind="sym-unit",
+        ) as store:
+            for r in range(accel_rounds):
+                t0 = _time.monotonic()
+                partials = gather(store, labels, MIN).select("dst", "mlab")
+                labels = lck.checkpoint(
+                    partials.unionAll(
+                        labels.select(
+                            F.col("vertex").alias("dst"), F.col("label").alias("mlab")
+                        )
+                    )
+                    .groupBy("dst")
+                    .agg(F.min("mlab").alias("label"))
+                    .select(
+                        F.col("dst").alias("vertex"),
+                        _pid_of(F.col("dst")).alias("partition_id"),
+                        "label",
                     )
                 )
-                .groupBy("dst")
-                .agg(F.min("mlab").alias("label"))
-                .select(
-                    F.col("dst").alias("vertex"),
-                    _pid_of(F.col("dst")).alias("partition_id"),
-                    "label",
-                )
-            )
-            if round_walls is not None:
-                round_walls.append(
-                    {
-                        "round": -(r + 1),  # accel rounds count down from -1
-                        "wall": _time.monotonic() - t0,
-                        "sig_wall": 0.0,
-                    }
-                )
-        if blocks is not None:
-            blocks.unpersist(False)
+                if round_walls is not None:
+                    round_walls.append(
+                        {
+                            "round": -(r + 1),  # accel rounds count down from -1
+                            "wall": _time.monotonic() - t0,
+                            "sig_wall": 0.0,
+                        }
+                    )
         la = labels.select(F.col("vertex").alias("a"), F.col("label").alias("la"))
         lb = labels.select(F.col("vertex").alias("b"), F.col("label").alias("lb"))
         contracted = (

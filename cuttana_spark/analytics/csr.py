@@ -29,17 +29,19 @@ than risk a silently wrong positional lookup. (Count/min/max alone would
 admit a frontier with the same envelope but a different interior set,
 e.g. packed {0,1,3} vs frontier {0,2,3}; the digest closes that hole.)
 
-scatter_gather: one PageRank-style superstep. Frontier scores (vertex,
-score, partition_id) are hash-cogrouped with the cached blocks on
-partition_id — the only shuffled side is the O(V) frontier; the O(E) blocks
-are cached executor-side. Each block emits at most one row per distinct dst
-(map-side combine), which is what bounds hub-vertex skew: the final
-groupBy(dst) receives ≤ #blocks rows per hub, never one per edge.
+The three gather kernels (pr_partials, lpa_partials, min_partials) run per
+partition against the resident block store (blockstore.gather); each is
+described by a ``Kernel`` spec: the frontier value column and dtype it reads
+and the schema of the partials it emits. Every block emits at most one row
+per distinct dst (map-side combine), which is what bounds hub-vertex skew:
+the caller's final groupBy(dst) receives ≤ #blocks rows per hub, never one
+per edge.
 """
 
 from __future__ import annotations
 
 import zlib
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -57,10 +59,13 @@ BLOCK_SCHEMA = (
     "src_idx binary, ud binary, inv binary, ps binary"
 )
 
-_EMPTY_CONTRIB = {
-    "dst": pd.Series(dtype="int64"),
-    "contrib": pd.Series(dtype="float64"),
-}
+_PD_DTYPES = {"int": "int32", "long": "int64", "double": "float64", "binary": object}
+
+
+def empty_frame(schema: str) -> pd.DataFrame:
+    """Zero-row pandas frame typed like the Spark DDL ``schema`` string."""
+    cols = (field.split() for field in schema.split(","))
+    return pd.DataFrame({name: pd.Series(dtype=_PD_DTYPES[t]) for name, t in cols})
 
 
 def pack_blocks(
@@ -81,21 +86,8 @@ def pack_blocks(
     from the same expression)."""
 
     def pack(key, edge_pdf: pd.DataFrame, vp_pdf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {
-                "partition_id": pd.Series(dtype="int32"),
-                "n_verts": pd.Series(dtype="int64"),
-                "v_min": pd.Series(dtype="int64"),
-                "v_max": pd.Series(dtype="int64"),
-                "v_digest": pd.Series(dtype="int64"),
-                "src_idx": pd.Series(dtype=object),
-                "ud": pd.Series(dtype=object),
-                "inv": pd.Series(dtype=object),
-                "ps": pd.Series(dtype=object),
-            }
-        )
         if edge_pdf.empty:
-            return empty
+            return empty_frame(BLOCK_SCHEMA)
         pid = int(key[0])
         verts = np.sort(vp_pdf["vertex"].to_numpy(np.int64))
         srcs = edge_pdf["src"].to_numpy(np.int64)
@@ -153,7 +145,7 @@ def _vertex_digest(sorted_verts: np.ndarray) -> int:
     """crc32 of the sorted int64 vertex array's bytes — a process-stable,
     O(V) digest that distinguishes interior set differences (count/min/max
     alone cannot). Computed once per partition at pack time and once per
-    cogroup call at superstep time; both sides see the identical sorted
+    gather group at superstep time; both sides see the identical sorted
     layout, so equal sets ⟺ equal digests (and unequal sets collide with
     crc32's ~2^-32 probability — a guard, not a security boundary)."""
     return int(zlib.crc32(np.ascontiguousarray(sorted_verts, np.int64).tobytes()))
@@ -182,22 +174,6 @@ def _check_frontier(row, sv: np.ndarray, sv_digest: int | None = None) -> None:
             f"[{sv[0]}, {sv[-1]}] digest {sv_digest}) — every superstep must "
             "present exactly the full partition vertex set"
         )
-
-
-def decode_block(row) -> dict:
-    """Arrow/parquet row (binary columns) → dict of numpy views. Shared by
-    the cogroup steps below and blockstore's resident cache, so both paths
-    run the identical kernel bytes."""
-    return {
-        "n_verts": int(row["n_verts"]),
-        "v_min": int(row["v_min"]),
-        "v_max": int(row["v_max"]),
-        "v_digest": int(row["v_digest"]),
-        "src_idx": np.frombuffer(row["src_idx"], np.int32),
-        "ud": np.frombuffer(row["ud"], np.int64),
-        "inv": np.frombuffer(row["inv"], np.int32),
-        "ps": np.frombuffer(row["ps"], np.float64),
-    }
 
 
 def pr_partials(blocks: list, ss: np.ndarray) -> pd.DataFrame:
@@ -271,94 +247,24 @@ def min_partials(blocks: list, lb: np.ndarray) -> pd.DataFrame:
         dd.append(ud[d[first]])
         mm.append(l[first])
     if not dd:
-        return pd.DataFrame(
-            {"dst": pd.Series(dtype="int64"), "mlab": pd.Series(dtype="int64")}
-        )
+        return MIN.empty()
     return pd.DataFrame({"dst": np.concatenate(dd), "mlab": np.concatenate(mm)})
 
 
-def gather_min(spark, blocks: DataFrame, labels: DataFrame) -> DataFrame:
-    """One min-propagation gather: labels (vertex, label, partition_id) ×
-    blocks → per-block (dst, mlab) partials. Only the O(V) label frontier is
-    shuffled; the global merge is groupBy(dst).min(mlab), which receives at
-    most one row per (block, dst) — hub fan-in is bounded exactly as in
-    scatter_gather."""
+class Kernel(NamedTuple):
+    """One gather kernel: ``partials(blocks, values)`` reads the frontier
+    column ``value`` (cast to ``dtype``, sorted by vertex) and returns rows
+    of the Spark DDL ``schema``."""
 
-    def step(key, block_pdf: pd.DataFrame, label_pdf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {"dst": pd.Series(dtype="int64"), "mlab": pd.Series(dtype="int64")}
-        )
-        if block_pdf.empty or label_pdf.empty:
-            return empty
-        lv, lb = _sorted_frontier(label_pdf, "label", np.int64)
-        dg = _vertex_digest(lv)
-        blocks = [decode_block(row) for _, row in block_pdf.iterrows()]
-        for b in blocks:
-            _check_frontier(b, lv, dg)
-        return min_partials(blocks, lb)
+    value: str
+    dtype: type
+    partials: Callable
+    schema: str
 
-    return (
-        blocks.groupby("partition_id")
-        .cogroup(labels.groupby("partition_id"))
-        .applyInPandas(step, "dst long, mlab long")
-    )
+    def empty(self) -> pd.DataFrame:
+        return empty_frame(self.schema)
 
 
-def gather_label_counts(spark, blocks: DataFrame, labels: DataFrame) -> DataFrame:
-    """One label-propagation gather: labels (vertex, label, partition_id) ×
-    blocks → per-block (dst, label, cnt) partials, pre-aggregated inside the
-    Arrow kernel by lexsort + run-length (no per-edge rows leave the block).
-    Only the O(V) label frontier is shuffled; the subsequent global
-    groupBy(dst, label) receives ≤ one row per (block, dst, label) — after a
-    few supersteps labels collapse and the partial set is ≈O(V), not O(E).
-    The ``ps`` weights in the blocks are ignored (LPA counts edges); the
-    lexsort groups by ``inv`` instead of raw dsts (same grouping — ud is
-    ascending so inv order ≡ dst order — but int32 sorts faster)."""
-
-    def step(key, block_pdf: pd.DataFrame, label_pdf: pd.DataFrame):
-        empty = pd.DataFrame(
-            {
-                "dst": pd.Series(dtype="int64"),
-                "label": pd.Series(dtype="int64"),
-                "cnt": pd.Series(dtype="int64"),
-            }
-        )
-        if block_pdf.empty or label_pdf.empty:
-            return empty
-        lv, lb = _sorted_frontier(label_pdf, "label", np.int64)
-        dg = _vertex_digest(lv)
-        blocks = [decode_block(row) for _, row in block_pdf.iterrows()]
-        for b in blocks:
-            _check_frontier(b, lv, dg)
-        return lpa_partials(blocks, lb)
-
-    return (
-        blocks.groupby("partition_id")
-        .cogroup(labels.groupby("partition_id"))
-        .applyInPandas(step, "dst long, label long, cnt long")
-    )
-
-
-def scatter_gather(spark, blocks: DataFrame, scores: DataFrame) -> DataFrame:
-    """One superstep: scores (vertex, score, partition_id) × blocks →
-    per-dst partial contributions, pre-aggregated per block. Sort-free:
-    score lookup is a precomputed int32 gather, dst grouping a precomputed
-    bincount segment-sum (see module docstring; bit-identical to the
-    on-the-fly formulation)."""
-
-    def step(key, block_pdf: pd.DataFrame, score_pdf: pd.DataFrame):
-        if block_pdf.empty or score_pdf.empty:
-            return pd.DataFrame(_EMPTY_CONTRIB)
-        sv, ss = _sorted_frontier(score_pdf, "score", np.float64)
-        dg = _vertex_digest(sv)
-        blocks = [decode_block(row) for _, row in block_pdf.iterrows()]
-        for b in blocks:
-            _check_frontier(b, sv, dg)
-        return pr_partials(blocks, ss)
-
-    partials = (
-        blocks.groupby("partition_id")
-        .cogroup(scores.groupby("partition_id"))
-        .applyInPandas(step, "dst long, contrib double")
-    )
-    return partials.groupBy("dst").agg(F.sum("contrib").alias("contrib"))
+PR = Kernel("score", np.float64, pr_partials, "dst long, contrib double")
+LPA = Kernel("label", np.int64, lpa_partials, "dst long, label long, cnt long")
+MIN = Kernel("label", np.int64, min_partials, "dst long, mlab long")

@@ -25,7 +25,6 @@ def k_core_csr(
     vertex_partitions: DataFrame | None,
     k: int,
     max_rounds: int = 200,
-    bucketed_table: str | None = None,
     round_walls: list | None = None,
     block_store: str | None = None,
     hash_partitions: int | None = None,
@@ -55,14 +54,16 @@ def k_core_csr(
     fingerprint matches LPA's and CC's over the same edges DataFrame and
     partition count, so one pack serves all three (and the O(E)⋈O(V)
     routing join is skipped — the map is an expression).
+
+    block_store: executor-resident store dir (see pagerank_csr and
+    blockstore.resident_store; None packs a call-scoped store).
     """
-    from cuttana_spark.analytics.csr import pack_blocks, scatter_gather
+    from cuttana_spark.analytics.blockstore import gather, resident_store
+    from cuttana_spark.analytics.csr import PR
     from cuttana_spark.plans.checkpoints import CheckpointCycler
 
     if (vertex_partitions is None) == (hash_partitions is None):
         raise ValueError("pass exactly one of vertex_partitions / hash_partitions")
-    if bucketed_table is not None and block_store is not None:
-        raise ValueError("pass at most one of bucketed_table / block_store")
     src_pid = None
     if hash_partitions is not None:
         from cuttana_spark.analytics.graphstore import sym_unit_graph
@@ -80,60 +81,42 @@ def k_core_csr(
         vp = vertex_partitions.select("vertex", "partition_id")
         nodes = sym.select(F.col("src").alias("vertex")).distinct()
         frontier = nodes.join(vp, "vertex").withColumn("score", F.lit(1.0))
-    if block_store is not None:
-        from cuttana_spark.analytics.blockstore import (
-            ensure_block_store,
-            scatter_gather_resident,
-        )
-
-        ensure_block_store(
-            trans, vp, block_store, src_pid=src_pid,
-            kind="sym-unit" if src_pid is not None else "",
-        )
-        blocks = None
-        gather = lambda f: scatter_gather_resident(spark, block_store, f)
-    elif bucketed_table is not None:
-        if not spark.catalog.tableExists(bucketed_table):
-            nb = int(vp.agg(F.max("partition_id")).first()[0]) + 1
-            pack_blocks(trans, vp, src_pid=src_pid).write.bucketBy(
-                nb, "partition_id"
-            ).mode("overwrite").saveAsTable(bucketed_table)
-        blocks = spark.table(bucketed_table)
-        gather = lambda f: scatter_gather(spark, blocks, f)
-    else:
-        blocks = pack_blocks(trans, vp, src_pid=src_pid).cache()
-        blocks.count()
-        gather = lambda f: scatter_gather(spark, blocks, f)
 
     import time as _time
 
     ck = CheckpointCycler(spark)
     frontier = ck.checkpoint(frontier)
     n_prev = frontier.count()  # everyone starts alive
-    for _ in range(max_rounds):
-        t0 = _time.monotonic()
-        contribs = gather(frontier)
-        nf = frontier.join(contribs, frontier.vertex == contribs.dst, "left").select(
-            frontier.vertex,
-            frontier.partition_id,
-            F.when(
-                (frontier.score > 0)
-                & (F.coalesce(contribs.contrib, F.lit(0.0)) >= k),
-                1.0,
+    with resident_store(
+        spark, trans, vp, block_store, src_pid=src_pid,
+        kind="sym-unit" if src_pid is not None else "",
+    ) as store:
+        for _ in range(max_rounds):
+            t0 = _time.monotonic()
+            contribs = (
+                gather(store, frontier, PR)
+                .groupBy("dst")
+                .agg(F.sum("contrib").alias("contrib"))
             )
-            .otherwise(0.0)
-            .alias("score"),
-        )
-        nf = ck.checkpoint(nf)
-        n_alive = nf.filter(F.col("score") > 0).count()
-        frontier = nf
-        if round_walls is not None:
-            round_walls.append(round(_time.monotonic() - t0, 3))
-        if n_alive == n_prev or n_alive == 0:
-            break
-        n_prev = n_alive
-    if bucketed_table is None and block_store is None:
-        blocks.unpersist(False)
+            nf = frontier.join(contribs, frontier.vertex == contribs.dst, "left").select(
+                frontier.vertex,
+                frontier.partition_id,
+                F.when(
+                    (frontier.score > 0)
+                    & (F.coalesce(contribs.contrib, F.lit(0.0)) >= k),
+                    1.0,
+                )
+                .otherwise(0.0)
+                .alias("score"),
+            )
+            nf = ck.checkpoint(nf)
+            n_alive = nf.filter(F.col("score") > 0).count()
+            frontier = nf
+            if round_walls is not None:
+                round_walls.append(round(_time.monotonic() - t0, 3))
+            if n_alive == n_prev or n_alive == 0:
+                break
+            n_prev = n_alive
     return ck.finish(frontier).filter(F.col("score") > 0).select("vertex")
 
 

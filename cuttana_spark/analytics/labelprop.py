@@ -80,7 +80,6 @@ def label_propagation_csr(
     edges: DataFrame,
     vertex_partitions: DataFrame | None,
     max_iter: int = 10,
-    bucketed_table: str | None = None,
     block_store: str | None = None,
     hash_partitions: int | None = None,
 ) -> DataFrame:
@@ -93,23 +92,19 @@ def label_propagation_csr(
     argmax is a single min(struct(-cnt, label)) aggregation — no window
     sort. vertex_partitions must cover every vertex (see k_core_csr); any
     total map is correct, partition quality only affects locality.
-    block_store: executor-resident store dir (see blockstore.py) — only the
-    O(V) frontier enters the plan; mutually exclusive with bucketed_table.
+    block_store: executor-resident store dir (see pagerank_csr and
+    blockstore.resident_store; None packs a call-scoped store).
     hash_partitions (round 6): pass an int INSTEAD of vertex_partitions to
     use the canonical expression map + shared sym-unit payload
     (graphstore.sym_unit_graph) — with block_store, the store fingerprint
     matches k-core's and CC's over the same edges, so one pack serves all
     three."""
-    from cuttana_spark.analytics.csr import (
-        gather_label_counts,
-        pack_blocks,
-    )
+    from cuttana_spark.analytics.blockstore import gather, resident_store
+    from cuttana_spark.analytics.csr import LPA
     from cuttana_spark.plans.checkpoints import CheckpointCycler
 
     if (vertex_partitions is None) == (hash_partitions is None):
         raise ValueError("pass exactly one of vertex_partitions / hash_partitions")
-    if bucketed_table is not None and block_store is not None:
-        raise ValueError("pass at most one of bucketed_table / block_store")
     src_pid = None
     if hash_partitions is not None:
         from cuttana_spark.analytics.graphstore import sym_unit_graph
@@ -133,56 +128,34 @@ def label_propagation_csr(
             .distinct()
         )
         frontier = nodes.join(vp, "vertex").withColumn("label", F.col("vertex"))
-    if block_store is not None:
-        from cuttana_spark.analytics.blockstore import (
-            ensure_block_store,
-            gather_label_counts_resident,
-        )
-
-        ensure_block_store(
-            trans, vp, block_store, src_pid=src_pid,
-            kind="sym-unit" if src_pid is not None else "",
-        )
-        blocks = None
-        gather = lambda f: gather_label_counts_resident(spark, block_store, f)
-    elif bucketed_table is not None:
-        if not spark.catalog.tableExists(bucketed_table):
-            nb = int(vp.agg(F.max("partition_id")).first()[0]) + 1
-            pack_blocks(trans, vp, src_pid=src_pid).write.bucketBy(
-                nb, "partition_id"
-            ).mode("overwrite").saveAsTable(bucketed_table)
-        blocks = spark.table(bucketed_table)
-        gather = lambda f: gather_label_counts(spark, blocks, f)
-    else:
-        blocks = pack_blocks(trans, vp, src_pid=src_pid).cache()
-        blocks.count()
-        gather = lambda f: gather_label_counts(spark, blocks, f)
 
     ck = CheckpointCycler(spark)
     frontier = ck.checkpoint(frontier)
-    for _ in range(max_iter):
-        partials = gather(frontier)
-        counts = partials.groupBy("dst", "label").agg(F.sum("cnt").alias("cnt"))
-        best = (
-            counts.groupBy("dst")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("nc"), F.col("label").alias("lb")
-                    )
-                ).alias("s")
+    with resident_store(
+        spark, trans, vp, block_store, src_pid=src_pid,
+        kind="sym-unit" if src_pid is not None else "",
+    ) as store:
+        for _ in range(max_iter):
+            partials = gather(store, frontier, LPA)
+            counts = partials.groupBy("dst", "label").agg(F.sum("cnt").alias("cnt"))
+            best = (
+                counts.groupBy("dst")
+                .agg(
+                    F.min(
+                        F.struct(
+                            (-F.col("cnt")).alias("nc"), F.col("label").alias("lb")
+                        )
+                    ).alias("s")
+                )
+                .select(F.col("dst").alias("vertex"), F.col("s.lb").alias("new_label"))
             )
-            .select(F.col("dst").alias("vertex"), F.col("s.lb").alias("new_label"))
-        )
-        frontier = ck.checkpoint(
-            frontier.join(best, "vertex", "left").select(
-                "vertex",
-                "partition_id",
-                F.coalesce("new_label", "label").alias("label"),
+            frontier = ck.checkpoint(
+                frontier.join(best, "vertex", "left").select(
+                    "vertex",
+                    "partition_id",
+                    F.coalesce("new_label", "label").alias("label"),
+                )
             )
-        )
-    if bucketed_table is None and block_store is None:
-        blocks.unpersist(False)
     return ck.finish(frontier).select("vertex", "label")
 
 

@@ -5,7 +5,8 @@
    truncated with localCheckpoint. This is the oracle-checkable variant.
 
 2. ``pagerank_csr`` — the scale path from the north star: frontier scores
-   hash-cogrouped against CSR-packed per-partition adjacency blocks inside an
+   grouped by partition and gathered against CSR-packed per-partition
+   adjacency blocks from the resident block store (blockstore.py) inside an
    Arrow ``applyInPandas`` UDF (numpy gather-scatter, no per-row Python).
    Hub-vertex skew is neutralized structurally: each block partially
    aggregates contributions per dst BEFORE the shuffle (map-side combine), so
@@ -301,8 +302,6 @@ def pagerank_csr(
     max_iter: int = 100,
     tol: float = 1e-10,
     runner=None,
-    bucketed_table: str | None = None,
-    num_buckets: int | None = None,
     checkpoint_interval: int = 5,
     iter_walls: list | None = None,
     block_store: str | None = None,
@@ -319,20 +318,13 @@ def pagerank_csr(
     partitioner; blocks are co-located by partition_id so each superstep
     shuffles only the O(V) frontier, not the O(E) edges.
 
-    bucketed_table: if set, the packed blocks are written ONCE as a table
-    bucketed by partition_id; every superstep's cogroup then reads it with
-    the exchange elided (verified in the physical plan) — the O(E) side is
-    never reshuffled. This is the bucketing story from the north star and
-    the right mode on a real cluster.
-
-    block_store: if set (a directory path; mutually exclusive with
-    bucketed_table), the packed blocks are written ONCE as a parquet dataset
-    partitioned by partition_id and each superstep runs against the
-    EXECUTOR-RESIDENT store: only the O(V) frontier enters the plan — block
-    bytes are loaded from the store by the reused Python workers on first
-    touch and cached in-process (blockstore.py). This removes the
-    per-superstep O(E) Arrow transfer that dominates the cogroup modes on
-    dense graphs; scores are bit-identical (same kernels).
+    block_store: directory for the executor-resident block store
+    (blockstore.py) — packed once, reused fingerprint-checked by later
+    calls, and owned by the caller (drop_block_store when done). Each
+    superstep moves only the O(V) frontier through Arrow; workers mmap the
+    blocks from a node-shared arena. None (default): the blocks are packed
+    into a call-scoped temporary store that is dropped before returning,
+    which needs a ``local[...]`` master (blockstore.resident_store).
 
     hash_partitions (round 7, VERDICT r6 item 6): pass an int INSTEAD of
     vertex_partitions to use the canonical expression map + transition
@@ -342,17 +334,17 @@ def pagerank_csr(
     with block_store set the store fingerprint matches any other
     trans_graph pack over the same edges DataFrame and k: a pagerank →
     k-core → LPA → CC pipeline pays exactly TWO packs (trans + sym-unit).
-    Scores are identical to the vertex_partitions mode (partition maps
-    affect only locality).
+    Scores equal the vertex_partitions mode's up to summation order: the
+    partition map decides how each vertex's contributions are grouped into
+    blocks before they are added.
     """
     from pyspark.sql import Window
 
-    from cuttana_spark.analytics.csr import pack_blocks, scatter_gather
+    from cuttana_spark.analytics.blockstore import gather, resident_store
+    from cuttana_spark.analytics.csr import PR
 
     if (vertex_partitions is None) == (hash_partitions is None):
         raise ValueError("pass exactly one of vertex_partitions / hash_partitions")
-    if bucketed_table is not None and block_store is not None:
-        raise ValueError("pass at most one of bucketed_table / block_store")
     src_pid = None
     pid_of = None
     kind = ""
@@ -361,9 +353,11 @@ def pagerank_csr(
 
         # canonical plans built from the ORIGINAL edges df — fingerprint
         # equality across callers requires the same construction
-        trans, vp_canon, pid_of = trans_graph(edges, hash_partitions)
+        trans, pack_vp, pid_of = trans_graph(edges, hash_partitions)
         src_pid = pid_of(F.col("src"))
         kind = "trans"
+    else:
+        pack_vp = vertex_partitions
     edges = edges.select("src", "dst", F.col("weight").cast("double"))
     if hash_partitions is None:
         # window-built transition matrix — see pagerank(): no out_w subtree,
@@ -375,46 +369,6 @@ def pagerank_csr(
                 "p"
             ),
         )
-    if block_store is not None:
-        from cuttana_spark.analytics.blockstore import (
-            ensure_block_store,
-            scatter_gather_resident,
-        )
-
-        ensure_block_store(
-            trans,
-            vp_canon if hash_partitions is not None else vertex_partitions,
-            block_store,
-            src_pid=src_pid,
-            kind=kind,
-        )
-        blocks = None
-        gather = lambda frontier: scatter_gather_resident(
-            spark, block_store, frontier
-        )
-    elif bucketed_table is not None:
-        if not spark.catalog.tableExists(bucketed_table):
-            if hash_partitions is not None:
-                k = hash_partitions
-                pack_src = vp_canon
-            else:
-                k = num_buckets or int(
-                    vertex_partitions.agg(F.max("partition_id")).first()[0]
-                ) + 1
-                pack_src = vertex_partitions
-            pack_blocks(trans, pack_src, src_pid=src_pid).write.bucketBy(
-                k, "partition_id"
-            ).mode("overwrite").saveAsTable(bucketed_table)
-        blocks = spark.table(bucketed_table)
-        gather = lambda frontier: scatter_gather(spark, blocks, frontier)
-    else:
-        blocks = pack_blocks(
-            trans,
-            vp_canon if hash_partitions is not None else vertex_partitions,
-            src_pid=src_pid,
-        ).cache()
-        blocks.count()  # materialize once; reused every superstep
-        gather = lambda frontier: scatter_gather(spark, blocks, frontier)
     vp = (
         vertex_partitions.select("vertex", "partition_id")
         if hash_partitions is None
@@ -455,8 +409,6 @@ def pagerank_csr(
     n = row.n
     if n == 0:
         nodes_flags.unpersist(False)
-        if bucketed_table is None and block_store is None:
-            blocks.unpersist(False)
         return spark.createDataFrame([], "vertex long, score double")
     has_dangling = row.n_dangling > 0
     nodes_pid = nodes_flags.select("vertex", "partition_id")  # cache projection
@@ -478,53 +430,58 @@ def pagerank_csr(
 
     import time as _time
 
-    for it in range(start_iter, max_iter):
-        _t_it = _time.monotonic()
-        contribs = gather(ranks)
-        joined = nodes_pid.join(contribs, nodes_pid.vertex == contribs.dst, "left")
-        if has_dangling:
-            # in-plan dangling mass (broadcast 1-row aggregate) — see pagerank()
-            dm = dangling_nodes.join(ranks, "vertex").agg(
-                F.coalesce(F.sum("score"), F.lit(0.0)).alias("dangling_mass")
+    with resident_store(
+        spark, trans, pack_vp, block_store, src_pid=src_pid, kind=kind
+    ) as store:
+        for it in range(start_iter, max_iter):
+            _t_it = _time.monotonic()
+            contribs = (
+                gather(store, ranks, PR)
+                .groupBy("dst")
+                .agg(F.sum("contrib").alias("contrib"))
             )
-            joined = joined.crossJoin(F.broadcast(dm))
-            extra = F.col("dangling_mass") / F.lit(float(n))
-        else:
-            extra = F.lit(0.0)
-        new_ranks = joined.select(
-            "vertex",
-            "partition_id",
-            (
-                F.lit((1.0 - alpha) / n)
-                + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra)
-            ).alias("score"),
-        )
-        # materialize (truncate lineage/plan growth) only periodically —
-        # intermediate supersteps live as shuffle outputs that Spark reuses,
-        # so a fixed-iteration run executes as ONE dag with no per-superstep
-        # driver round-trip
-        interval = max(1, checkpoint_interval)
-        if tol > 0 or runner is not None or (it + 1) % interval == 0 or it + 1 == max_iter:
-            new_ranks = ck.checkpoint(new_ranks)
-        if tol > 0:
-            err = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "vertex")
-                .agg(F.sum(F.abs(F.col("a.score") - F.col("b.score"))))
-                .first()[0]
+            joined = nodes_pid.join(contribs, nodes_pid.vertex == contribs.dst, "left")
+            if has_dangling:
+                # in-plan dangling mass (broadcast 1-row aggregate) — see pagerank()
+                dm = dangling_nodes.join(ranks, "vertex").agg(
+                    F.coalesce(F.sum("score"), F.lit(0.0)).alias("dangling_mass")
+                )
+                joined = joined.crossJoin(F.broadcast(dm))
+                extra = F.col("dangling_mass") / F.lit(float(n))
+            else:
+                extra = F.lit(0.0)
+            new_ranks = joined.select(
+                "vertex",
+                "partition_id",
+                (
+                    F.lit((1.0 - alpha) / n)
+                    + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra)
+                ).alias("score"),
             )
-        else:
-            err = float("inf")  # fixed-iteration mode: no convergence action
-        ranks = new_ranks
-        if iter_walls is not None:
-            iter_walls.append(_time.monotonic() - _t_it)
-        if runner is not None:
-            runner.checkpoint(it + 1, ranks, {"err": float(err) if err != float("inf") else -1.0})
-        if err < n * tol:
-            break
+            # materialize (truncate lineage/plan growth) only periodically —
+            # intermediate supersteps live as shuffle outputs that Spark reuses,
+            # so a fixed-iteration run executes as ONE dag with no per-superstep
+            # driver round-trip
+            interval = max(1, checkpoint_interval)
+            if tol > 0 or runner is not None or (it + 1) % interval == 0 or it + 1 == max_iter:
+                new_ranks = ck.checkpoint(new_ranks)
+            if tol > 0:
+                err = (
+                    new_ranks.alias("a")
+                    .join(ranks.alias("b"), "vertex")
+                    .agg(F.sum(F.abs(F.col("a.score") - F.col("b.score"))))
+                    .first()[0]
+                )
+            else:
+                err = float("inf")  # fixed-iteration mode: no convergence action
+            ranks = new_ranks
+            if iter_walls is not None:
+                iter_walls.append(_time.monotonic() - _t_it)
+            if runner is not None:
+                runner.checkpoint(it + 1, ranks, {"err": float(err) if err != float("inf") else -1.0})
+            if err < n * tol:
+                break
     nodes_flags.unpersist(False)
-    if bucketed_table is None and block_store is None:
-        blocks.unpersist(False)
     return ck.finish(ranks).select("vertex", "score")
 
 

@@ -162,6 +162,10 @@ def ivf_probe_gemm(
 
     C = centroids
     nq_total = queries.count()
+    if nq_total == 0:
+        return queries.sparkSession.createDataFrame(
+            [], "query_id long, match_id long, cosine double, rank int"
+        )
     if nq_total > max_broadcast_queries:
         def probe(batches):
             for pdf in batches:

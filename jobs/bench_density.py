@@ -11,12 +11,15 @@ band digraphs (v → (v+1+j) mod V, j < d — every neighbor within v±d, so a
 RANGE map has near-zero cut while a PMOD map scatters every block):
 
   * df            — DataFrame-join engine
-  * csr_range     — CSR blocks over partition_id = v·k//V (the good map)
-  * csr_pmod      — CSR blocks over partition_id = v mod k (the bad map)
+  * res_range     — resident CSR blocks over partition_id = v·k//V (the
+                    good map)
+  * res_pmod      — resident CSR blocks over partition_id = v mod k (the
+                    bad map)
 
 at avg degree d ∈ {4, 32}, V fixed, steady sec/superstep at local[32],
-AQE-off per-superstep jobs (scaling-bench methodology). Expected and
-measured: csr_range ≤ df ≤ csr_pmod at d=32 — i.e. partition quality is
+AQE-off per-superstep jobs (scaling-bench methodology). Expected: res_range
+≤ df ≤ res_pmod at d=32 (round 5 measured the same order with bucketed
+CSR blocks, BENCH_DENSITY_r5.json) — i.e. partition quality is
 not cosmetic, it is the term that decides whether the frontier-only
 engine wins; this is the engine's own thesis made falsifiable.
 
@@ -33,7 +36,7 @@ import subprocess
 import sys
 
 WORKER = r"""
-import json, shutil, sys, time
+import json, sys, time
 sys.path.insert(0, "{repo}")
 V = int(sys.argv[1]); d = int(sys.argv[2]); iters = int(sys.argv[3]); subj = sys.argv[4]
 from pyspark.sql import functions as F
@@ -64,25 +67,16 @@ if subj == "df":
 else:
     if subj.endswith("range"):
         pid = (F.col("src") * 64 / V).cast("int")
-    else:  # *_pmod — the adversarial map
+    else:  # res_pmod — the adversarial map
         pid = F.pmod(F.col("src"), F.lit(64)).cast("int")
     vp = verts.select(F.col("src").alias("vertex"), pid.alias("partition_id")).cache()
     vp.count()
-    if subj.startswith("res_"):  # executor-resident block store
-        from cuttana_spark.analytics.blockstore import drop_block_store
-        store = f"/dev/shm/density_store_{{subj}}_{{d}}"
-        drop_block_store(store)
-        pagerank_csr(spark, edges, vp, max_iter=iters, tol=0.0,
-                     checkpoint_interval=1, iter_walls=walls, block_store=store)
-        drop_block_store(store)
-    else:
-        tbl = f"density_blocks_{{subj}}_{{d}}"
-        spark.sql(f"DROP TABLE IF EXISTS {{tbl}}")
-        shutil.rmtree("{repo}/spark-warehouse/" + tbl, ignore_errors=True)
-        pagerank_csr(spark, edges, vp, max_iter=iters, tol=0.0, checkpoint_interval=1,
-                     iter_walls=walls, bucketed_table=tbl)
-        spark.sql(f"DROP TABLE IF EXISTS {{tbl}}")
-        shutil.rmtree("{repo}/spark-warehouse/" + tbl, ignore_errors=True)
+    from cuttana_spark.analytics.blockstore import drop_block_store
+    store = f"/dev/shm/density_store_{{subj}}_{{d}}"
+    drop_block_store(store)
+    pagerank_csr(spark, edges, vp, max_iter=iters, tol=0.0,
+                 checkpoint_interval=1, iter_walls=walls, block_store=store)
+    drop_block_store(store)
 print("RESULT " + json.dumps({{"walls": [round(w, 3) for w in walls]}}))
 """
 
@@ -106,7 +100,7 @@ def main() -> None:
     iters = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     res = {}
     for d in (4, 32):
-        for subj in ("df", "csr_range", "csr_pmod", "res_range", "res_pmod"):
+        for subj in ("df", "res_range", "res_pmod"):
             walls = run(repo, V, d, iters, subj)
             steady = walls[4:]
             res[f"{subj}_d{d}"] = {
@@ -129,16 +123,15 @@ def main() -> None:
                 "note": "band digraph v->(v+1+j)%V; steady sec/superstep "
                 "(warmup-4 dropped, per-superstep min also reported for "
                 "one-sided co-tenant noise), AQE-off per-superstep jobs, "
-                "local[32]; csr_range = contiguous range map (near-zero "
-                "cut, per-block partials collapse to ~O(V)); csr_pmod = "
+                "local[32]; res_range = contiguous range map (near-zero "
+                "cut, per-block partials collapse to ~O(V)); res_pmod = "
                 "adversarial mod-64 map (no dst locality, partials ~O(E)); "
-                "df is insensitive to the map. res_* = same maps via the "
-                "executor-resident block store (blockstore.py): only the "
-                "O(V) frontier crosses Arrow per superstep. The "
+                "both via the executor-resident block store "
+                "(blockstore.py): only the O(V) frontier crosses Arrow per "
+                "superstep. df is insensitive to the map. The "
                 "range-vs-pmod spread is the measured value of partition "
                 "quality to the frontier-only engine - the Cuttana "
-                "stage's thesis; csr-vs-res isolates the per-superstep "
-                "O(E) Arrow transfer the store eliminates.",
+                "stage's thesis.",
             }
         )
     )

@@ -4,7 +4,7 @@ The O(V)-residency claim for the out-of-core partitioner is cheap to
 evidence off the bench graph: generate a ~10x transcripts fixture
 (N_CONV=500k -> ~10.5M vertices), run the full production pipeline ONCE —
 spill partition (bounded driver residency, multiple drain segments) ->
-vertex->partition map -> bucketed CSR PageRank — and report wall,
+vertex->partition map -> resident-store CSR PageRank — and report wall,
 vertices/sec, max_resident_edges, n_segments from the engine's own stats
 hook (partition/batched.py). One honest datapoint, not a suite.
 
@@ -32,6 +32,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from cuttana_spark.analytics.blockstore import drop_block_store
     from cuttana_spark.analytics.pagerank import pagerank_csr
     from cuttana_spark.operators import edges as E
     from cuttana_spark.partition.batched import cuttana_partition_df_spill
@@ -67,23 +68,14 @@ def main() -> None:
 
     vp = res.to_spark_df(spark).select("vertex", "partition_id")
     sym = E.symmetrize(eids)
-    spark.sql("DROP TABLE IF EXISTS spill_scale_blocks")
-    import shutil
-
-    shutil.rmtree(
-        os.path.join(repo, "spark-warehouse", "spill_scale_blocks"),
-        ignore_errors=True,
-    )
+    store = "/dev/shm/spill_scale_store"
+    drop_block_store(store)
     t0 = time.monotonic()
     pagerank_csr(
-        spark, sym, vp, max_iter=5, tol=0.0, bucketed_table="spill_scale_blocks"
+        spark, sym, vp, max_iter=5, tol=0.0, block_store=store
     ).agg(F.sum("score")).collect()
     t_pr = time.monotonic() - t0
-    spark.sql("DROP TABLE IF EXISTS spill_scale_blocks")
-    shutil.rmtree(
-        os.path.join(repo, "spark-warehouse", "spill_scale_blocks"),
-        ignore_errors=True,
-    )
+    drop_block_store(store)
 
     print(
         json.dumps(

@@ -2,11 +2,11 @@
 levels (round 5) — evidence for WHY the CSR path's one-box 2->8 proxy sits
 below the df path's despite shuffling ~7x less per superstep.
 
-Runs the exact scaling-bench CSR loop (bucketed blocks over the Cuttana
-map, AQE off, checkpoint_interval=1) with the Spark event log enabled at
---cpus, then accounts every steady superstep's wall into per-stage walls +
-executor task CPU-seconds (the cogroup stage is where the Arrow
-frontier serialization + numpy kernel live). Run it at 2 and at 8 and
+Runs the exact scaling-bench CSR loop (resident block store over the
+Cuttana map, AQE off, checkpoint_interval=1) with the Spark event log
+enabled at --cpus, then accounts every steady superstep's wall into
+per-stage walls + executor task CPU-seconds (the gather stage is where the
+Arrow frontier serialization + numpy kernel live). Run it at 2 and at 8 and
 compare: if task CPU-seconds stay ~flat while wall divides by ~cores, the
 base level was compute/overhead-bound (scales); if CPU-seconds inflate,
 it's contention.
@@ -24,10 +24,10 @@ import sys
 import tempfile
 
 WORKER = r"""
-import json, shutil, sys
+import json, sys
 sys.path.insert(0, "{repo}")
 cpus = int(sys.argv[1]); iters = int(sys.argv[2]); nconv = int(sys.argv[3]); shuf = int(sys.argv[4])
-evdir = sys.argv[5]; mode = sys.argv[6]
+evdir = sys.argv[5]
 from pyspark.sql import functions as F
 from cuttana_spark.session import get_spark
 from cuttana_spark.operators import edges as E
@@ -48,20 +48,12 @@ n_edges = sym.count()
 vp = spark.read.parquet("{repo}/fixtures/scale_partition_{{}}_k{{}}.parquet".format(nconv, shuf)).cache()
 vp.count()
 walls = []
-if mode == "res":
-    from cuttana_spark.analytics.blockstore import drop_block_store
-    store = "/dev/shm/profile_res_store"
-    drop_block_store(store)
-    pagerank_csr(spark, sym, vp, max_iter=iters, tol=0.0, checkpoint_interval=1,
-                 iter_walls=walls, block_store=store)
-    drop_block_store(store)
-else:
-    spark.sql("DROP TABLE IF EXISTS profile_csr_blocks")
-    shutil.rmtree("{repo}/spark-warehouse/profile_csr_blocks", ignore_errors=True)
-    pagerank_csr(spark, sym, vp, max_iter=iters, tol=0.0, checkpoint_interval=1,
-                 iter_walls=walls, bucketed_table="profile_csr_blocks")
-    spark.sql("DROP TABLE IF EXISTS profile_csr_blocks")
-    shutil.rmtree("{repo}/spark-warehouse/profile_csr_blocks", ignore_errors=True)
+from cuttana_spark.analytics.blockstore import drop_block_store
+store = "/dev/shm/profile_res_store"
+drop_block_store(store)
+pagerank_csr(spark, sym, vp, max_iter=iters, tol=0.0, checkpoint_interval=1,
+             iter_walls=walls, block_store=store)
+drop_block_store(store)
 spark.stop()
 print("RESULT " + json.dumps({{"cpus": cpus, "edges": n_edges,
                               "walls": [round(w, 3) for w in walls]}}))
@@ -71,10 +63,7 @@ print("RESULT " + json.dumps({{"cpus": cpus, "edges": n_edges,
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     cpus, iters, nconv, shuf = 2, 10, 200_000, 64
-    mode = "bucketed"
     argv = sys.argv
-    if "--mode" in argv:
-        mode = argv[argv.index("--mode") + 1]
     if "--cpus" in argv:
         cpus = int(argv[argv.index("--cpus") + 1])
     if "--iters" in argv:
@@ -92,7 +81,7 @@ def main() -> None:
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="48g")
     out = subprocess.run(
         [sys.executable, "-c", WORKER.format(repo=repo),
-         str(cpus), str(iters), str(nconv), str(shuf), evdir, mode],
+         str(cpus), str(iters), str(nconv), str(shuf), evdir],
         capture_output=True, text=True, timeout=2400, cwd=repo, env=env,
     )
     res = None
@@ -181,7 +170,6 @@ def main() -> None:
                 "metric": "csr_superstep_profile",
                 "value": med_wall,
                 "unit": "sec",
-                "mode": mode,
                 "cpus": cpus,
                 "edges": res["edges"],
                 "iter_walls": res["walls"],

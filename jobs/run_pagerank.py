@@ -78,14 +78,22 @@ def main() -> None:
         adj = E.adjacency(eids)
         res = cuttana_partition_df_batched(adj, args.k)
         vp = res.to_spark_df(spark).select("vertex", "partition_id")
+        # every executor reads the block store through the filesystem, so
+        # for the csr engine --output must be a path all nodes mount; a
+        # killed job that resumes reuses the store, fingerprint-checked
+        block_store = args.output.rstrip("/") + "_blocks"
         pr = pagerank_csr(
             spark, sym, vp, max_iter=args.iters, tol=args.tol, runner=runner,
-            bucketed_table=f"{args.job}_blocks",
+            block_store=block_store,
         )
     else:
         pr = pagerank(spark, sym, max_iter=args.iters, tol=args.tol, runner=runner)
 
     pr.write.mode("overwrite").parquet(args.output)
+    if args.engine == "csr":
+        from cuttana_spark.analytics.blockstore import drop_block_store
+
+        drop_block_store(block_store)
     dt = time.monotonic() - t0
     print(
         json.dumps(

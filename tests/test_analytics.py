@@ -154,9 +154,8 @@ def test_connected_components_accel_matches_star(spark):
 
 
 def test_connected_components_accel_block_store(spark, tmp_path, monkeypatch):
-    """block_store mode: the contraction gathers run against the resident
-    mmap arena (gather_min_resident) instead of the cogroup — identical
-    labelling."""
+    """block_store mode: the contraction gathers run against a caller-owned
+    store instead of a call-scoped one — identical labelling."""
     import networkx as nx
 
     monkeypatch.setenv("CUTTANA_BLOCK_ARENA", str(tmp_path / "arena"))
@@ -352,8 +351,8 @@ def test_personalized_pagerank_matches_numpy(spark):
 def test_pagerank_csr_multichunk_blocks(spark, G, edges_df, monkeypatch):
     """Force CHUNK_EDGES small so every partition block splits into many
     CSR chunk rows — exercises the per-block chunk-merge path in
-    scatter_gather (untested at default 2M chunk size) and must still equal
-    the DataFrame engine exactly."""
+    csr.pr_partials (untested at default 2M chunk size) and must still equal
+    the DataFrame engine to 1e-12."""
     from cuttana_spark.analytics import csr
     from cuttana_spark.analytics.pagerank import pagerank, pagerank_csr
     from cuttana_spark.partition import cuttana_partition
@@ -373,13 +372,18 @@ def test_pagerank_csr_multichunk_blocks(spark, G, edges_df, monkeypatch):
         assert b[v] == pytest.approx(a[v], abs=1e-12)
 
 
-def test_csr_frontier_mismatch_guard(spark):
+def test_csr_frontier_mismatch_guard(spark, tmp_path):
     """The sort-free CSR kernel resolves scores positionally, so a frontier
     that is not exactly the packed partition's vertex set must raise, never
     return silently wrong sums."""
     import pytest as _pytest
 
-    from cuttana_spark.analytics.csr import pack_blocks, scatter_gather
+    from cuttana_spark.analytics.blockstore import (
+        drop_block_store,
+        gather,
+        write_block_store,
+    )
+    from cuttana_spark.analytics.csr import PR
 
     edges = spark.createDataFrame(
         [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0)], "src long, dst long, p double"
@@ -387,12 +391,14 @@ def test_csr_frontier_mismatch_guard(spark):
     vp = spark.createDataFrame(
         [(0, 0), (1, 0), (2, 0)], "vertex long, partition_id int"
     )
-    blocks = pack_blocks(edges, vp).cache()
+    path = str(tmp_path / "store")
+    write_block_store(edges, vp, path)
     ok = vp.withColumn("score", F.lit(1.0))
-    assert scatter_gather(spark, blocks, ok).count() == 3
+    assert gather(path, ok, PR).count() == 3
     missing = ok.filter(F.col("vertex") != 1)  # drop one partition vertex
     with _pytest.raises(Exception, match="frontier vertex set"):
-        scatter_gather(spark, blocks, missing).collect()
+        gather(path, missing, PR).collect()
+    drop_block_store(path)
 
 
 def test_random_walks_deterministic_replay(spark, G, edges_df):
@@ -507,67 +513,6 @@ def test_cycler_close_releases_every_generation(spark):
     assert not (tracked & pinned()), "close() left checkpoint blocks pinned"
 
 
-def test_pagerank_csr_resident_bit_identical(spark, G, edges_df, tmp_path):
-    """The executor-resident block store (blockstore.py) must produce
-    BIT-identical scores to the cogroup CSR path — both run the shared
-    csr.pr_partials kernel; only the block transport differs."""
-    from cuttana_spark.partition import cuttana_partition
-
-    adj = [(v, sorted(G.neighbors(v))) for v in sorted(G.nodes())]
-    vp = cuttana_partition(adj, 4).to_spark_df(spark).select("vertex", "partition_id")
-    a = {
-        r.vertex: r.score
-        for r in pagerank_csr(spark, _sym(edges_df), vp, max_iter=6, tol=0.0).collect()
-    }
-    b = {
-        r.vertex: r.score
-        for r in pagerank_csr(
-            spark,
-            _sym(edges_df),
-            vp,
-            max_iter=6,
-            tol=0.0,
-            block_store=str(tmp_path / "store"),
-        ).collect()
-    }
-    assert a == b  # exact float equality, not approx
-
-
-def test_lpa_and_kcore_resident_match_cogroup(spark, tmp_path):
-    from cuttana_spark.analytics.kcore import k_core_csr
-    from cuttana_spark.analytics.labelprop import label_propagation_csr
-    from cuttana_spark.partition import cuttana_partition
-    import networkx as nx
-
-    Gm = _ba_graph(n=120, m=2, seed=11)
-    rows = [(int(u), int(v)) for u, v in Gm.edges()]
-    df = spark.createDataFrame(rows, "src long, dst long")
-    adj = [(v, sorted(Gm.neighbors(v))) for v in sorted(Gm.nodes())]
-    vp = cuttana_partition(adj, 4).to_spark_df(spark).select("vertex", "partition_id")
-
-    lpa_a = {
-        r.vertex: r.label
-        for r in label_propagation_csr(spark, df, vp, max_iter=4).collect()
-    }
-    lpa_b = {
-        r.vertex: r.label
-        for r in label_propagation_csr(
-            spark, df, vp, max_iter=4, block_store=str(tmp_path / "lpa")
-        ).collect()
-    }
-    assert lpa_a == lpa_b
-
-    kc_a = {r.vertex for r in k_core_csr(spark, df, vp, k=3).collect()}
-    kc_b = {
-        r.vertex
-        for r in k_core_csr(
-            spark, df, vp, k=3, block_store=str(tmp_path / "kc")
-        ).collect()
-    }
-    assert kc_a == kc_b
-    assert kc_a == {v for v, c in nx.core_number(Gm).items() if c >= 3}
-
-
 def test_block_store_arena_sharing_and_invalidation(spark, tmp_path, monkeypatch):
     """Driver-side unit test of the node-shared arena: the first touch of a
     partition decodes parquet once into the arena; later touches — including
@@ -635,10 +580,8 @@ def test_resident_superstep_plan_has_no_block_scan(spark, tmp_path):
     """The resident superstep's physical plan must contain only the O(V)
     frontier — no parquet scan of block binaries, and exactly the two hash
     exchanges (frontier routing + partial-sum agg)."""
-    from cuttana_spark.analytics.blockstore import (
-        scatter_gather_resident,
-        write_block_store,
-    )
+    from cuttana_spark.analytics.blockstore import gather, write_block_store
+    from cuttana_spark.analytics.csr import PR
 
     edges = spark.createDataFrame(
         [(0, 1, 0.5), (1, 2, 1.0), (2, 0, 1.0)], "src long, dst long, p double"
@@ -652,7 +595,7 @@ def test_resident_superstep_plan_has_no_block_scan(spark, tmp_path):
         [(0, 0.3, 0), (1, 0.3, 0), (2, 0.4, 1)],
         "vertex long, score double, partition_id int",
     )
-    out = scatter_gather_resident(spark, path, scores)
+    out = gather(path, scores, PR).groupBy("dst").agg(F.sum("contrib").alias("contrib"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Scan parquet" not in plan
     assert plan.count("Exchange") <= 2
@@ -660,14 +603,19 @@ def test_resident_superstep_plan_has_no_block_scan(spark, tmp_path):
     assert got == {1: pytest.approx(0.3 * 0.5), 2: pytest.approx(0.3), 0: pytest.approx(0.4)}
 
 
-def test_csr_frontier_interior_mismatch_guard(spark):
+def test_csr_frontier_interior_mismatch_guard(spark, tmp_path):
     """Round-6 ADVICE: a frontier with the same count/min/max as the packed
     partition but a DIFFERENT interior vertex set (packed {0,1,3} vs
     frontier {0,2,3}) must be caught by the v_digest check, never silently
-    misattribute scores through the positional gather."""
+    misattribute labels through the positional gather."""
     import pytest as _pytest
 
-    from cuttana_spark.analytics.csr import pack_blocks, scatter_gather
+    from cuttana_spark.analytics.blockstore import (
+        drop_block_store,
+        gather,
+        write_block_store,
+    )
+    from cuttana_spark.analytics.csr import LPA
 
     edges = spark.createDataFrame(
         [(0, 1, 1.0), (1, 3, 1.0), (3, 0, 1.0)], "src long, dst long, p double"
@@ -675,14 +623,15 @@ def test_csr_frontier_interior_mismatch_guard(spark):
     vp = spark.createDataFrame(
         [(0, 0), (1, 0), (3, 0)], "vertex long, partition_id int"
     )
-    blocks = pack_blocks(edges, vp).cache()
+    path = str(tmp_path / "store")
+    write_block_store(edges, vp, path)
     bad = spark.createDataFrame(  # same n/min/max envelope, wrong interior
-        [(0, 1.0, 0), (2, 1.0, 0), (3, 1.0, 0)],
-        "vertex long, score double, partition_id int",
+        [(0, 0, 0), (2, 2, 0), (3, 3, 0)],
+        "vertex long, label long, partition_id int",
     )
     with _pytest.raises(Exception, match="frontier vertex set"):
-        scatter_gather(spark, blocks, bad).collect()
-    blocks.unpersist(False)
+        gather(path, bad, LPA).collect()
+    drop_block_store(path)
 
 
 def test_block_store_fingerprint_repack(spark, tmp_path, monkeypatch):
@@ -712,11 +661,10 @@ def test_block_store_fingerprint_repack(spark, tmp_path, monkeypatch):
     k2 = B._store_key(path)
     assert k2 != k1
     B._CACHE.clear()
+    from cuttana_spark.analytics.csr import PR
+
     scores = vp.withColumn("score", F.lit(1.0))
-    got = {
-        r.dst: r.contrib
-        for r in B.scatter_gather_resident(spark, path, scores).collect()
-    }
+    got = {r.dst: r.contrib for r in B.gather(path, scores, PR).collect()}
     assert got == {2: pytest.approx(1.0)}  # e2's graph, not e1's
     B.drop_block_store(path)
 
@@ -949,3 +897,88 @@ def test_pagerank_trans_store_shared_across_runs(spark, tmp_path, monkeypatch):
         assert abs(s - rdf[v]) < 1e-12
     B.drop_block_store(store)
     sym.unpersist(False)
+
+
+@pytest.mark.parametrize(
+    "algo", ["pagerank_csr", "label_propagation_csr", "k_core_csr"]
+)
+def test_call_scoped_store_leaves_nothing_behind(spark, tmp_path, monkeypatch, algo):
+    """block_store=None packs a call-scoped store. The call must leave no
+    store directory, no arena generation and no persistent RDD beyond its
+    result's checkpoint — and the result must stay readable without them."""
+    import os
+    import tempfile
+
+    import cuttana_spark.analytics.blockstore as B
+    from cuttana_spark.analytics.kcore import k_core_csr
+    from cuttana_spark.analytics.labelprop import label_propagation_csr
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    arena = os.environ["CUTTANA_BLOCK_ARENA"]
+    arenas = lambda: set(os.listdir(arena)) if os.path.isdir(arena) else set()
+    stores = lambda: [d for d in os.listdir(tmp_path) if d.startswith("cuttana-")]
+    pinned = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    # a 30-cycle with one chord: every vertex is in the 2-core
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 30, 1.0) for i in range(30)] + [(0, 15, 1.0)],
+        "src long, dst long, weight double",
+    )
+    vp = spark.createDataFrame(
+        [(v, v % 3) for v in range(30)], "vertex long, partition_id int"
+    )
+    calls = {
+        "pagerank_csr": lambda: pagerank_csr(spark, _sym(edges), vp, max_iter=3, tol=0.0),
+        "label_propagation_csr": lambda: label_propagation_csr(spark, edges, vp, max_iter=3),
+        "k_core_csr": lambda: k_core_csr(spark, edges, vp, k=2),
+    }
+    seen = {}
+    real_drop = B.drop_block_store
+
+    def spy(path):  # what existed just before the store was dropped
+        seen["stores"], seen["arenas"] = stores(), arenas()
+        real_drop(path)
+
+    monkeypatch.setattr(B, "drop_block_store", spy)
+    arenas0, pinned0 = arenas(), pinned()
+    out = calls[algo]()
+    assert len(seen["stores"]) == 1 and seen["arenas"] - arenas0  # store was used
+    assert stores() == []
+    assert arenas() == arenas0
+    assert len(pinned() - pinned0) <= 1
+    assert out.count() == 30
+
+
+def test_call_scoped_store_needs_local_master():
+    """Executors of a non-local master cannot read the driver's temp dir and
+    would gather from an empty store — block_store=None must refuse."""
+    from types import SimpleNamespace
+
+    from cuttana_spark.analytics.blockstore import resident_store
+
+    cluster = SimpleNamespace(sparkContext=SimpleNamespace(master="yarn"))
+    with pytest.raises(ValueError, match="pass a block_store path"):
+        with resident_store(cluster, None, None, None):
+            pass
+
+
+def test_load_blocks_forgets_dropped_stores(spark, tmp_path):
+    """A worker's handle cache must not keep mmap views of a dropped store
+    alive (they pin the unlinked arena files' pages): the next cache miss
+    sweeps handles whose store is gone."""
+    import os
+
+    import cuttana_spark.analytics.blockstore as B
+
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 0, 1.0)], "src long, dst long, p double"
+    )
+    vp = spark.createDataFrame([(0, 0), (1, 0)], "vertex long, partition_id int")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    B.write_block_store(edges, vp, a)
+    B.write_block_store(edges, vp, b)
+    B._CACHE.clear()
+    assert len(B.load_blocks(a, 0)) == 1
+    B.drop_block_store(a)
+    assert len(B.load_blocks(b, 0)) == 1
+    assert [key[0][0] for key in B._CACHE] == [os.path.abspath(b)]
+    B.drop_block_store(b)

@@ -58,6 +58,20 @@ def test_windowed_counts_stream_equals_batch(spark, sf_dir, tmp_path):
     assert len(got) >= len(want) - 5
 
 
+def test_ivf_probe_empty_query_set(spark, sf_dir):
+    """An empty query set yields an empty (query_id, match_id, cosine, rank)
+    frame with the non-empty result's schema, instead of a numpy error from
+    normalizing a zero-row query matrix."""
+    from cuttana_spark.operators.ivf import ivf_index_gemm, ivf_probe_gemm
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cells, C = ivf_index_gemm(emb, n_cells=4)
+    empty = ivf_probe_gemm(cells, C, emb.filter("vec_id < 0"), nprobe=2, k=3)
+    some = ivf_probe_gemm(cells, C, emb.filter("vec_id % 50 = 0"), nprobe=2, k=3)
+    assert empty.collect() == []
+    assert empty.dtypes == some.dtypes
+
+
 def test_ivf_index_probe_split_equals_monolithic(spark, sf_dir):
     """Round 6: the index/probe split (build once, search many) must return
     exactly the monolithic ivf_topk_gemm result, and a probe against a
