@@ -78,70 +78,50 @@ from cuttana_spark.analytics.csr import (
 _FP_MARKER = "_CUTTANA_STORE_FP"
 
 
-def store_fingerprint(
-    trans: DataFrame, vertex_partitions: DataFrame, src_pid=None, kind: str = ""
-) -> str:
-    """Identity of a packed store: the analyzed input plans' semanticHash
-    (edges + partition map), the routing expression, and the pack layout
-    version. Same convention as the partitioner's _CUTTANA_SPOOL_FP
-    (partition/batched.py): "na" (internal API unavailable) never matches,
-    degrading to always-re-pack — safe. This is also the cross-algorithm
-    reuse descriptor: two callers that build the SAME logical (src, dst, p)
-    payload over the same map (e.g. k-core, LPA and CC all packing the
-    symmetric unit-weight graph via analytics.sym_unit_trans) produce equal
-    fingerprints and share one pack; PageRank's transition-weighted payload
-    hashes differently and gets its own store (graphstore.trans_graph is its
-    canonical descriptor). ``kind`` (round 7): an explicit payload-kind tag
-    ("sym-unit" / "trans") carried in the fingerprint alongside the plan
-    hashes — the hashes already distinguish the payloads, the tag makes the
-    marker file self-describing and guards the (astronomically unlikely but
-    silent) cross-payload hash collision."""
+def store_fingerprint(g) -> str:
+    """Identity of a packed store of graphstore.Graph ``g``: its payload
+    kind, the analyzed plans' semanticHash (payload + partition map), the
+    routing expression, and the pack layout version. Same convention as the
+    partitioner's _CUTTANA_SPOOL_FP (partition/batched.py): "na" (internal
+    API unavailable) never matches, degrading to always-re-pack — safe.
+    This is also the cross-algorithm reuse descriptor: two callers that
+    open the SAME edges DataFrame with the same kind and map (e.g. k-core,
+    LPA and CC all opening "sym-unit") produce equal fingerprints and share
+    one pack. The hashes already tell the payloads apart; the kind tag
+    makes the marker file self-describing and guards the (astronomically
+    unlikely but silent) cross-payload hash collision."""
     try:
-        h1 = str(trans._jdf.queryExecution().analyzed().semanticHash())
-        h2 = str(
-            vertex_partitions._jdf.queryExecution().analyzed().semanticHash()
-        )
+        h1 = str(g.trans._jdf.queryExecution().analyzed().semanticHash())
+        h2 = str(g.vp._jdf.queryExecution().analyzed().semanticHash())
     except Exception:
         return "na"
-    sp = "none" if src_pid is None else str(src_pid._jc)
-    return f"pack{PACK_VERSION}|{kind}|{h1}|{h2}|{sp}"
+    sp = "none" if g.src_pid is None else str(g.src_pid._jc)
+    return f"pack{PACK_VERSION}|{g.kind}|{h1}|{h2}|{sp}"
 
 
-def write_block_store(
-    trans: DataFrame, vertex_partitions: DataFrame, path: str, src_pid=None,
-    kind: str = "",
-) -> None:
-    """Pack CSR blocks (one edge shuffle, csr.pack_blocks) and write them as
-    a parquet dataset partitioned by partition_id. ``trans``: (src, dst, p).
-    Overwrites ``path``; the _SUCCESS marker's mtime_ns versions the store
-    for every worker-side cache, and a _CUTTANA_STORE_FP marker records the
-    input fingerprint for ensure_block_store's reuse check. ``src_pid``:
-    optional routing expression (csr.pack_blocks) — skips the O(E)⋈O(V)
-    routing join when the partition map is itself an expression of the
-    vertex id."""
-    pack_blocks(trans, vertex_partitions, src_pid=src_pid).write.partitionBy(
-        "partition_id"
-    ).mode("overwrite").parquet(path)
-    fp = store_fingerprint(trans, vertex_partitions, src_pid=src_pid, kind=kind)
+def write_block_store(g, path: str) -> None:
+    """Pack graphstore.Graph ``g`` into CSR blocks (one edge shuffle,
+    csr.pack_blocks) and write them as a parquet dataset partitioned by
+    partition_id. Overwrites ``path``; the _SUCCESS marker's mtime_ns
+    versions the store for every worker-side cache, and a _CUTTANA_STORE_FP
+    marker records the input fingerprint for ensure_block_store's reuse
+    check."""
+    pack_blocks(g).write.partitionBy("partition_id").mode("overwrite").parquet(path)
     with open(os.path.join(path, _FP_MARKER), "w") as fh:
-        fh.write(fp)
+        fh.write(store_fingerprint(g))
 
 
-def ensure_block_store(
-    trans: DataFrame, vertex_partitions: DataFrame, path: str, src_pid=None,
-    kind: str = "",
-) -> None:
+def ensure_block_store(g, path: str) -> None:
     """write_block_store unless ``path`` already holds a completed store
-    packed from THESE inputs: reuse requires both the _SUCCESS marker and a
-    _CUTTANA_STORE_FP that matches the current inputs' fingerprint (plan
-    semanticHash + pack version). A store written by a different plan, an
-    older pack layout, or an unfingerprinted writer is re-packed, never
-    silently served — the kernel's frontier guard alone cannot distinguish
-    different edge sets over the same vertex set. Limitation (same as the
-    spool guard): the hash is plan-level, so the same plan re-read over
-    files mutated in place is not detected."""
+    packed from THIS graph: reuse requires both the _SUCCESS marker and a
+    _CUTTANA_STORE_FP that matches ``g``'s fingerprint. A store written by
+    a different plan, an older pack layout, or an unfingerprinted writer is
+    re-packed, never silently served — the kernel's frontier guard alone
+    cannot distinguish different edge sets over the same vertex set.
+    Limitation (same as the spool guard): the hash is plan-level, so the
+    same plan re-read over files mutated in place is not detected."""
     if os.path.exists(os.path.join(path, "_SUCCESS")):
-        fp = store_fingerprint(trans, vertex_partitions, src_pid=src_pid, kind=kind)
+        fp = store_fingerprint(g)
         try:
             with open(os.path.join(path, _FP_MARKER)) as fh:
                 on_disk = fh.read()
@@ -149,7 +129,7 @@ def ensure_block_store(
             on_disk = ""
         if fp != "na" and fp == on_disk:
             return
-    write_block_store(trans, vertex_partitions, path, src_pid=src_pid, kind=kind)
+    write_block_store(g, path)
 
 
 # ---------------------------------------------------------------------------
@@ -481,15 +461,8 @@ def load_blocks(path: str, pid: int) -> list:
 
 
 @contextmanager
-def resident_store(
-    spark: SparkSession,
-    trans: DataFrame,
-    vertex_partitions: DataFrame,
-    block_store: str | None,
-    src_pid=None,
-    kind: str = "",
-):
-    """Yield the path of a block store packed from (trans, vertex_partitions).
+def resident_store(spark: SparkSession, g, block_store: str | None):
+    """Yield the path of a block store packed from graphstore.Graph ``g``.
 
     ``block_store`` set: ensure_block_store at that path (reused when its
     fingerprint matches) — the caller owns its lifetime. ``block_store``
@@ -500,9 +473,7 @@ def resident_store(
     read: load_blocks treats a missing partition directory as a partition
     with no edges, so executors elsewhere would silently gather nothing."""
     if block_store is not None:
-        ensure_block_store(
-            trans, vertex_partitions, block_store, src_pid=src_pid, kind=kind
-        )
+        ensure_block_store(g, block_store)
         yield block_store
         return
     master = spark.sparkContext.master
@@ -514,7 +485,7 @@ def resident_store(
         )
     path = tempfile.mkdtemp(prefix="cuttana-blockstore-")
     try:
-        write_block_store(trans, vertex_partitions, path, src_pid=src_pid, kind=kind)
+        write_block_store(g, path)
         yield path
     finally:
         drop_block_store(path)

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cuttana_spark.analytics.graphstore import open_graph, vertices
+
 MAX_ROUNDS = 50
 
 
@@ -137,12 +139,7 @@ def _connected_components_impl(
     accel_partitions: int,
     block_store: str | None,
 ) -> DataFrame:
-    nodes = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionAll(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .cache()
-    )
+    nodes = vertices(edges).cache()
     from cuttana_spark.plans.checkpoints import CheckpointCycler
 
     ck = CheckpointCycler(spark)
@@ -163,34 +160,29 @@ def _connected_components_impl(
 
         from cuttana_spark.analytics.blockstore import gather, resident_store
         from cuttana_spark.analytics.csr import MIN
-        from cuttana_spark.analytics.graphstore import sym_unit_graph
 
-        # Canonical shared payload + synthetic hash map (graphstore.py) —
+        # Shared sym-unit payload over a synthetic hash map (graphstore.py) —
         # CC needs no Cuttana map, only a consistent routing of edges to
-        # their source's partition. Because the map is an EXPRESSION
-        # (pmod(xxhash64(v), k)), routing the edges needs no O(E)⋈O(V) join
-        # (pack_blocks src_pid=) and the per-round label update needs no
-        # re-attach join: partition_id is recomputed from the vertex id for
-        # free inside codegen. The payload is built from the ORIGINAL
-        # `edges` plan (not the localCheckpointed `e`, whose plan hash is
-        # run-specific), so with block_store set the store fingerprint
-        # equals k_core_csr's / label_propagation_csr's over the same edges
+        # their source's partition. Because the map is an EXPRESSION, the
+        # pack needs no routing join and the per-round label update needs
+        # no re-attach join: partition_id is recomputed from the vertex id
+        # in codegen. The graph is opened over the ORIGINAL `edges` plan
+        # (not the localCheckpointed `e`, whose plan hash is run-specific),
+        # so with block_store set the store fingerprint equals
+        # k_core_csr's / label_propagation_csr's over the same edges
         # DataFrame and partition count — one pack serves all three.
-        sym, vp, _pid_of = sym_unit_graph(edges, accel_partitions)
+        g = open_graph(edges, "sym-unit", hash_partitions=accel_partitions)
         # One shuffle per round: the vertex's own label rides in the same
         # union as the gathered neighbor partials, so min-combining them IS
         # the new label relation — no join. Each round's labels are
         # checkpointed, so nothing after the loop reads the store.
         lck = CheckpointCycler(spark, keep_generations=1)
-        labels = lck.checkpoint(vp.withColumn("label", F.col("vertex")))
-        with resident_store(
-            spark, sym, vp, block_store, src_pid=_pid_of(F.col("src")),
-            kind="sym-unit",
-        ) as store:
+        labels = lck.checkpoint(g.vp.withColumn("label", F.col("vertex")))
+        with resident_store(spark, g, block_store) as store:
             for r in range(accel_rounds):
                 t0 = _time.monotonic()
                 partials = gather(store, labels, MIN).select("dst", "mlab")
-                labels = lck.checkpoint(
+                mins = (
                     partials.unionAll(
                         labels.select(
                             F.col("vertex").alias("dst"), F.col("label").alias("mlab")
@@ -198,11 +190,9 @@ def _connected_components_impl(
                     )
                     .groupBy("dst")
                     .agg(F.min("mlab").alias("label"))
-                    .select(
-                        F.col("dst").alias("vertex"),
-                        _pid_of(F.col("dst")).alias("partition_id"),
-                        "label",
-                    )
+                )
+                labels = lck.checkpoint(
+                    g.with_pid(mins.select(F.col("dst").alias("vertex"), "label"))
                 )
                 if round_walls is not None:
                     round_walls.append(

@@ -68,22 +68,16 @@ def empty_frame(schema: str) -> pd.DataFrame:
     return pd.DataFrame({name: pd.Series(dtype=_PD_DTYPES[t]) for name, t in cols})
 
 
-def pack_blocks(
-    trans: DataFrame, vertex_partitions: DataFrame, src_pid=None
-) -> DataFrame:
-    """trans: (src, dst, p). Returns chunked CSR blocks per partition_id.
+def pack_blocks(g) -> DataFrame:
+    """CSR blocks per partition_id of a graphstore.Graph: ``g.trans``
+    (src, dst, p) routed by the source's partition.
 
-    vertex_partitions must map EXACTLY the graph's vertex set (the Cuttana
-    partitioner over the same graph's adjacency does): edges whose source
-    has no mapping are dropped by the routing join, and a partition map
-    with extra vertices would later fail the kernel's frontier guard.
-
-    src_pid: optional Column computing the source's partition id directly
-    from the ``src`` column (e.g. ``pmod(xxhash64(src), k)`` for a synthetic
-    hash map). When given, the O(E)⋈O(V) routing join is skipped entirely —
-    the caller GUARANTEES the expression equals vertex_partitions' mapping
-    (connected_components' contraction pre-pass does: both sides derive
-    from the same expression)."""
+    ``g.vp`` must map EXACTLY the graph's vertex set (the Cuttana
+    partitioner over the same graph's adjacency does). Edges are routed by
+    a left join (or by ``g.src_pid`` under an expression map, no join): an
+    edge whose source the map lacks lands in partition -1 and the pack
+    raises, and a partition map with extra vertices later fails the
+    kernel's frontier guard."""
 
     def pack(key, edge_pdf: pd.DataFrame, vp_pdf: pd.DataFrame):
         if edge_pdf.empty:
@@ -126,17 +120,19 @@ def pack_blocks(
         return pd.DataFrame(rows)
 
     # alias the routing key so the cogroup's two sides don't share the same
-    # partition_id attribute (vertex_partitions feeds both — Spark rejects
-    # the ambiguous self-reference otherwise)
-    if src_pid is not None:
-        routed = trans.select(src_pid.alias("pid"), "src", "dst", "p")
+    # partition_id attribute (the map feeds both — Spark rejects the
+    # ambiguous self-reference otherwise)
+    if g.src_pid is not None:
+        routed = g.trans.select(g.src_pid.alias("pid"), "src", "dst", "p")
     else:
-        routed = trans.join(
-            vertex_partitions.withColumnRenamed("vertex", "src"), "src"
-        ).select(F.col("partition_id").alias("pid"), "src", "dst", "p")
+        routed = g.trans.join(
+            g.vp.withColumnRenamed("vertex", "src"), "src", "left"
+        ).select(
+            F.coalesce("partition_id", F.lit(-1)).alias("pid"), "src", "dst", "p"
+        )
     return (
         routed.groupby("pid")
-        .cogroup(vertex_partitions.groupby("partition_id"))
+        .cogroup(g.vp.groupby("partition_id"))
         .applyInPandas(pack, BLOCK_SCHEMA)
     )
 

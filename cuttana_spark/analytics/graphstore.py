@@ -1,34 +1,38 @@
-"""Canonical shared pack payload for the CSR block store.
+"""One graph descriptor for the CSR analytics: payload + routing.
 
-k-core, label propagation and connected components all gather over the SAME
-logical graph — the symmetric, self-loop-free, unit-weight view of the edge
-table — yet through round 5 each entry point built its own (trans, vp) with
-slightly different plans, so `blockstore.store_fingerprint` could never
-match across algorithms and every caller re-packed its own store. This
-module is the descriptor that makes one pack serve all three: callers that
-build their payload through `sym_unit_graph` over the SAME edges DataFrame
-and the same partition count produce semantically identical plans, so
-`ensure_block_store` reuses the existing pack (fingerprint equality) and a
-pipeline like pagerank → k-core → CC pays the O(E) routing shuffle once.
+`open_graph(edges, kind, vertex_partitions=, hash_partitions=)` is the only
+code that builds a pack payload or a routing, and every CSR caller opens its
+graph through it:
 
-The partition map is an EXPRESSION (pmod(xxhash64(v), k)) rather than a
-joined table: routing the edges needs no O(E)⋈O(V) join (csr.pack_blocks
-src_pid=), per-round frontier updates recompute partition_id in codegen for
-free (components.py's joinless update), and two algorithms agree on the map
-by construction. Partition quality (Cuttana map) only affects locality,
-never results — callers that want Cuttana locality pass vertex_partitions
-explicitly and forgo cross-algorithm sharing.
+* ``kind="trans"`` — PageRank's column-stochastic payload p = w / Σ_src w
+  over the DIRECTED edge table (window over src: bit-identical p on
+  count-weighted graphs);
+* ``kind="sym-unit"`` — both directions of every edge, self-loops dropped,
+  p = 1.0: the simple graph that k-core, LPA and CC's contraction pre-pass
+  all gather over.
 
-PageRank packs transition WEIGHTS (p = w/deg), a different payload that
-correctly hashes to its own store — `trans_graph` (round 7) is its
-canonical descriptor over the SAME hash routing family, so a
-pagerank → k-core → LPA → CC pipeline pays exactly TWO packs (sym-unit +
-trans), each reused fingerprint-checked by every consumer.
+Routing is exactly one of two maps — the partitioned-vs-unpartitioned choice:
+
+* ``vertex_partitions`` — a caller's (vertex, partition_id) table, e.g. the
+  Cuttana map. It must map every edge source: the pack routes edges with a
+  left join and raises on an unmapped source instead of dropping its edges.
+* ``hash_partitions=k`` — the EXPRESSION map pmod(xxhash64(v), k). Routing
+  the edges needs no O(E)⋈O(V) join, frontier updates recompute
+  partition_id in codegen, and two callers agree on the map by
+  construction. Partition quality only affects locality, never results.
+
+The returned `Graph` is what the store layer (blockstore.py) packs and
+fingerprints. Callers that open the SAME edges DataFrame with the same kind
+and k produce semantically identical plans, so `ensure_block_store` reuses
+one pack across algorithms: a pagerank → k-core → LPA → CC pipeline pays
+exactly two packs (trans + sym-unit). The fingerprint carries the kind tag.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable, NamedTuple
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -41,59 +45,68 @@ def hash_partition_expr(n_partitions: int):
     return pid_of
 
 
-def sym_unit_graph(edges: DataFrame, n_partitions: int):
-    """Canonical (trans, vp, pid_of) for the shared sym-unit store.
-
-    trans: both directions of every edge, self-loops dropped (the simple-
-    graph convention all three consumers share), p = 1.0.
-    vp: EVERY endpoint of `edges` (including vertices whose only edges were
-    self-loops — they must stay in the frontier: the packed blocks carry the
-    vp vertex set and the kernel's digest guard demands frontier ≡ packed
-    set). Their gathered count/partials are simply empty.
-    """
-    pid_of = hash_partition_expr(n_partitions)
-    sym = (
-        edges.select("src", "dst")
-        .unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-    )
-    trans = sym.withColumn("p", F.lit(1.0))
-    nodes = (
+def vertices(edges: DataFrame) -> DataFrame:
+    """DataFrame[vertex]: the distinct union of ``src`` and ``dst``."""
+    return (
         edges.select(F.col("src").alias("vertex"))
         .unionAll(edges.select(F.col("dst").alias("vertex")))
         .distinct()
     )
-    vp = nodes.select("vertex", pid_of(F.col("vertex")).alias("partition_id"))
-    return trans, vp, pid_of
 
 
-def trans_graph(edges: DataFrame, n_partitions: int):
-    """Canonical (trans, vp, pid_of) for the transition-weighted store —
-    PageRank's payload — over the SAME hash routing family as
-    sym_unit_graph (round 7, VERDICT r6 item 6).
+class Graph(NamedTuple):
+    """A pack payload ``trans`` (src, dst, p) routed by ``vp`` (vertex,
+    partition_id). ``pid_of`` is the expression map when ``vp`` was built
+    from it (hash routing) and None when ``vp`` is a caller's table."""
 
-    trans: column-stochastic p = w / Σ_src w over the DIRECTED edge table
-    exactly as pagerank_csr builds it (window over src — bit-identical p on
-    count-weighted graphs); vp: every endpoint, expression-mapped. Two
-    callers passing the SAME edges DataFrame and k produce semantically
-    identical plans, so `ensure_block_store` reuses one pack across repeated
-    PageRank runs, and a pagerank → k-core → LPA → CC pipeline pays exactly
-    two packs total (this one + sym_unit_graph's)."""
-    from pyspark.sql import Window
+    trans: DataFrame
+    vp: DataFrame
+    kind: str
+    pid_of: Callable | None
 
-    pid_of = hash_partition_expr(n_partitions)
-    e = edges.select("src", "dst", F.col("weight").cast("double"))
-    trans = e.select(
-        "src",
-        "dst",
-        (F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))).alias("p"),
-    )
-    nodes = (
-        e.select(F.col("src").alias("vertex"))
-        .unionAll(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
-    vp = nodes.select("vertex", pid_of(F.col("vertex")).alias("partition_id"))
-    return trans, vp, pid_of
+    @property
+    def src_pid(self):
+        """The routing column over ``src``; None for a table map."""
+        return None if self.pid_of is None else self.pid_of(F.col("src"))
+
+    def with_pid(self, df: DataFrame) -> DataFrame:
+        """``df`` (keyed by ``vertex``) plus its ``partition_id``: a codegen
+        column under an expression map, a left join under a table map that
+        gives -1 to a vertex the map lacks."""
+        if self.pid_of is not None:
+            return df.withColumn("partition_id", self.pid_of(F.col("vertex")))
+        return df.join(self.vp, "vertex", "left").withColumn(
+            "partition_id", F.coalesce("partition_id", F.lit(-1))
+        )
+
+
+def open_graph(
+    edges: DataFrame,
+    kind: str,
+    vertex_partitions: DataFrame | None = None,
+    hash_partitions: int | None = None,
+) -> Graph:
+    """The `Graph` of ``edges`` with payload ``kind`` ("trans" or
+    "sym-unit"), routed by exactly one of ``vertex_partitions`` (a table
+    map) or ``hash_partitions`` (an expression map over that many
+    partitions)."""
+    if (vertex_partitions is None) == (hash_partitions is None):
+        raise ValueError("pass exactly one of vertex_partitions / hash_partitions")
+    if kind == "trans":
+        e = edges.select("src", "dst", F.col("weight").cast("double"))
+        p = F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))
+        trans = e.select("src", "dst", p.alias("p"))
+    elif kind == "sym-unit":
+        e = edges.select("src", "dst")
+        trans = (
+            e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .filter(F.col("src") != F.col("dst"))
+            .withColumn("p", F.lit(1.0))
+        )
+    else:
+        raise ValueError(f"unknown graph kind {kind!r}")
+    if hash_partitions is None:
+        return Graph(trans, vertex_partitions.select("vertex", "partition_id"), kind, None)
+    pid_of = hash_partition_expr(hash_partitions)
+    vp = vertices(e).select("vertex", pid_of(F.col("vertex")).alias("partition_id"))
+    return Graph(trans, vp, kind, pid_of)

@@ -42,55 +42,32 @@ def k_core_csr(
     frontier with score 0.0 (the kernel resolves block srcs positionally, so
     every src must be present); the frontier is O(V) rows regardless.
 
-    vertex_partitions must cover every vertex of `edges` (pack_blocks routes
-    edges by an inner join on the source's partition — unmapped sources
-    would be silently dropped). The Cuttana partitioner over the same
+    vertex_partitions must map every edge source: the pack routes edges by
+    a left join on the source's partition and raises on an unmapped source
+    rather than drop its edges. The Cuttana partitioner over the same
     graph's adjacency satisfies this; any total vertex→partition map is
     CORRECT (partition quality only affects locality, never the result).
-
-    hash_partitions (round 6): pass an int INSTEAD of vertex_partitions to
-    use the canonical expression map + shared sym-unit payload
-    (graphstore.sym_unit_graph). With block_store set, the resulting store
-    fingerprint matches LPA's and CC's over the same edges DataFrame and
-    partition count, so one pack serves all three (and the O(E)⋈O(V)
-    routing join is skipped — the map is an expression).
+    hash_partitions: pass an int INSTEAD of vertex_partitions to route by
+    the expression map (graphstore.open_graph) — with block_store, the
+    "sym-unit" store is shared with LPA and CC over the same edges.
 
     block_store: executor-resident store dir (see pagerank_csr and
     blockstore.resident_store; None packs a call-scoped store).
     """
-    from cuttana_spark.analytics.blockstore import gather, resident_store
-    from cuttana_spark.analytics.csr import PR
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
-
-    if (vertex_partitions is None) == (hash_partitions is None):
-        raise ValueError("pass exactly one of vertex_partitions / hash_partitions")
-    src_pid = None
-    if hash_partitions is not None:
-        from cuttana_spark.analytics.graphstore import sym_unit_graph
-
-        trans, vp, pid_of = sym_unit_graph(edges, hash_partitions)
-        src_pid = pid_of(F.col("src"))
-        frontier = vp.withColumn("score", F.lit(1.0))
-    else:
-        sym = edges.select("src", "dst").unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        trans = sym.filter(F.col("src") != F.col("dst")).withColumn(
-            "p", F.lit(1.0)
-        )
-        vp = vertex_partitions.select("vertex", "partition_id")
-        nodes = sym.select(F.col("src").alias("vertex")).distinct()
-        frontier = nodes.join(vp, "vertex").withColumn("score", F.lit(1.0))
-
     import time as _time
 
+    from cuttana_spark.analytics.blockstore import gather, resident_store
+    from cuttana_spark.analytics.csr import PR
+    from cuttana_spark.analytics.graphstore import open_graph, vertices
+    from cuttana_spark.plans.checkpoints import CheckpointCycler
+
+    g = open_graph(edges, "sym-unit", vertex_partitions, hash_partitions)
     ck = CheckpointCycler(spark)
-    frontier = ck.checkpoint(frontier)
+    frontier = ck.checkpoint(
+        g.with_pid(vertices(edges)).withColumn("score", F.lit(1.0))
+    )
     n_prev = frontier.count()  # everyone starts alive
-    with resident_store(
-        spark, trans, vp, block_store, src_pid=src_pid,
-        kind="sym-unit" if src_pid is not None else "",
-    ) as store:
+    with resident_store(spark, g, block_store) as store:
         for _ in range(max_rounds):
             t0 = _time.monotonic()
             contribs = (

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cuttana_spark.analytics.graphstore import open_graph, vertices
+
 
 def label_propagation(
     spark: SparkSession,
@@ -34,12 +36,7 @@ def label_propagation(
         )
         .filter(F.col("src") != F.col("dst"))
     )
-    nodes = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionAll(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .cache()
-    )
+    nodes = vertices(edges).cache()
     labels = nodes.withColumn("label", F.col("vertex"))
 
     start = 0
@@ -90,51 +87,23 @@ def label_propagation_csr(
     Arrow kernel pre-counts (dst, label) runs so the global aggregation
     receives ≤ one row per (block, dst, label) instead of one per edge. The
     argmax is a single min(struct(-cnt, label)) aggregation — no window
-    sort. vertex_partitions must cover every vertex (see k_core_csr); any
-    total map is correct, partition quality only affects locality.
+    sort. vertex_partitions must map every edge source (see k_core_csr);
+    any total map is correct, partition quality only affects locality.
     block_store: executor-resident store dir (see pagerank_csr and
     blockstore.resident_store; None packs a call-scoped store).
-    hash_partitions (round 6): pass an int INSTEAD of vertex_partitions to
-    use the canonical expression map + shared sym-unit payload
-    (graphstore.sym_unit_graph) — with block_store, the store fingerprint
-    matches k-core's and CC's over the same edges, so one pack serves all
-    three."""
+    hash_partitions: pass an int INSTEAD of vertex_partitions to route by
+    the expression map (graphstore.open_graph) — with block_store, the
+    "sym-unit" store is shared with k-core and CC over the same edges."""
     from cuttana_spark.analytics.blockstore import gather, resident_store
     from cuttana_spark.analytics.csr import LPA
     from cuttana_spark.plans.checkpoints import CheckpointCycler
 
-    if (vertex_partitions is None) == (hash_partitions is None):
-        raise ValueError("pass exactly one of vertex_partitions / hash_partitions")
-    src_pid = None
-    if hash_partitions is not None:
-        from cuttana_spark.analytics.graphstore import sym_unit_graph
-
-        trans, vp, pid_of = sym_unit_graph(edges, hash_partitions)
-        src_pid = pid_of(F.col("src"))
-        frontier = vp.withColumn("label", F.col("vertex"))
-    else:
-        sym = (
-            edges.select("src", "dst")
-            .unionAll(
-                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .filter(F.col("src") != F.col("dst"))
-        )
-        trans = sym.withColumn("p", F.lit(1.0))  # ps unused by the label kernel
-        vp = vertex_partitions.select("vertex", "partition_id")
-        nodes = (
-            edges.select(F.col("src").alias("vertex"))
-            .unionAll(edges.select(F.col("dst").alias("vertex")))
-            .distinct()
-        )
-        frontier = nodes.join(vp, "vertex").withColumn("label", F.col("vertex"))
-
+    g = open_graph(edges, "sym-unit", vertex_partitions, hash_partitions)
     ck = CheckpointCycler(spark)
-    frontier = ck.checkpoint(frontier)
-    with resident_store(
-        spark, trans, vp, block_store, src_pid=src_pid,
-        kind="sym-unit" if src_pid is not None else "",
-    ) as store:
+    frontier = ck.checkpoint(
+        g.with_pid(vertices(edges)).withColumn("label", F.col("vertex"))
+    )
+    with resident_store(spark, g, block_store) as store:
         for _ in range(max_iter):
             partials = gather(store, frontier, LPA)
             counts = partials.groupBy("dst", "label").agg(F.sum("cnt").alias("cnt"))

@@ -26,13 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _nodes(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("vertex"))
-        .unionAll(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
+from cuttana_spark.analytics.graphstore import open_graph, vertices
 
 
 def pagerank(
@@ -326,82 +320,32 @@ def pagerank_csr(
     into a call-scoped temporary store that is dropped before returning,
     which needs a ``local[...]`` master (blockstore.resident_store).
 
-    hash_partitions (round 7, VERDICT r6 item 6): pass an int INSTEAD of
-    vertex_partitions to use the canonical expression map + transition
-    payload (graphstore.trans_graph) — the same routing family k-core / LPA
-    / CC share. The O(E)⋈O(V) routing join is skipped (the map is an
-    expression), the per-call V⋈V vp attach is a codegen expression, and
-    with block_store set the store fingerprint matches any other
-    trans_graph pack over the same edges DataFrame and k: a pagerank →
-    k-core → LPA → CC pipeline pays exactly TWO packs (trans + sym-unit).
-    Scores equal the vertex_partitions mode's up to summation order: the
-    partition map decides how each vertex's contributions are grouped into
-    blocks before they are added.
+    hash_partitions: pass an int INSTEAD of vertex_partitions to route by
+    the expression map (graphstore.open_graph) that k-core / LPA / CC share:
+    no routing join, a codegen pid attach, and with block_store set the
+    "trans" store is reused by any later run over the same edges DataFrame
+    and k. Scores equal the vertex_partitions mode's up to summation order:
+    the partition map decides how each vertex's contributions are grouped
+    into blocks before they are added.
     """
-    from pyspark.sql import Window
-
     from cuttana_spark.analytics.blockstore import gather, resident_store
     from cuttana_spark.analytics.csr import PR
 
-    if (vertex_partitions is None) == (hash_partitions is None):
-        raise ValueError("pass exactly one of vertex_partitions / hash_partitions")
-    src_pid = None
-    pid_of = None
-    kind = ""
-    if hash_partitions is not None:
-        from cuttana_spark.analytics.graphstore import trans_graph
-
-        # canonical plans built from the ORIGINAL edges df — fingerprint
-        # equality across callers requires the same construction
-        trans, pack_vp, pid_of = trans_graph(edges, hash_partitions)
-        src_pid = pid_of(F.col("src"))
-        kind = "trans"
-    else:
-        pack_vp = vertex_partitions
+    g = open_graph(edges, "trans", vertex_partitions, hash_partitions)
     edges = edges.select("src", "dst", F.col("weight").cast("double"))
-    if hash_partitions is None:
-        # window-built transition matrix — see pagerank(): no out_w subtree,
-        # bit-identical p on count-weighted graphs
-        trans = edges.select(
-            "src",
-            "dst",
-            (F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))).alias(
-                "p"
-            ),
-        )
-    vp = (
-        vertex_partitions.select("vertex", "partition_id")
-        if hash_partitions is None
-        else None
-    )
     # carry partition_id through the loop so each superstep needs no extra
     # score→partition join (vertices without a partition — possible only for
     # dangling-only ids — contribute nothing and keep pid -1). The dangling
     # indicator is computed in the SAME aggregation pass that builds the
-    # vertex set (round 7; was nodes.distinct + srcs.distinct + two joins —
-    # the fused groupBy(max) carries ~V rows through one exchange), and ONE
-    # driver action fills the cache and answers vertex count + any-dangling.
+    # vertex set (one groupBy(max) exchange of ~V rows), and ONE driver
+    # action fills the cache and answers vertex count + any-dangling.
     vflags = (
         edges.select(F.col("src").alias("vertex"), F.lit(1).alias("_has_out"))
         .unionAll(edges.select(F.col("dst").alias("vertex"), F.lit(0).alias("_has_out")))
         .groupBy("vertex")
         .agg(F.max("_has_out").alias("_has_out"))
     )
-    if hash_partitions is not None:
-        # expression map: the pid attach is free codegen, no V⋈V join
-        nodes_flags = vflags.select(
-            "vertex", pid_of(F.col("vertex")).alias("partition_id"), "_has_out"
-        ).cache()
-    else:
-        nodes_flags = (
-            vflags.join(vp, "vertex", "left")
-            .select(
-                "vertex",
-                F.coalesce("partition_id", F.lit(-1)).alias("partition_id"),
-                "_has_out",
-            )
-            .cache()
-        )
+    nodes_flags = g.with_pid(vflags).cache()
     row = nodes_flags.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("_has_out") == 0, 1).otherwise(0)).alias("n_dangling"),
@@ -430,9 +374,7 @@ def pagerank_csr(
 
     import time as _time
 
-    with resident_store(
-        spark, trans, pack_vp, block_store, src_pid=src_pid, kind=kind
-    ) as store:
+    with resident_store(spark, g, block_store) as store:
         for it in range(start_iter, max_iter):
             _t_it = _time.monotonic()
             contribs = (
@@ -499,7 +441,7 @@ def personalized_pagerank(
     lazily chained like pagerank(); the seed indicator rides along as a
     column so each superstep's teleport needs no extra join."""
     edges = edges.select("src", "dst", F.col("weight").cast("double"))
-    nodes = _nodes(edges).cache()
+    nodes = vertices(edges).cache()
     n = nodes.count()
     if n == 0:
         return spark.createDataFrame([], "vertex long, score double")

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cuttana_spark.analytics.graphstore import vertices
+
 
 def oriented_edges(edges: DataFrame) -> DataFrame:
     """Undirected (src, dst) → oriented (a, b) with (deg, id) order a < b.
@@ -80,11 +82,6 @@ def triangles_per_vertex(spark: SparkSession, edges: DataFrame) -> DataFrame:
         .groupBy("vertex")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    nodes = (
-        edges.select(F.col("src").alias("vertex"))
-        .unionAll(edges.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
-    return nodes.join(per, "vertex", "left").select(
+    return vertices(edges).join(per, "vertex", "left").select(
         "vertex", F.coalesce("triangles", F.lit(0)).alias("triangles")
     )

@@ -51,7 +51,7 @@ def main() -> None:
 
     import cuttana_spark.analytics.blockstore as B
     from cuttana_spark.analytics.components import connected_components
-    from cuttana_spark.analytics.graphstore import sym_unit_graph, trans_graph
+    from cuttana_spark.analytics.graphstore import open_graph
 
     # ring + 4 deterministic-hash random edges per vertex -> E = 5V
     ring = spark.range(verts).select(
@@ -67,17 +67,15 @@ def main() -> None:
     store = os.path.join(
         tempfile.mkdtemp(prefix="cuttana-shared-store-"), "blocks"
     )
-    trans, vp, pid_of = sym_unit_graph(edges, cpus)
+    g = open_graph(edges, "sym-unit", hash_partitions=cpus)
 
     t0 = time.monotonic()
-    B.ensure_block_store(
-        trans, vp, store, src_pid=pid_of(F.col("src")), kind="sym-unit"
-    )
+    B.ensure_block_store(g, store)
     pack_wall = round(time.monotonic() - t0, 3)
     key_after_pack = B._store_key(store)
 
     # ---- round 7 (VERDICT r6 item 6): 4-algorithm pipeline, exactly 2 packs.
-    # PageRank packs the transition payload (trans_graph) into its own store;
+    # PageRank packs the transition payload ("trans") into its own store;
     # k-core, LPA and CC share the sym-unit store above. A SECOND pagerank
     # run over the same edges must reuse the trans pack fingerprint-checked
     # (no repack), exactly like the sym-unit consumers.

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cuttana_spark.analytics.components import connected_components
+from cuttana_spark.analytics.graphstore import Graph
 from cuttana_spark.analytics.labelprop import label_propagation, label_propagation_oracle
 from cuttana_spark.analytics.pagerank import pagerank, pagerank_csr
 from cuttana_spark.analytics.triangles import triangle_count, triangles_per_vertex
@@ -392,7 +393,7 @@ def test_csr_frontier_mismatch_guard(spark, tmp_path):
         [(0, 0), (1, 0), (2, 0)], "vertex long, partition_id int"
     )
     path = str(tmp_path / "store")
-    write_block_store(edges, vp, path)
+    write_block_store(Graph(edges, vp, "trans", None), path)
     ok = vp.withColumn("score", F.lit(1.0))
     assert gather(path, ok, PR).count() == 3
     missing = ok.filter(F.col("vertex") != 1)  # drop one partition vertex
@@ -533,7 +534,7 @@ def test_block_store_arena_sharing_and_invalidation(spark, tmp_path, monkeypatch
         [(0, 0), (1, 0), (2, 1), (3, 1)], "vertex long, partition_id int"
     )
     path = str(tmp_path / "store")
-    B.write_block_store(edges, vp, path)
+    B.write_block_store(Graph(edges, vp, "trans", None), path)
     B._CACHE.clear()
     calls = {"n": 0}
     real = __import__("pyarrow.parquet", fromlist=["read_table"]).read_table
@@ -564,7 +565,7 @@ def test_block_store_arena_sharing_and_invalidation(spark, tmp_path, monkeypatch
 
     # rewrite under same path -> new _SUCCESS mtime -> new arena generation
     _time.sleep(0.05)
-    B.write_block_store(edges, vp, path)
+    B.write_block_store(Graph(edges, vp, "trans", None), path)
     _os.utime(_os.path.join(path, "_SUCCESS"))
     before = calls["n"]
     B.load_blocks(path, 0)
@@ -590,7 +591,7 @@ def test_resident_superstep_plan_has_no_block_scan(spark, tmp_path):
         [(0, 0), (1, 0), (2, 1)], "vertex long, partition_id int"
     )
     path = str(tmp_path / "store")
-    write_block_store(edges, vp, path)
+    write_block_store(Graph(edges, vp, "trans", None), path)
     scores = spark.createDataFrame(
         [(0, 0.3, 0), (1, 0.3, 0), (2, 0.4, 1)],
         "vertex long, score double, partition_id int",
@@ -624,7 +625,7 @@ def test_csr_frontier_interior_mismatch_guard(spark, tmp_path):
         [(0, 0), (1, 0), (3, 0)], "vertex long, partition_id int"
     )
     path = str(tmp_path / "store")
-    write_block_store(edges, vp, path)
+    write_block_store(Graph(edges, vp, "trans", None), path)
     bad = spark.createDataFrame(  # same n/min/max envelope, wrong interior
         [(0, 0, 0), (2, 2, 0), (3, 3, 0)],
         "vertex long, label long, partition_id int",
@@ -653,11 +654,11 @@ def test_block_store_fingerprint_repack(spark, tmp_path, monkeypatch):
         [(0, 0), (1, 0), (2, 0)], "vertex long, partition_id int"
     )
     path = str(tmp_path / "store")
-    B.ensure_block_store(e1, vp, path)
+    B.ensure_block_store(Graph(e1, vp, "trans", None), path)
     k1 = B._store_key(path)
-    B.ensure_block_store(e1, vp, path)  # identical inputs -> reused
+    B.ensure_block_store(Graph(e1, vp, "trans", None), path)  # identical inputs -> reused
     assert B._store_key(path) == k1
-    B.ensure_block_store(e2, vp, path)  # different inputs -> re-packed
+    B.ensure_block_store(Graph(e2, vp, "trans", None), path)  # different inputs -> re-packed
     k2 = B._store_key(path)
     assert k2 != k1
     B._CACHE.clear()
@@ -694,7 +695,7 @@ def test_block_store_arena_budget_eviction(spark, tmp_path, monkeypatch):
         (F.col("id") % 4).cast("int").alias("partition_id"),
     )
     path = str(tmp_path / "store")
-    B.write_block_store(edges, vp, path)
+    B.write_block_store(Graph(edges, vp, "trans", None), path)
     # budget fits roughly 2 of the 4 partition groups
     monkeypatch.setenv("CUTTANA_ARENA_BYTES", str(220_000))
     B._CACHE.clear()
@@ -771,7 +772,7 @@ def test_kcore_self_loops_consistent(spark):
 def test_shared_block_store_serves_kcore_lpa_cc(spark, tmp_path, monkeypatch):
     """Round 6 (VERDICT item 6): k-core, LPA and CC built over the SAME
     edges DataFrame through the canonical sym-unit payload
-    (graphstore.sym_unit_graph) share ONE block store — the fingerprint
+    (graphstore.open_graph "sym-unit") share ONE block store — the fingerprint
     matches, so only the first caller packs (store mtime_ns unchanged
     afterwards) — and all three results stay oracle-correct."""
     import networkx as nx
@@ -836,7 +837,7 @@ def test_shared_block_store_serves_kcore_lpa_cc(spark, tmp_path, monkeypatch):
 
 def test_pagerank_trans_store_shared_across_runs(spark, tmp_path, monkeypatch):
     """Round 7 (VERDICT r6 item 6): pagerank_csr(hash_partitions=) packs the
-    canonical transition payload (graphstore.trans_graph) ONCE; a second run
+    canonical transition payload (graphstore.open_graph "trans") ONCE; a second run
     over the same edges DataFrame reuses the store fingerprint-checked (no
     repack), and scores equal both the vertex_partitions mode and the
     df-join pagerank."""
@@ -899,9 +900,60 @@ def test_pagerank_trans_store_shared_across_runs(spark, tmp_path, monkeypatch):
     sym.unpersist(False)
 
 
-@pytest.mark.parametrize(
-    "algo", ["pagerank_csr", "label_propagation_csr", "k_core_csr"]
-)
+def _cycle_with_chord(spark):
+    """A 30-cycle with one chord: every vertex is in the 2-core."""
+    return spark.createDataFrame(
+        [(i, (i + 1) % 30, 1.0) for i in range(30)] + [(0, 15, 1.0)],
+        "src long, dst long, weight double",
+    )
+
+
+def _csr_call(spark, algo, edges, **maps):
+    """One CSR entry point over ``edges``, routed by ``maps``."""
+    from cuttana_spark.analytics.kcore import k_core_csr
+    from cuttana_spark.analytics.labelprop import label_propagation_csr
+
+    if algo == "pagerank_csr":
+        return pagerank_csr(spark, _sym(edges), max_iter=3, tol=0.0, **maps)
+    if algo == "label_propagation_csr":
+        return label_propagation_csr(spark, edges, max_iter=3, **maps)
+    return k_core_csr(spark, edges, k=2, **maps)
+
+
+def _cycle_map(spark, missing=None):
+    """partition_id = v % 3 for every cycle vertex except ``missing``."""
+    return spark.createDataFrame(
+        [(v, v % 3) for v in range(30) if v != missing],
+        "vertex long, partition_id int",
+    )
+
+
+CSR_ALGOS = ["pagerank_csr", "label_propagation_csr", "k_core_csr"]
+
+
+@pytest.mark.parametrize("algo", CSR_ALGOS)
+def test_incomplete_vertex_partitions_raise(spark, algo):
+    """A map that lacks an edge source (vertex 7) must make the pack raise:
+    routing by an inner join used to drop 7's edges and return a silently
+    wrong answer (29 LPA labels, a different 2-core, PageRank mass 0.937)."""
+    vp = _cycle_map(spark, missing=7)
+    with pytest.raises(Exception, match="edge sources not covered"):
+        _csr_call(spark, algo, _cycle_with_chord(spark), vertex_partitions=vp).collect()
+
+
+@pytest.mark.parametrize("algo", CSR_ALGOS)
+@pytest.mark.parametrize("both", [True, False], ids=["both", "neither"])
+def test_csr_routing_needs_exactly_one_map(spark, algo, both):
+    """Every CSR entry point takes exactly one of vertex_partitions /
+    hash_partitions; both or neither is a ValueError."""
+    vp, k = (_cycle_map(spark), 3) if both else (None, None)
+    with pytest.raises(ValueError, match="exactly one of"):
+        _csr_call(
+            spark, algo, _cycle_with_chord(spark), vertex_partitions=vp, hash_partitions=k
+        )
+
+
+@pytest.mark.parametrize("algo", CSR_ALGOS)
 def test_call_scoped_store_leaves_nothing_behind(spark, tmp_path, monkeypatch, algo):
     """block_store=None packs a call-scoped store. The call must leave no
     store directory, no arena generation and no persistent RDD beyond its
@@ -910,27 +962,14 @@ def test_call_scoped_store_leaves_nothing_behind(spark, tmp_path, monkeypatch, a
     import tempfile
 
     import cuttana_spark.analytics.blockstore as B
-    from cuttana_spark.analytics.kcore import k_core_csr
-    from cuttana_spark.analytics.labelprop import label_propagation_csr
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     arena = os.environ["CUTTANA_BLOCK_ARENA"]
     arenas = lambda: set(os.listdir(arena)) if os.path.isdir(arena) else set()
     stores = lambda: [d for d in os.listdir(tmp_path) if d.startswith("cuttana-")]
     pinned = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    # a 30-cycle with one chord: every vertex is in the 2-core
-    edges = spark.createDataFrame(
-        [(i, (i + 1) % 30, 1.0) for i in range(30)] + [(0, 15, 1.0)],
-        "src long, dst long, weight double",
-    )
-    vp = spark.createDataFrame(
-        [(v, v % 3) for v in range(30)], "vertex long, partition_id int"
-    )
-    calls = {
-        "pagerank_csr": lambda: pagerank_csr(spark, _sym(edges), vp, max_iter=3, tol=0.0),
-        "label_propagation_csr": lambda: label_propagation_csr(spark, edges, vp, max_iter=3),
-        "k_core_csr": lambda: k_core_csr(spark, edges, vp, k=2),
-    }
+    edges = _cycle_with_chord(spark)
+    vp = _cycle_map(spark)
     seen = {}
     real_drop = B.drop_block_store
 
@@ -940,7 +979,7 @@ def test_call_scoped_store_leaves_nothing_behind(spark, tmp_path, monkeypatch, a
 
     monkeypatch.setattr(B, "drop_block_store", spy)
     arenas0, pinned0 = arenas(), pinned()
-    out = calls[algo]()
+    out = _csr_call(spark, algo, edges, vertex_partitions=vp)
     assert len(seen["stores"]) == 1 and seen["arenas"] - arenas0  # store was used
     assert stores() == []
     assert arenas() == arenas0
@@ -957,7 +996,7 @@ def test_call_scoped_store_needs_local_master():
 
     cluster = SimpleNamespace(sparkContext=SimpleNamespace(master="yarn"))
     with pytest.raises(ValueError, match="pass a block_store path"):
-        with resident_store(cluster, None, None, None):
+        with resident_store(cluster, None, None):
             pass
 
 
@@ -974,8 +1013,8 @@ def test_load_blocks_forgets_dropped_stores(spark, tmp_path):
     )
     vp = spark.createDataFrame([(0, 0), (1, 0)], "vertex long, partition_id int")
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    B.write_block_store(edges, vp, a)
-    B.write_block_store(edges, vp, b)
+    B.write_block_store(Graph(edges, vp, "trans", None), a)
+    B.write_block_store(Graph(edges, vp, "trans", None), b)
     B._CACHE.clear()
     assert len(B.load_blocks(a, 0)) == 1
     B.drop_block_store(a)
