@@ -1,9 +1,10 @@
 """Benchmark harness — prints ONE JSON line for the driver.
 
 Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]. The link-graph suite runs on the bench-scale
-transcripts fixture (N_CONV=50,000 → ~1.05M turns, FIXTURES.md §1), the
-relational/training-data suite on the sf tables.
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on). The
+link-graph suite runs on the bench-scale transcripts fixture (N_CONV=50,000
+→ ~1.05M turns, FIXTURES.md §1), the relational/training-data suite on the
+sf tables.
 
 Derived throughput metrics (PageRank supersteps/sec + edges/sec, partitioner
 vertices/sec) are included alongside per-query seconds; scaling-efficiency
@@ -47,7 +48,6 @@ def ensure_bench_embeddings() -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     # Pin BLAS/OpenMP to one thread per Python worker (round 6, VERDICT r5
     # item 3): with 32 workers on 32 cores, multi-threaded BLAS inside each
@@ -65,8 +65,9 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from cuttana_spark.session import get_spark
+    from cuttana_spark.session import default_parallelism, get_spark
 
+    cpus = default_parallelism()
     spark = get_spark(
         app="cuttana-bench", master=f"local[{cpus}]", shuffle_partitions=cpus
     )

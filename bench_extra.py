@@ -66,13 +66,13 @@ def main() -> None:
     ):
         os.environ.setdefault(_v, "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     reps = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
 
     from pyspark.sql import functions as F
 
-    from cuttana_spark.session import get_spark
+    from cuttana_spark.session import default_parallelism, get_spark
 
+    cpus = default_parallelism()
     spark = get_spark(
         app="cuttana-bench-extra", master=f"local[{cpus}]", shuffle_partitions=cpus
     )

@@ -211,7 +211,6 @@ def _proc_stat() -> tuple[float, float, float]:
 
 def _run_worker(code: str, args: list[str], timeout: int = 2400) -> dict:
     repo = os.path.dirname(os.path.abspath(__file__))
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="48g")
     busy0, steal0, t0 = _proc_stat()
     out = subprocess.run(
         [sys.executable, "-c", code.format(repo=repo), *args],
@@ -219,7 +218,6 @@ def _run_worker(code: str, args: list[str], timeout: int = 2400) -> dict:
         text=True,
         timeout=timeout,
         cwd=repo,
-        env=env,
     )
     busy1, steal1, t1 = _proc_stat()
     import shutil

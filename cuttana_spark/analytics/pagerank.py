@@ -53,7 +53,11 @@ def pagerank(
     superstep; intermediate supersteps stay lazily chained in one DAG.
     ``iter_walls``: optional list — appends each superstep's wall seconds
     (meaningful with checkpoint_interval=1, where every superstep is its own
-    job; the scaling bench's steady-state metric).
+    job; the scaling bench's steady-state metric). In fused fixed-iteration
+    mode the supersteps between two checkpoints run as one job when the
+    checkpoint materializes, so the boundary superstep's entry carries the
+    whole window's cost and the others read only their driver-side
+    planning time.
     ``stable_layout``: lay out the static transition matrix on the join key
     and materialize it eagerly before superstep 1. Worth it only when the
     upfront repartition+count amortizes over many supersteps — default is

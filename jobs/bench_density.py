@@ -86,7 +86,6 @@ def run(repo: str, V: int, d: int, iters: int, subj: str) -> list[float]:
         [sys.executable, "-c", WORKER.format(repo=repo),
          str(V), str(d), str(iters), subj],
         capture_output=True, text=True, timeout=2400, cwd=repo,
-        env=dict(os.environ, SPARK_GRAFT_DRIVER_MEM="48g"),
     )
     for line in out.stdout.replace("\r", "\n").splitlines():
         if line.startswith("RESULT "):

@@ -83,7 +83,6 @@ print("RESULT " + json.dumps({{"cpus": cpus, "edges": n_edges,
 
 
 def run_worker(repo, args):
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="48g")
     busy0, steal0, t0 = _proc_stat()
     out = subprocess.run(
         [sys.executable, "-c", WORKER.format(repo=repo), *args],
@@ -91,7 +90,6 @@ def run_worker(repo, args):
         text=True,
         timeout=2400,
         cwd=repo,
-        env=env,
     )
     busy1, steal1, t1 = _proc_stat()
     import shutil

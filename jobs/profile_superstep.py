@@ -141,11 +141,10 @@ def main() -> None:
 
     _ensure_fixture(nconv)
     evdir = tempfile.mkdtemp(prefix="pr_eventlog_")
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="48g")
     out = subprocess.run(
         [sys.executable, "-c", WORKER.format(repo=repo),
          str(cpus), str(iters), str(nconv), str(shuf), evdir],
-        capture_output=True, text=True, timeout=2400, cwd=repo, env=env,
+        capture_output=True, text=True, timeout=2400, cwd=repo,
     )
     res = None
     for line in out.stdout.replace("\r", "\n").splitlines():

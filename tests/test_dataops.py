@@ -485,3 +485,21 @@ def test_brute_force_gemm_query_cap_and_chunking(spark, emb, monkeypatch):
     want = norm(sim.brute_force_topk_gemm(sub, sub, k=3))
     monkeypatch.setattr(sim, "_GEMM_Q_CHUNK", 7)
     assert norm(sim.brute_force_topk_gemm(sub, sub, k=3)) == want
+
+
+def test_shingle_cache_released_by_next_call(spark):
+    """minhash_pairs caches the shingle relation its passes share; the next
+    shingle-based call must release it, so repeated calls keep at most one
+    shingle relation persisted."""
+    from pyspark import StorageLevel
+
+    base = "the quick brown fox jumps over the lazy dog again and again every day"
+    schema = "doc_id long, text string"
+    d1 = spark.createDataFrame([(1, base), (2, base.replace("lazy", "sleepy"))], schema)
+    d2 = spark.createDataFrame([(1, base), (3, base.replace("fox", "cat"))], schema)
+    r1 = D.minhash_pairs(d1, bands=8, threshold=0.3).collect()
+    r2 = D.minhash_pairs(d2, bands=8, threshold=0.3).collect()
+    assert [(r.doc_a, r.doc_b) for r in r1] == [(1, 2)]
+    assert [(r.doc_a, r.doc_b) for r in r2] == [(1, 3)]
+    persisted = [T.shingles(d).storageLevel != StorageLevel.NONE for d in (d1, d2)]
+    assert persisted == [False, True]
