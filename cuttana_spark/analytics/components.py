@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuttana_spark.analytics.graphstore import open_graph, vertices
+from cuttana_spark.plans.checkpoints import scope
 
 MAX_ROUNDS = 50
 
@@ -121,41 +122,33 @@ def connected_components(
     round over round, so AQE's runtime broadcast conversion and partition
     coalescing pay more each round. AQE therefore stays at the session
     setting here; do not copy pagerank's AQE-off pattern into this loop."""
-    return _connected_components_impl(
-        spark, edges, max_rounds, runner, sig_every, round_walls,
-        accel_rounds, accel_min_edges, accel_partitions, block_store,
-    )
+    with scope() as s:  # the O(E) edge chain and the result
+        e = s.checkpoint(
+            edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
+                F.col("a") != F.col("b")
+            )
+        )
+        start = 0
+        if runner is not None:
+            resumed = runner.resume()
+            if resumed is not None:
+                start, e = resumed
+                e = s.checkpoint(e)
 
+        accel = accel_rounds > 0 and runner is None and e.count() >= accel_min_edges
+        if not accel:
+            labels = _star_loop(s, e, start, max_rounds, sig_every, round_walls, runner)
+            return s.keep(
+                vertices(edges)
+                .join(labels, "vertex", "left")
+                .select(
+                    "vertex",
+                    F.least(
+                        F.coalesce("component", F.col("vertex")), F.col("vertex")
+                    ).alias("component"),
+                )
+            )
 
-def _connected_components_impl(
-    spark: SparkSession,
-    edges: DataFrame,
-    max_rounds: int,
-    runner,
-    sig_every: int,
-    round_walls: list | None,
-    accel_rounds: int,
-    accel_min_edges: int,
-    accel_partitions: int,
-    block_store: str | None,
-) -> DataFrame:
-    nodes = vertices(edges).cache()
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
-
-    ck = CheckpointCycler(spark)
-    e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    e = ck.checkpoint(e)
-
-    start = 0
-    if runner is not None:
-        resumed = runner.resume()
-        if resumed is not None:
-            start, e = resumed
-            e = ck.checkpoint(e)
-
-    if accel_rounds > 0 and runner is None and e.count() >= accel_min_edges:
         import time as _time
 
         from cuttana_spark.analytics.blockstore import gather, resident_store
@@ -176,111 +169,74 @@ def _connected_components_impl(
         # union as the gathered neighbor partials, so min-combining them IS
         # the new label relation — no join. Each round's labels are
         # checkpointed, so nothing after the loop reads the store.
-        lck = CheckpointCycler(spark, keep_generations=1)
-        labels = lck.checkpoint(g.vp.withColumn("label", F.col("vertex")))
-        with resident_store(spark, g, block_store) as store:
-            for r in range(accel_rounds):
-                t0 = _time.monotonic()
-                partials = gather(store, labels, MIN).select("dst", "mlab")
-                mins = (
-                    partials.unionAll(
-                        labels.select(
-                            F.col("vertex").alias("dst"), F.col("label").alias("mlab")
+        with scope() as ls:  # the O(V) label chain
+            labels = ls.checkpoint(g.vp.withColumn("label", F.col("vertex")))
+            with resident_store(spark, g, block_store) as store:
+                for r in range(accel_rounds):
+                    t0 = _time.monotonic()
+                    partials = gather(store, labels, MIN).select("dst", "mlab")
+                    mins = (
+                        partials.unionAll(
+                            labels.select(
+                                F.col("vertex").alias("dst"), F.col("label").alias("mlab")
+                            )
                         )
+                        .groupBy("dst")
+                        .agg(F.min("mlab").alias("label"))
                     )
-                    .groupBy("dst")
-                    .agg(F.min("mlab").alias("label"))
-                )
-                labels = lck.checkpoint(
-                    g.with_pid(mins.select(F.col("dst").alias("vertex"), "label"))
-                )
-                if round_walls is not None:
-                    round_walls.append(
-                        {
-                            "round": -(r + 1),  # accel rounds count down from -1
-                            "wall": _time.monotonic() - t0,
-                            "sig_wall": 0.0,
-                        }
+                    labels = ls.checkpoint(
+                        g.with_pid(mins.select(F.col("dst").alias("vertex"), "label"))
                     )
-        la = labels.select(F.col("vertex").alias("a"), F.col("label").alias("la"))
-        lb = labels.select(F.col("vertex").alias("b"), F.col("label").alias("lb"))
-        contracted = (
-            e.join(la, "a")
-            .join(lb, "b")
-            .filter(F.col("la") != F.col("lb"))
-            .select(
-                F.least("la", "lb").alias("src"), F.greatest("la", "lb").alias("dst")
+                    if round_walls is not None:
+                        round_walls.append(
+                            {
+                                "round": -(r + 1),  # accel rounds count down from -1
+                                "wall": _time.monotonic() - t0,
+                                "sig_wall": 0.0,
+                            }
+                        )
+            la = labels.select(F.col("vertex").alias("a"), F.col("label").alias("la"))
+            lb = labels.select(F.col("vertex").alias("b"), F.col("label").alias("lb"))
+            contracted = (
+                e.join(la, "a")
+                .join(lb, "b")
+                .filter(F.col("la") != F.col("lb"))
+                .select(F.least("la", "lb").alias("a"), F.greatest("la", "lb").alias("b"))
+                .distinct()
             )
-            .distinct()
-        )
-        # Snapshot persistent-RDD ids around the recursive tail call: the
-        # inner star loop's ck.finish() leaves ITS final star forest (and
-        # its own nodes cache) pinned — correct while `out` is lazy, a leak
-        # once `out` is eagerly re-checkpointed below. Everything persisted
-        # by the tail that this cycler does not track is released after the
-        # checkpoint (the exact leak class CheckpointCycler exists to stop).
-        # SINGLE-THREADED-DRIVER ASSUMPTION (ADVICE r6): the diff-based
-        # sweep force-unpersists every RDD registered during the window that
-        # neither cycler tracks — caches persisted CONCURRENTLY by other
-        # jobs on this SparkSession would be swept too. Entry queries run
-        # sequentially so this holds today; a concurrent-driver caller must
-        # run CC on its own session (spark.newSession()) or accept the
-        # recompute of any cache it fills during this call.
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        before_ids = set(jmap.keys())
-        tail = connected_components(
-            spark,
-            contracted,
-            max_rounds=max_rounds,
-            sig_every=sig_every,
-            round_walls=round_walls,
-            accel_rounds=0,
-        )
-        out = (
-            labels.join(
-                tail.select(
-                    F.col("vertex").alias("label"), F.col("component").alias("_c")
-                ),
-                "label",
-                "left",
-            )
-            .select("vertex", F.coalesce("_c", "label").alias("component"))
-        )
-        # eagerly materialize the O(V) result, then release everything it
-        # was built from — the original O(E) edge checkpoint, the label
-        # chain, the nodes cache, AND the tail call's pinned internals.
-        # Residency at return is O(V), matching the star-loop path.
-        out = ck.checkpoint(out)
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        tracked = set().union(*ck._gens) if ck._gens else set()
-        for rid in set(jmap.keys()) - before_ids - tracked:
-            jmap[rid].unpersist(True)
-        lck.close()
-        nodes.unpersist(False)
-        return ck.finish(out)
+            with scope() as ts:  # the star loop over the contracted graph
+                tail = _star_loop(
+                    ts, ts.checkpoint(contracted), 0, max_rounds, sig_every, round_walls, None
+                )
+                # a label absent from the tail's fixpoint is its own root
+                return s.keep(
+                    labels.join(
+                        tail.select(
+                            F.col("vertex").alias("label"), F.col("component").alias("_c")
+                        ),
+                        "label",
+                        "left",
+                    ).select("vertex", F.coalesce("_c", "label").alias("component"))
+                )
 
-    def _sig(df, canonical: bool = False) -> tuple:
-        # order-insensitive canonical-edge-set signature: one cheap aggregate
-        # per round instead of a union+groupBy over both generations.
-        # canonical=True: the rows are already distinct with b < a (exactly
-        # what _small_star emits), so the least/greatest + distinct pass —
-        # a full extra shuffle of the edge set per round — is skipped and
-        # the signature is a single aggregate over (b, a).
-        if canonical:
-            x, y = F.col("b"), F.col("a")
-            src = df
-        else:
-            src = df.select(
-                F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y")
-            ).distinct()
-            x, y = F.col("x"), F.col("y")
-        row = src.agg(
-            F.count(F.lit(1)).alias("cnt"),
-            # decimal sum: exact and overflow-free under ANSI mode
-            F.sum(F.xxhash64(x, y).cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return (row.cnt, row.h)
 
+def _sig(df: DataFrame) -> tuple:
+    """Order-insensitive signature of a canonical edge set — rows distinct
+    with b < a, exactly what _small_star emits — as one aggregate per round
+    (no union+groupBy over both generations, no least/greatest+distinct)."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("cnt"),
+        # decimal sum: exact and overflow-free under ANSI mode
+        F.sum(F.xxhash64("b", "a").cast("decimal(38,0)")).alias("h"),
+    ).first()
+    return (row.cnt, row.h)
+
+
+def _star_loop(s, e, start, max_rounds, sig_every, round_walls, runner) -> DataFrame:
+    """Alternate large-star / small-star over the edge generation `e`, each
+    round checkpointed in scope `s`, to the fixpoint star forest; returns
+    DataFrame[vertex, component] for every non-root vertex (lazy over the
+    scope's last generation)."""
     import time as _time
 
     # No signature of the INITIAL edge set: its non-canonical form needs a
@@ -292,7 +248,7 @@ def _connected_components_impl(
     confirming = False
     for rnd in range(start, max_rounds):
         t0 = _time.monotonic()
-        e2 = ck.checkpoint(_small_star(_large_star(e)))
+        e2 = s.checkpoint(_small_star(_large_star(e)))
         t1 = _time.monotonic()
         measure = (
             confirming
@@ -302,7 +258,7 @@ def _connected_components_impl(
         changed = True
         sig_wall = 0.0
         if measure:
-            sig = _sig(e2, canonical=True)
+            sig = _sig(e2)
             sig_wall = _time.monotonic() - t1
             if prev_sig is not None and sig == prev_sig:
                 if prev_rnd == rnd - 1:
@@ -321,14 +277,5 @@ def _connected_components_impl(
             runner.checkpoint(rnd + 1, e, {"changed": int(changed)})
         if not changed:
             break
-
     # at fixpoint every edge is (v, root); vertices may appear as roots only
-    ck.finish(e)
-    labels = e.groupBy(F.col("a").alias("vertex")).agg(F.min("b").alias("component"))
-    return (
-        nodes.join(labels, "vertex", "left")
-        .select(
-            "vertex",
-            F.least(F.coalesce("component", F.col("vertex")), F.col("vertex")).alias("component"),
-        )
-    )
+    return e.groupBy(F.col("a").alias("vertex")).agg(F.min("b").alias("component"))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cuttana_spark.plans.checkpoints import scope
+
 
 def k_core_csr(
     spark: SparkSession,
@@ -59,42 +61,41 @@ def k_core_csr(
     from cuttana_spark.analytics.blockstore import gather, resident_store
     from cuttana_spark.analytics.csr import PR
     from cuttana_spark.analytics.graphstore import open_graph, vertices
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
 
     g = open_graph(edges, "sym-unit", vertex_partitions, hash_partitions)
-    ck = CheckpointCycler(spark)
-    frontier = ck.checkpoint(
-        g.with_pid(vertices(edges)).withColumn("score", F.lit(1.0))
-    )
-    n_prev = frontier.count()  # everyone starts alive
-    with resident_store(spark, g, block_store) as store:
-        for _ in range(max_rounds):
-            t0 = _time.monotonic()
-            contribs = (
-                gather(store, frontier, PR)
-                .groupBy("dst")
-                .agg(F.sum("contrib").alias("contrib"))
-            )
-            nf = frontier.join(contribs, frontier.vertex == contribs.dst, "left").select(
-                frontier.vertex,
-                frontier.partition_id,
-                F.when(
-                    (frontier.score > 0)
-                    & (F.coalesce(contribs.contrib, F.lit(0.0)) >= k),
-                    1.0,
+    with scope() as s:
+        frontier = s.checkpoint(
+            g.with_pid(vertices(edges)).withColumn("score", F.lit(1.0))
+        )
+        n_prev = frontier.count()  # everyone starts alive
+        with resident_store(spark, g, block_store) as store:
+            for _ in range(max_rounds):
+                t0 = _time.monotonic()
+                contribs = (
+                    gather(store, frontier, PR)
+                    .groupBy("dst")
+                    .agg(F.sum("contrib").alias("contrib"))
                 )
-                .otherwise(0.0)
-                .alias("score"),
-            )
-            nf = ck.checkpoint(nf)
-            n_alive = nf.filter(F.col("score") > 0).count()
-            frontier = nf
-            if round_walls is not None:
-                round_walls.append(round(_time.monotonic() - t0, 3))
-            if n_alive == n_prev or n_alive == 0:
-                break
-            n_prev = n_alive
-    return ck.finish(frontier).filter(F.col("score") > 0).select("vertex")
+                nf = frontier.join(contribs, frontier.vertex == contribs.dst, "left").select(
+                    frontier.vertex,
+                    frontier.partition_id,
+                    F.when(
+                        (frontier.score > 0)
+                        & (F.coalesce(contribs.contrib, F.lit(0.0)) >= k),
+                        1.0,
+                    )
+                    .otherwise(0.0)
+                    .alias("score"),
+                )
+                nf = s.checkpoint(nf)
+                n_alive = nf.filter(F.col("score") > 0).count()
+                frontier = nf
+                if round_walls is not None:
+                    round_walls.append(round(_time.monotonic() - t0, 3))
+                if n_alive == n_prev or n_alive == 0:
+                    break
+                n_prev = n_alive
+        return s.keep(frontier).filter(F.col("score") > 0).select("vertex")
 
 
 def k_core(spark: SparkSession, edges: DataFrame, k: int, max_rounds: int = 200) -> DataFrame:
@@ -106,33 +107,29 @@ def k_core(spark: SparkSession, edges: DataFrame, k: int, max_rounds: int = 200)
     the simple graph, and a self-loop never contributes to the degree that
     peeling counts. (Isolated self-loop-only vertices therefore peel out at
     k >= 1, matching networkx's core_number on the graph minus self-loops.)"""
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
-
-    sym = (
-        edges.select("src", "dst")
-        .unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    with scope() as s:
+        sym = s.cache(
+            edges.select("src", "dst")
+            .unionAll(
+                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
+            .filter(F.col("src") != F.col("dst"))
         )
-        .filter(F.col("src") != F.col("dst"))
-        .cache()
-    )
-    ck = CheckpointCycler(spark)
-    alive = ck.checkpoint(sym.select(F.col("src").alias("vertex")).distinct())
-    n_prev = alive.count()
-    for _ in range(max_rounds):
-        deg = (
-            sym.join(alive.withColumnRenamed("vertex", "src"), "src")
-            .join(alive.withColumnRenamed("vertex", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        new_alive = ck.checkpoint(
-            deg.filter(F.col("deg") >= k).select(F.col("src").alias("vertex"))
-        )
-        n_new = new_alive.count()
-        alive = new_alive
-        if n_new == n_prev or n_new == 0:
-            break
-        n_prev = n_new
-    sym.unpersist(False)
-    return ck.finish(alive)
+        alive = s.checkpoint(sym.select(F.col("src").alias("vertex")).distinct())
+        n_prev = alive.count()
+        for _ in range(max_rounds):
+            deg = (
+                sym.join(alive.withColumnRenamed("vertex", "src"), "src")
+                .join(alive.withColumnRenamed("vertex", "dst"), "dst")
+                .groupBy("src")
+                .agg(F.count(F.lit(1)).alias("deg"))
+            )
+            new_alive = s.checkpoint(
+                deg.filter(F.col("deg") >= k).select(F.col("src").alias("vertex"))
+            )
+            n_new = new_alive.count()
+            alive = new_alive
+            if n_new == n_prev or n_new == 0:
+                break
+            n_prev = n_new
+        return s.keep(alive)

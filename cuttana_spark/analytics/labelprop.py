@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cuttana_spark.analytics.graphstore import open_graph, vertices
+from cuttana_spark.plans.checkpoints import scope
 
 
 def label_propagation(
@@ -36,40 +37,35 @@ def label_propagation(
         )
         .filter(F.col("src") != F.col("dst"))
     )
-    nodes = vertices(edges).cache()
-    labels = nodes.withColumn("label", F.col("vertex"))
+    labels = vertices(edges).withColumn("label", F.col("vertex"))
 
     start = 0
     if runner is not None:
         resumed = runner.resume()
         if resumed is not None:
             start, labels = resumed
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
-
-    ck = CheckpointCycler(spark)
-    labels = ck.checkpoint(labels)
-
     w = Window.partitionBy("dst").orderBy(F.desc("cnt"), F.asc("label"))
-    for it in range(start, max_iter):
-        freq = (
-            sym.join(labels, sym.src == labels.vertex)
-            .groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        best = (
-            freq.withColumn("rn", F.row_number().over(w))
-            .filter("rn = 1")
-            .select(F.col("dst").alias("vertex"), F.col("label").alias("new_label"))
-        )
-        labels = ck.checkpoint(
-            labels.join(best, "vertex", "left").select(
-                "vertex", F.coalesce("new_label", "label").alias("label")
+    with scope() as s:
+        labels = s.checkpoint(labels)
+        for it in range(start, max_iter):
+            freq = (
+                sym.join(labels, sym.src == labels.vertex)
+                .groupBy("dst", "label")
+                .agg(F.count(F.lit(1)).alias("cnt"))
             )
-        )
-        if runner is not None:
-            runner.checkpoint(it + 1, labels, {})
-    nodes.unpersist(False)
-    return ck.finish(labels)
+            best = (
+                freq.withColumn("rn", F.row_number().over(w))
+                .filter("rn = 1")
+                .select(F.col("dst").alias("vertex"), F.col("label").alias("new_label"))
+            )
+            labels = s.checkpoint(
+                labels.join(best, "vertex", "left").select(
+                    "vertex", F.coalesce("new_label", "label").alias("label")
+                )
+            )
+            if runner is not None:
+                runner.checkpoint(it + 1, labels, {})
+        return s.keep(labels)
 
 
 def label_propagation_csr(
@@ -96,36 +92,35 @@ def label_propagation_csr(
     "sym-unit" store is shared with k-core and CC over the same edges."""
     from cuttana_spark.analytics.blockstore import gather, resident_store
     from cuttana_spark.analytics.csr import LPA
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
 
     g = open_graph(edges, "sym-unit", vertex_partitions, hash_partitions)
-    ck = CheckpointCycler(spark)
-    frontier = ck.checkpoint(
-        g.with_pid(vertices(edges)).withColumn("label", F.col("vertex"))
-    )
-    with resident_store(spark, g, block_store) as store:
-        for _ in range(max_iter):
-            partials = gather(store, frontier, LPA)
-            counts = partials.groupBy("dst", "label").agg(F.sum("cnt").alias("cnt"))
-            best = (
-                counts.groupBy("dst")
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("cnt")).alias("nc"), F.col("label").alias("lb")
-                        )
-                    ).alias("s")
+    with scope() as s:
+        frontier = s.checkpoint(
+            g.with_pid(vertices(edges)).withColumn("label", F.col("vertex"))
+        )
+        with resident_store(spark, g, block_store) as store:
+            for _ in range(max_iter):
+                partials = gather(store, frontier, LPA)
+                counts = partials.groupBy("dst", "label").agg(F.sum("cnt").alias("cnt"))
+                best = (
+                    counts.groupBy("dst")
+                    .agg(
+                        F.min(
+                            F.struct(
+                                (-F.col("cnt")).alias("nc"), F.col("label").alias("lb")
+                            )
+                        ).alias("s")
+                    )
+                    .select(F.col("dst").alias("vertex"), F.col("s.lb").alias("new_label"))
                 )
-                .select(F.col("dst").alias("vertex"), F.col("s.lb").alias("new_label"))
-            )
-            frontier = ck.checkpoint(
-                frontier.join(best, "vertex", "left").select(
-                    "vertex",
-                    "partition_id",
-                    F.coalesce("new_label", "label").alias("label"),
+                frontier = s.checkpoint(
+                    frontier.join(best, "vertex", "left").select(
+                        "vertex",
+                        "partition_id",
+                        F.coalesce("new_label", "label").alias("label"),
+                    )
                 )
-            )
-    return ck.finish(frontier).select("vertex", "label")
+        return s.keep(frontier).select("vertex", "label")
 
 
 def label_propagation_oracle(adj: dict[int, list[int]], max_iter: int = 10) -> dict[int, int]:

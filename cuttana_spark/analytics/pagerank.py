@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuttana_spark.analytics.graphstore import open_graph, vertices
+from cuttana_spark.plans.checkpoints import scope
 
 
 def pagerank(
@@ -95,10 +96,11 @@ def pagerank(
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         aqe_touched = True
     try:
-        return _pagerank_impl(
-            spark, edges, alpha, max_iter, tol, runner, checkpoint_interval,
-            iter_walls, stable_layout, _time,
-        )
+        with scope() as s:
+            return _pagerank_impl(
+                spark, s, edges, alpha, max_iter, tol, runner,
+                checkpoint_interval, iter_walls, stable_layout, _time,
+            )
     finally:
         if aqe_touched:
             if aqe_saved is None:
@@ -108,7 +110,7 @@ def pagerank(
 
 
 def _pagerank_impl(
-    spark, edges, alpha, max_iter, tol, runner, checkpoint_interval,
+    spark, s, edges, alpha, max_iter, tol, runner, checkpoint_interval,
     iter_walls, stable_layout, _time,
 ):
     edges = edges.select("src", "dst", F.col("weight").cast("double"))
@@ -117,12 +119,11 @@ def _pagerank_impl(
     # out-edge (round 7; was nodes.distinct + srcs.distinct + a left join —
     # three exchanges over up to 2x the rows). groupBy(max) has map-side
     # partial aggregation, so the single exchange carries ~V rows.
-    flags = (
+    flags = s.cache(
         edges.select(F.col("src").alias("vertex"), F.lit(1).alias("_has_out"))
         .unionAll(edges.select(F.col("dst").alias("vertex"), F.lit(0).alias("_has_out")))
         .groupBy("vertex")
         .agg(F.max("_has_out").alias("_has_out"))
-        .cache()
     )
     row = flags.agg(
         F.count(F.lit(1)).alias("n"),
@@ -130,7 +131,6 @@ def _pagerank_impl(
     ).first()
     n = row.n
     if n == 0:
-        flags.unpersist(False)
         return spark.createDataFrame([], "vertex long, score double")
     has_dangling = row.n_dangling > 0
     nodes = flags.select("vertex")
@@ -153,11 +153,13 @@ def _pagerank_impl(
     if stable_layout is None:
         stable_layout = tol > 0 or max_iter > 8
     base = edges.repartition("src") if stable_layout else edges
-    trans = base.select(
-        "src",
-        "dst",
-        (F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))).alias("p"),
-    ).cache()
+    trans = s.cache(
+        base.select(
+            "src",
+            "dst",
+            (F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))).alias("p"),
+        )
+    )
     if stable_layout:
         trans.count()
     dangling_nodes = (
@@ -168,15 +170,12 @@ def _pagerank_impl(
 
     start_iter = 0
     ranks = nodes.withColumn("score", F.lit(1.0 / n))
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
-
-    ck = CheckpointCycler(spark)
     if runner is not None:
         resumed = runner.resume()
         if resumed is not None:
             start_iter, ranks = resumed
             # resumed state carries real lineage — cut it before looping
-            ranks = ck.checkpoint(ranks)
+            ranks = s.checkpoint(ranks)
     # fresh start: ranks is nodes(cached) + a literal column — lineage is
     # already minimal, a checkpoint here would only cost an extra job
 
@@ -266,7 +265,7 @@ def _pagerank_impl(
                 + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra)
             ).alias("score"),
         )
-        new_ranks = ck.checkpoint(new_ranks)
+        new_ranks = s.checkpoint(new_ranks)
         fused_state = None
         if tol > 0:
             err = (
@@ -284,12 +283,7 @@ def _pagerank_impl(
             runner.checkpoint(it + 1, ranks, {"err": float(err) if err != float("inf") else -1.0})
         if err < n * tol:
             break
-    # the returned ranks is a checkpointed LogicalRDD — the per-call input
-    # caches are dead weight now; unpersist so repeated calls don't pile up
-    # evictable-but-noisy blocks in the BlockManager
-    for c in (flags, trans):
-        c.unpersist(False)
-    return ck.finish(ranks)
+    return s.keep(ranks)
 
 
 def pagerank_csr(
@@ -349,86 +343,82 @@ def pagerank_csr(
         .groupBy("vertex")
         .agg(F.max("_has_out").alias("_has_out"))
     )
-    nodes_flags = g.with_pid(vflags).cache()
-    row = nodes_flags.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("_has_out") == 0, 1).otherwise(0)).alias("n_dangling"),
-    ).first()
-    n = row.n
-    if n == 0:
-        nodes_flags.unpersist(False)
-        return spark.createDataFrame([], "vertex long, score double")
-    has_dangling = row.n_dangling > 0
-    nodes_pid = nodes_flags.select("vertex", "partition_id")  # cache projection
-    dangling_nodes = nodes_flags.filter(F.col("_has_out") == 0).select("vertex")
+    with scope() as s:
+        nodes_flags = s.cache(g.with_pid(vflags))
+        row = nodes_flags.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("_has_out") == 0, 1).otherwise(0)).alias("n_dangling"),
+        ).first()
+        n = row.n
+        if n == 0:
+            return spark.createDataFrame([], "vertex long, score double")
+        has_dangling = row.n_dangling > 0
+        nodes_pid = nodes_flags.select("vertex", "partition_id")  # cache projection
+        dangling_nodes = nodes_flags.filter(F.col("_has_out") == 0).select("vertex")
 
-    start_iter = 0
-    ranks = nodes_pid.withColumn("score", F.lit(1.0 / n))
-    if runner is not None:
-        resumed = runner.resume()
-        if resumed is not None:
-            start_iter, resumed_state = resumed
-            ranks = resumed_state
-            if "partition_id" not in ranks.columns:
-                ranks = ranks.join(nodes_pid, "vertex")
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
+        start_iter = 0
+        ranks = nodes_pid.withColumn("score", F.lit(1.0 / n))
+        if runner is not None:
+            resumed = runner.resume()
+            if resumed is not None:
+                start_iter, resumed_state = resumed
+                ranks = resumed_state
+                if "partition_id" not in ranks.columns:
+                    ranks = ranks.join(nodes_pid, "vertex")
+        ranks = s.checkpoint(ranks)
 
-    ck = CheckpointCycler(spark)
-    ranks = ck.checkpoint(ranks)
+        import time as _time
 
-    import time as _time
-
-    with resident_store(spark, g, block_store) as store:
-        for it in range(start_iter, max_iter):
-            _t_it = _time.monotonic()
-            contribs = (
-                gather(store, ranks, PR)
-                .groupBy("dst")
-                .agg(F.sum("contrib").alias("contrib"))
-            )
-            joined = nodes_pid.join(contribs, nodes_pid.vertex == contribs.dst, "left")
-            if has_dangling:
-                # in-plan dangling mass (broadcast 1-row aggregate) — see pagerank()
-                dm = dangling_nodes.join(ranks, "vertex").agg(
-                    F.coalesce(F.sum("score"), F.lit(0.0)).alias("dangling_mass")
+        with resident_store(spark, g, block_store) as store:
+            for it in range(start_iter, max_iter):
+                _t_it = _time.monotonic()
+                contribs = (
+                    gather(store, ranks, PR)
+                    .groupBy("dst")
+                    .agg(F.sum("contrib").alias("contrib"))
                 )
-                joined = joined.crossJoin(F.broadcast(dm))
-                extra = F.col("dangling_mass") / F.lit(float(n))
-            else:
-                extra = F.lit(0.0)
-            new_ranks = joined.select(
-                "vertex",
-                "partition_id",
-                (
-                    F.lit((1.0 - alpha) / n)
-                    + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra)
-                ).alias("score"),
-            )
-            # materialize (truncate lineage/plan growth) only periodically —
-            # intermediate supersteps live as shuffle outputs that Spark reuses,
-            # so a fixed-iteration run executes as ONE dag with no per-superstep
-            # driver round-trip
-            interval = max(1, checkpoint_interval)
-            if tol > 0 or runner is not None or (it + 1) % interval == 0 or it + 1 == max_iter:
-                new_ranks = ck.checkpoint(new_ranks)
-            if tol > 0:
-                err = (
-                    new_ranks.alias("a")
-                    .join(ranks.alias("b"), "vertex")
-                    .agg(F.sum(F.abs(F.col("a.score") - F.col("b.score"))))
-                    .first()[0]
+                joined = nodes_pid.join(contribs, nodes_pid.vertex == contribs.dst, "left")
+                if has_dangling:
+                    # in-plan dangling mass (broadcast 1-row aggregate) — see pagerank()
+                    dm = dangling_nodes.join(ranks, "vertex").agg(
+                        F.coalesce(F.sum("score"), F.lit(0.0)).alias("dangling_mass")
+                    )
+                    joined = joined.crossJoin(F.broadcast(dm))
+                    extra = F.col("dangling_mass") / F.lit(float(n))
+                else:
+                    extra = F.lit(0.0)
+                new_ranks = joined.select(
+                    "vertex",
+                    "partition_id",
+                    (
+                        F.lit((1.0 - alpha) / n)
+                        + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra)
+                    ).alias("score"),
                 )
-            else:
-                err = float("inf")  # fixed-iteration mode: no convergence action
-            ranks = new_ranks
-            if iter_walls is not None:
-                iter_walls.append(_time.monotonic() - _t_it)
-            if runner is not None:
-                runner.checkpoint(it + 1, ranks, {"err": float(err) if err != float("inf") else -1.0})
-            if err < n * tol:
-                break
-    nodes_flags.unpersist(False)
-    return ck.finish(ranks).select("vertex", "score")
+                # materialize (truncate lineage/plan growth) only periodically —
+                # intermediate supersteps live as shuffle outputs that Spark reuses,
+                # so a fixed-iteration run executes as ONE dag with no per-superstep
+                # driver round-trip
+                interval = max(1, checkpoint_interval)
+                if tol > 0 or runner is not None or (it + 1) % interval == 0 or it + 1 == max_iter:
+                    new_ranks = s.checkpoint(new_ranks)
+                if tol > 0:
+                    err = (
+                        new_ranks.alias("a")
+                        .join(ranks.alias("b"), "vertex")
+                        .agg(F.sum(F.abs(F.col("a.score") - F.col("b.score"))))
+                        .first()[0]
+                    )
+                else:
+                    err = float("inf")  # fixed-iteration mode: no convergence action
+                ranks = new_ranks
+                if iter_walls is not None:
+                    iter_walls.append(_time.monotonic() - _t_it)
+                if runner is not None:
+                    runner.checkpoint(it + 1, ranks, {"err": float(err) if err != float("inf") else -1.0})
+                if err < n * tol:
+                    break
+        return s.keep(ranks).select("vertex", "score")
 
 
 def personalized_pagerank(
@@ -445,72 +435,72 @@ def personalized_pagerank(
     lazily chained like pagerank(); the seed indicator rides along as a
     column so each superstep's teleport needs no extra join."""
     edges = edges.select("src", "dst", F.col("weight").cast("double"))
-    nodes = vertices(edges).cache()
-    n = nodes.count()
-    if n == 0:
-        return spark.createDataFrame([], "vertex long, score double")
-    seed_df = F.broadcast(seeds.select("vertex").distinct().withColumn("is_seed", F.lit(1)))
-    nodes_s = nodes.join(seed_df, "vertex", "left").select(
-        "vertex", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
-    ).cache()
-    n_seeds = nodes_s.agg(F.sum("is_seed")).first()[0]
-    if not n_seeds:
-        raise ValueError("personalized_pagerank: no seed vertex exists in the graph")
-
-    from pyspark.sql import Window
-
-    # static across supersteps — window-built (see pagerank), eager join-key
-    # layout only when the run is long enough to amortize it
-    if stable_layout is None:
-        stable_layout = max_iter > 8
-    base = edges.repartition("src") if stable_layout else edges
-    trans = base.select(
-        "src",
-        "dst",
-        (F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))).alias("p"),
-    ).cache()
-    if stable_layout:
-        trans.count()
-    srcs = edges.select(F.col("src").alias("vertex")).distinct()
-    dangling = nodes.join(srcs, "vertex", "left_anti").cache()
-    has_dangling = dangling.count() > 0
-
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
-
-    ck = CheckpointCycler(spark)
-    # start from the restart distribution (uniform over seeds)
-    ranks = ck.checkpoint(
-        nodes_s.withColumn(
-            "score", F.col("is_seed").cast("double") / F.lit(float(n_seeds))
-        )
-    )
-    for it in range(max_iter):
-        contribs = (
-            trans.join(ranks, trans.src == ranks.vertex)
-            .groupBy("dst")
-            .agg(F.sum(F.col("p") * F.col("score")).alias("contrib"))
-        )
-        joined = nodes_s.join(contribs, nodes_s.vertex == contribs.dst, "left")
-        if has_dangling:
-            dm = dangling.join(ranks, "vertex").agg(
-                F.coalesce(F.sum("score"), F.lit(0.0)).alias("dmass")
+    with scope() as s:
+        nodes = s.cache(vertices(edges))
+        n = nodes.count()
+        if n == 0:
+            return spark.createDataFrame([], "vertex long, score double")
+        seed_df = F.broadcast(seeds.select("vertex").distinct().withColumn("is_seed", F.lit(1)))
+        nodes_s = s.cache(
+            nodes.join(seed_df, "vertex", "left").select(
+                "vertex", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
             )
-            joined = joined.crossJoin(F.broadcast(dm))
-            extra = F.col("dmass") / F.lit(float(n_seeds))
-        else:
-            extra = F.lit(0.0)
-        restart = F.col("is_seed").cast("double") / F.lit(float(n_seeds))
-        new_ranks = joined.select(
-            "vertex",
-            "is_seed",
-            (
-                F.lit(1.0 - alpha) * restart
-                + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra * F.col("is_seed"))
-            ).alias("score"),
         )
-        if (it + 1) % 5 == 0 or it + 1 == max_iter:
-            new_ranks = ck.checkpoint(new_ranks)
-        ranks = new_ranks
-    for c in (nodes, nodes_s, trans, dangling):
-        c.unpersist(False)
-    return ck.finish(ranks).select("vertex", "score")
+        n_seeds = nodes_s.agg(F.sum("is_seed")).first()[0]
+        if not n_seeds:
+            raise ValueError("personalized_pagerank: no seed vertex exists in the graph")
+
+        from pyspark.sql import Window
+
+        # static across supersteps — window-built (see pagerank), eager join-key
+        # layout only when the run is long enough to amortize it
+        if stable_layout is None:
+            stable_layout = max_iter > 8
+        base = edges.repartition("src") if stable_layout else edges
+        trans = s.cache(
+            base.select(
+                "src",
+                "dst",
+                (F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))).alias("p"),
+            )
+        )
+        if stable_layout:
+            trans.count()
+        srcs = edges.select(F.col("src").alias("vertex")).distinct()
+        dangling = s.cache(nodes.join(srcs, "vertex", "left_anti"))
+        has_dangling = dangling.count() > 0
+
+        # start from the restart distribution (uniform over seeds)
+        ranks = s.checkpoint(
+            nodes_s.withColumn(
+                "score", F.col("is_seed").cast("double") / F.lit(float(n_seeds))
+            )
+        )
+        for it in range(max_iter):
+            contribs = (
+                trans.join(ranks, trans.src == ranks.vertex)
+                .groupBy("dst")
+                .agg(F.sum(F.col("p") * F.col("score")).alias("contrib"))
+            )
+            joined = nodes_s.join(contribs, nodes_s.vertex == contribs.dst, "left")
+            if has_dangling:
+                dm = dangling.join(ranks, "vertex").agg(
+                    F.coalesce(F.sum("score"), F.lit(0.0)).alias("dmass")
+                )
+                joined = joined.crossJoin(F.broadcast(dm))
+                extra = F.col("dmass") / F.lit(float(n_seeds))
+            else:
+                extra = F.lit(0.0)
+            restart = F.col("is_seed").cast("double") / F.lit(float(n_seeds))
+            new_ranks = joined.select(
+                "vertex",
+                "is_seed",
+                (
+                    F.lit(1.0 - alpha) * restart
+                    + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra * F.col("is_seed"))
+                ).alias("score"),
+            )
+            if (it + 1) % 5 == 0 or it + 1 == max_iter:
+                new_ranks = s.checkpoint(new_ranks)
+            ranks = new_ranks
+        return s.keep(ranks).select("vertex", "score")

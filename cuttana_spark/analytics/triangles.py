@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuttana_spark.analytics.graphstore import vertices
+from cuttana_spark.plans.checkpoints import scope
 
 
 def oriented_edges(edges: DataFrame) -> DataFrame:
@@ -56,32 +57,36 @@ def triangle_count(spark: SparkSession, edges: DataFrame) -> DataFrame:
     once: as the wedge (b,c) at apex a, closed by the oriented edge b→c.
     (Filtering wedge pairs by plain id order would miss triangles where the
     degree order disagrees with the id order.)"""
-    o = oriented_edges(edges).cache()
-    e1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    wedges = e1.join(e2, "x").filter(F.col("y") != F.col("z"))
-    closed = wedges.join(
-        o.select(F.col("a").alias("y"), F.col("b").alias("z")), ["y", "z"]
-    )
-    return closed.agg(F.count(F.lit(1)).alias("triangles"))
+    with scope() as s:
+        o = s.cache(oriented_edges(edges))
+        e1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        e2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
+        wedges = e1.join(e2, "x").filter(F.col("y") != F.col("z"))
+        closed = wedges.join(
+            o.select(F.col("a").alias("y"), F.col("b").alias("z")), ["y", "z"]
+        )
+        return s.keep(closed.agg(F.count(F.lit(1)).alias("triangles")))
 
 
 def triangles_per_vertex(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """DataFrame[vertex, triangles] — per-vertex triangle participation."""
-    o = oriented_edges(edges).cache()
-    e1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    wedges = e1.join(e2, "x").filter(F.col("y") != F.col("z"))
-    closed = wedges.join(
-        o.select(F.col("a").alias("y"), F.col("b").alias("z")), ["y", "z"]
-    ).cache()
-    per = (
-        closed.select(F.col("x").alias("vertex"))
-        .unionAll(closed.select(F.col("y").alias("vertex")))
-        .unionAll(closed.select(F.col("z").alias("vertex")))
-        .groupBy("vertex")
-        .agg(F.count(F.lit(1)).alias("triangles"))
-    )
-    return vertices(edges).join(per, "vertex", "left").select(
-        "vertex", F.coalesce("triangles", F.lit(0)).alias("triangles")
-    )
+    with scope() as s:
+        o = s.cache(oriented_edges(edges))
+        e1 = o.select(F.col("a").alias("x"), F.col("b").alias("y"))
+        e2 = o.select(F.col("a").alias("x"), F.col("b").alias("z"))
+        wedges = e1.join(e2, "x").filter(F.col("y") != F.col("z"))
+        closed = s.cache(
+            wedges.join(o.select(F.col("a").alias("y"), F.col("b").alias("z")), ["y", "z"])
+        )
+        per = (
+            closed.select(F.col("x").alias("vertex"))
+            .unionAll(closed.select(F.col("y").alias("vertex")))
+            .unionAll(closed.select(F.col("z").alias("vertex")))
+            .groupBy("vertex")
+            .agg(F.count(F.lit(1)).alias("triangles"))
+        )
+        return s.keep(
+            vertices(edges).join(per, "vertex", "left").select(
+                "vertex", F.coalesce("triangles", F.lit(0)).alias("triangles")
+            )
+        )

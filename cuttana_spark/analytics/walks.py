@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cuttana_spark.operators.text import portable_hash64
+from cuttana_spark.plans.checkpoints import scope
 
 
 def walk_adjacency(edges: DataFrame, max_nbrs_per_row: int = 65536) -> DataFrame:
@@ -76,26 +77,27 @@ def random_walks(
     """edges: undirected (src, dst[, weight]); starts: DataFrame[walk_id,
     vertex] (walk_id unique). Returns (walk_id, step, vertex) for steps
     0..walk_length (step 0 = the start vertex)."""
-    adj = walk_adjacency(edges, max_nbrs_per_row=max_nbrs_per_row).cache()
+    with scope() as s:
+        adj = s.cache(walk_adjacency(edges, max_nbrs_per_row=max_nbrs_per_row))
 
-    frontier = starts.select("walk_id", "vertex")
-    out = [frontier.withColumn("step", F.lit(0))]
-    for step in range(1, walk_length + 1):
-        key = F.concat_ws("|", F.col("walk_id").cast("string"), F.lit(str(step)))
-        idx = F.pmod(portable_hash64(key), F.col("_dtot"))
-        stepped = (
-            frontier.join(adj, "vertex")
-            .filter((idx >= F.col("_start")) & (idx < F.col("_start") + F.col("_clen")))
-            .select(
-                "walk_id",
-                F.element_at(
-                    "nbrs", (idx - F.col("_start") + 1).cast("int")
-                ).alias("vertex"),
+        frontier = starts.select("walk_id", "vertex")
+        out = [frontier.withColumn("step", F.lit(0))]
+        for step in range(1, walk_length + 1):
+            key = F.concat_ws("|", F.col("walk_id").cast("string"), F.lit(str(step)))
+            idx = F.pmod(portable_hash64(key), F.col("_dtot"))
+            stepped = (
+                frontier.join(adj, "vertex")
+                .filter((idx >= F.col("_start")) & (idx < F.col("_start") + F.col("_clen")))
+                .select(
+                    "walk_id",
+                    F.element_at(
+                        "nbrs", (idx - F.col("_start") + 1).cast("int")
+                    ).alias("vertex"),
+                )
             )
-        )
-        out.append(stepped.withColumn("step", F.lit(step)))
-        frontier = stepped
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res.select("walk_id", "step", "vertex")
+            out.append(stepped.withColumn("step", F.lit(step)))
+            frontier = stepped
+        res = out[0]
+        for df in out[1:]:
+            res = res.unionByName(df)
+        return s.keep(res.select("walk_id", "step", "vertex"))

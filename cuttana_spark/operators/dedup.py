@@ -23,12 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cuttana_spark.operators.edges import _swap_ephemeral
 from cuttana_spark.operators.text import normalized, portable_hash64, shingles
+from cuttana_spark.plans.checkpoints import slot
 
-# the shingle relation a call's passes all scan is persisted in this one
-# ephemeral slot, so the next shingle-based call releases the previous
-# call's cache (edges._swap_ephemeral)
+# the shingle relation a call's passes all scan is cached in this one slot,
+# so the next shingle-based call releases the previous call's cache
 SHINGLE_SLOT = "shingles"
 
 
@@ -85,7 +84,7 @@ def minhash_pairs(
     n-gram Jaccard. Returns (doc_a, doc_b, jaccard) with doc_a < doc_b,
     jaccard >= threshold."""
     rows = num_hashes // bands
-    sh = _swap_ephemeral(SHINGLE_SLOT, shingles(df, text_col, n=shingle_n))
+    sh = slot(SHINGLE_SLOT).cache(shingles(df, text_col, n=shingle_n))
     sig = _signatures_from_shingles(sh, num_hashes)
     banded = sig.select(
         "doc_id",
@@ -114,7 +113,7 @@ def ngram_jaccard_for_pairs(
     df: DataFrame, pairs: DataFrame, text_col: str = "text", shingle_n: int = 3
 ) -> DataFrame:
     """Exact Jaccard for given (doc_a, doc_b) pairs via the shingle index."""
-    sh = _swap_ephemeral(SHINGLE_SLOT, shingles(df, text_col, n=shingle_n))
+    sh = slot(SHINGLE_SLOT).cache(shingles(df, text_col, n=shingle_n))
     return _jaccard_from_shingles(sh, pairs)
 
 
@@ -167,7 +166,7 @@ def ngram_jaccard_pairs(
     of getting silently reduced recall. When 0, the result is bit-identical
     to the uncapped computation.
     """
-    sh = _swap_ephemeral(SHINGLE_SLOT, shingles(df, text_col, n=shingle_n))
+    sh = slot(SHINGLE_SLOT).cache(shingles(df, text_col, n=shingle_n))
     hot_df = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df_count"))

@@ -23,28 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cuttana_spark.plans.checkpoints import slot
+
+
 def _turn_key():
     return F.format_string("turn|%s|%05d", F.col("conv_id"), F.col("turn_idx"))
-
-
-# one live ephemeral cache per slot: the NEXT call of the same slot releases
-# the previous call's blocks, so repeated derivations never accumulate dead
-# cached data (single-driver usage; a second concurrent derivation over a
-# different input would thrash the slot but stay correct — recompute, not
-# wrong data).
-_EPHEMERAL: dict[str, DataFrame] = {}
-
-
-def _swap_ephemeral(slot: str, df: DataFrame) -> DataFrame:
-    prev = _EPHEMERAL.pop(slot, None)
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:
-            pass
-    df = df.persist()
-    _EPHEMERAL[slot] = df
-    return df
 
 
 def transcript_edge_pairs(transcripts: DataFrame) -> DataFrame:
@@ -160,16 +143,14 @@ def transcript_edges(transcripts: DataFrame, mode: str = "sort") -> tuple[DataFr
     strings.
 
     Round 7 (hash mode): the canonical pair stream is persisted (one live
-    cache per call family — see _swap_ephemeral) because BOTH returned
+    cache per call family — see checkpoints.slot) because BOTH returned
     relations consume it and typical callers run >=2 actions over them
     (edge count, node count, collision check): without the cache every
     action re-executed the scan + lag window + explode (~3x the derivation
     cost in bench.py's timed section). The cache is an intermediate inside
     the computation, released on the next derivation call."""
     if mode == "hash":
-        pairs = _swap_ephemeral(
-            "transcript_pairs", transcript_edge_pairs(transcripts)
-        )
+        pairs = slot("transcript_pairs").cache(transcript_edge_pairs(transcripts))
         nodes = node_ids(pairs, mode="hash")
         edges = (
             pairs.select(

@@ -161,7 +161,8 @@ def ivf_probe_gemm(
     from pyspark.sql import Window
 
     C = centroids
-    nq_total = queries.count()
+    # bounded: only whether the query set fits the broadcast cap matters
+    nq_total = queries.limit(max_broadcast_queries + 1).count()
     if nq_total == 0:
         return queries.sparkSession.createDataFrame(
             [], "query_id long, match_id long, cosine double, rank int"

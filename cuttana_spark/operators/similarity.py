@@ -118,15 +118,15 @@ def brute_force_topk_gemm(
     oracle-checkable reference implementation)."""
     import pandas as pd
 
-    nq_total = queries.count()
-    if nq_total > max_queries:
+    # one bounded collect: the cap check needs no separate count job
+    qrows = queries.select("vec_id", "embedding").limit(max_queries + 1).collect()
+    if len(qrows) > max_queries:
         raise ValueError(
             f"brute_force_topk_gemm collects the query set to the driver; got "
-            f"{nq_total} queries > max_queries={max_queries}. Use lsh_topk_gemm "
+            f"more than max_queries={max_queries} queries. Use lsh_topk_gemm "
             f"or ivf_topk_gemm for distributed query sides, or raise max_queries "
             f"explicitly if the driver can hold it."
         )
-    qrows = queries.select("vec_id", "embedding").collect()
     qids = np.array([r.vec_id for r in qrows], np.int64)
     Q = np.array([list(r.embedding) for r in qrows], np.float64)
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)

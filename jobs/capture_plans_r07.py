@@ -49,19 +49,20 @@ def main() -> None:
 
     sym = E.symmetrize(eids).repartition(32, "src")
 
-    # pagerank: capture the LAZY 5-superstep DAG (checkpoint monkeypatched to
-    # identity — the real call eagerly checkpoints the last superstep, whose
-    # plan is then just a LogicalRDD scan and shows nothing)
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
+    # pagerank and triangles: capture the LAZY plans (checkpoint and keep
+    # monkeypatched to identity — the real calls eagerly checkpoint their
+    # result, whose plan is then just a LogicalRDD scan and shows nothing)
+    from cuttana_spark.analytics.pagerank import pagerank as pagerank_df
+    from cuttana_spark.analytics.triangles import triangle_count
+    from cuttana_spark.plans.checkpoints import Scope
 
-    orig_ck = CheckpointCycler.checkpoint
-    CheckpointCycler.checkpoint = lambda self, df: df
+    orig = Scope.checkpoint, Scope.keep
+    Scope.checkpoint = Scope.keep = lambda self, df: df
     try:
-        from cuttana_spark.analytics.pagerank import pagerank as pagerank_df
-
         dump("pagerank_df_5it", pagerank_df(spark, sym, max_iter=5, tol=0.0))
+        dump("triangles", triangle_count(spark, eids.select("src", "dst")))
     finally:
-        CheckpointCycler.checkpoint = orig_ck
+        Scope.checkpoint, Scope.keep = orig
 
     # one CC round body (the loop is driver-side; the round plan is the unit)
     from cuttana_spark.analytics.components import _large_star, _small_star
@@ -70,10 +71,6 @@ def main() -> None:
         F.col("a") != F.col("b")
     )
     dump("cc_round", _small_star(_large_star(e)))
-
-    from cuttana_spark.analytics.triangles import triangle_count
-
-    dump("triangles", triangle_count(spark, eids.select("src", "dst")))
 
     from cuttana_spark.operators.dedup import minhash_pairs
 

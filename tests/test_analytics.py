@@ -9,9 +9,15 @@ from pyspark.sql import functions as F
 
 from cuttana_spark.analytics.components import connected_components
 from cuttana_spark.analytics.graphstore import Graph
-from cuttana_spark.analytics.labelprop import label_propagation, label_propagation_oracle
-from cuttana_spark.analytics.pagerank import pagerank, pagerank_csr
+from cuttana_spark.analytics.kcore import k_core, k_core_csr
+from cuttana_spark.analytics.labelprop import (
+    label_propagation,
+    label_propagation_csr,
+    label_propagation_oracle,
+)
+from cuttana_spark.analytics.pagerank import pagerank, pagerank_csr, personalized_pagerank
 from cuttana_spark.analytics.triangles import triangle_count, triangles_per_vertex
+from cuttana_spark.analytics.walks import random_walks
 
 
 def _ba_graph(n=200, m=3, seed=7):
@@ -439,79 +445,176 @@ def test_random_walks_deterministic_replay(spark, G, edges_df):
     assert out1 == sorted(want)
 
 
-def test_iterative_checkpoints_do_not_accumulate(spark):
-    """Superseded localCheckpoints must be unpersisted as the loop advances:
-    a 25-superstep pagerank (5 checkpoint generations) and a CC run leave
-    only the final generation pinned, not one RDD per round. (Leaked pinned
-    blocks were the round-2 run-to-run variance root cause.)"""
-    from pyspark.sql import functions as F
+def _pinned(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    from cuttana_spark.analytics.components import connected_components
-    from cuttana_spark.analytics.pagerank import pagerank
 
-    sc = spark.sparkContext
-    n_pinned = lambda: len(sc._jsc.getPersistentRDDs())
+def _nothing_cached(spark) -> bool:
+    # sees lazy caches that have registered but not filled yet, which
+    # getPersistentRDDs does not list
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
+
+def _rdd_id(df) -> int:
+    """Id of the RDD behind a checkpointed frame's LogicalRDD plan."""
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+def _cycle60(spark):
+    """The 60-cycle, as (undirected edges, symmetrized directed edges)."""
     edges = spark.createDataFrame(
         [(i, (i + 1) % 60, 1.0) for i in range(60)], "src long, dst long, weight double"
     )
     sym = edges.unionAll(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
     )
-    before = n_pinned()
-    pagerank(spark, sym, max_iter=25, tol=0.0).collect()
-    assert n_pinned() - before <= 2  # final checkpoint only (+1 slack)
-
-    before = n_pinned()
-    connected_components(spark, edges).collect()
-    assert n_pinned() - before <= 3  # final edge fixpoint + nodes cache
+    return edges, sym
 
 
-def test_cycler_spares_upstream_cache_filled_inside_checkpoint_job(spark):
+# every public analytics op, as op(spark, edges, sym, runner) on the 60-cycle
+ANALYTICS_OPS = {
+    "pagerank": lambda spark, e, sym, r: pagerank(spark, sym, max_iter=25, tol=0.0, runner=r),
+    "pagerank_csr": lambda spark, e, sym, r: pagerank_csr(
+        spark, sym, None, max_iter=10, tol=0.0, hash_partitions=4
+    ),
+    "personalized_pagerank": lambda spark, e, sym, r: personalized_pagerank(
+        spark, sym, spark.createDataFrame([(0,), (7,)], "vertex long"), max_iter=10
+    ),
+    "label_propagation": lambda spark, e, sym, r: label_propagation(
+        spark, e, max_iter=5, runner=r
+    ),
+    "label_propagation_csr": lambda spark, e, sym, r: label_propagation_csr(
+        spark, e, None, max_iter=5, hash_partitions=4
+    ),
+    "k_core": lambda spark, e, sym, r: k_core(spark, e, k=2),
+    "k_core_csr": lambda spark, e, sym, r: k_core_csr(spark, e, None, k=2, hash_partitions=4),
+    "connected_components": lambda spark, e, sym, r: connected_components(spark, e, runner=r),
+    "connected_components-accel": lambda spark, e, sym, r: connected_components(
+        spark, e, accel_rounds=2, accel_min_edges=1, accel_partitions=4
+    ),
+    "triangle_count": lambda spark, e, sym, r: triangle_count(spark, e),
+    "triangles_per_vertex": lambda spark, e, sym, r: triangles_per_vertex(spark, e),
+    "random_walks": lambda spark, e, sym, r: random_walks(
+        spark, e, spark.createDataFrame([(w, w) for w in range(10)], "walk_id long, vertex long")
+    ),
+}
+
+
+@pytest.mark.parametrize("op", ANALYTICS_OPS)
+def test_iterative_checkpoints_do_not_accumulate(spark, op):
+    """A public analytics op leaves exactly its result behind: superseded
+    localCheckpoints are released as the loop advances, every cache the op
+    made is released on return, and the result is at most one pinned
+    generation. (Leaked pinned blocks were the round-2 run-to-run variance
+    root cause.) The cycle runs pagerank 25 supersteps (5 checkpoint
+    generations) and CC to its fixpoint."""
+    spark.catalog.clearCache()
+    edges, sym = _cycle60(spark)
+    before = _pinned(spark)
+    ANALYTICS_OPS[op](spark, edges, sym, None).collect()
+    assert len(_pinned(spark) - before) <= 1
+    assert _nothing_cached(spark)
+
+
+@pytest.mark.parametrize(
+    "op", ["pagerank", "label_propagation", "connected_components", "personalized_pagerank"]
+)
+def test_failed_call_releases_everything(spark, tmp_path, op):
+    """A call that raises mid-loop (injected runner failure) or before its
+    loop (no seed in the graph) leaves no generation and no cache behind."""
+    from cuttana_spark.analytics.supersteps import SuperstepRunner
+    from cuttana_spark.plans.warehouse import Warehouse
+
+    spark.catalog.clearCache()
+    edges, sym = _cycle60(spark)
+    if op == "personalized_pagerank":
+        missing = spark.createDataFrame([(1000,)], "vertex long")
+        call, error = lambda: personalized_pagerank(spark, sym, missing), ValueError
+    else:
+        runner = SuperstepRunner(
+            spark, Warehouse(str(tmp_path / "wh")), op, interval=1, fail_after=1
+        )
+        call = lambda: ANALYTICS_OPS[op](spark, edges, sym, runner)
+        error = RuntimeError
+    before = _pinned(spark)
+    with pytest.raises(error):
+        call()
+    assert _pinned(spark) - before == set()
+    assert _nothing_cached(spark)
+
+
+def test_scope_spares_upstream_cache_filled_inside_checkpoint_job(spark):
     """An upstream .cache() registers its RDD lazily during its FIRST job —
-    which here is the first checkpoint's eager materialization. The cycler
-    must not attribute that cached RDD to a checkpoint generation (it would
-    be blocking-unpersisted two checkpoints later, silently de-caching a
-    live input for every remaining round — the k-core peel regression)."""
-    from pyspark.sql import functions as F
-
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
-
-    sc = spark.sparkContext
-    pinned = lambda: set(sc._jsc.getPersistentRDDs().keys())
+    which here is the first checkpoint's eager materialization. The scope
+    must not take that cached RDD for a checkpoint generation (it would be
+    released two checkpoints later, silently de-caching a live input for
+    every remaining round — the k-core peel regression)."""
+    from cuttana_spark.plans.checkpoints import scope
 
     base = spark.range(500).select(F.col("id").alias("v")).cache()  # lazy
-    ck = CheckpointCycler(spark)
-    before = pinned()
-    state = ck.checkpoint(base.select("v"))  # cache fill happens in this job
-    cache_ids = (pinned() - before) - ck._gens[0]
-    assert cache_ids, "expected the lazily-filled cache to register here"
-    assert ck._gens[0], "checkpoint generation must track its own RDD"
-    for i in range(4):  # enough rounds to retire generation 0 twice over
-        state = ck.checkpoint(state.select((F.col("v") + 1).alias("v")))
-    assert cache_ids <= pinned(), "upstream cache was unpersisted by the cycler"
-    state.collect()
+    with scope() as s:
+        before = _pinned(spark)
+        state = s.checkpoint(base.select("v"))  # cache fill happens in this job
+        cache_ids = (_pinned(spark) - before) - {_rdd_id(state)}
+        assert cache_ids, "expected the lazily-filled cache to register here"
+        for i in range(4):  # enough rounds to retire generation 0 twice over
+            state = s.checkpoint(state.select((F.col("v") + 1).alias("v")))
+        assert cache_ids <= _pinned(spark), "upstream cache was released by the scope"
+        state = s.keep(state)
+    assert cache_ids <= _pinned(spark), "upstream cache was released on scope exit"
+    assert state.count() == 500
     base.unpersist(True)
 
 
-def test_cycler_close_releases_every_generation(spark):
-    """close() retires ALL tracked generations (used by the CC contraction
-    pre-pass after the result is re-checkpointed through another cycler)."""
-    from pyspark.sql import functions as F
+def test_scope_exit_releases_every_generation_but_kept(spark):
+    """Scope exit releases every generation and cache it made except the
+    kept one — on the error path too. Keeping the newest generation only
+    un-tracks it; keeping any other frame checkpoints it."""
+    from cuttana_spark.plans.checkpoints import scope
 
-    from cuttana_spark.plans.checkpoints import CheckpointCycler
+    spark.catalog.clearCache()
+    before = _pinned(spark)
+    with scope() as s:
+        state = s.checkpoint(s.cache(spark.range(100).select(F.col("id").alias("v"))))
+        for _ in range(3):
+            state = s.checkpoint(state.select((F.col("v") + 1).alias("v")))
+        assert len(_pinned(spark) - before) == 3  # the cache + two live generations
+        kept = s.keep(state)
+        assert kept is state
+        doubled = s.keep(state.select((F.col("v") * 2).alias("v")))
+    assert _pinned(spark) - before == {_rdd_id(kept), _rdd_id(doubled)}
+    assert _nothing_cached(spark)
+    assert sorted(r.v for r in kept.collect()) == list(range(3, 103))
+    assert sorted(r.v for r in doubled.collect()) == list(range(6, 206, 2))
 
-    sc = spark.sparkContext
-    pinned = lambda: set(sc._jsc.getPersistentRDDs().keys())
-    before = pinned()
-    ck = CheckpointCycler(spark, keep_generations=1)
-    state = ck.checkpoint(spark.range(100).select(F.col("id").alias("v")))
-    state = ck.checkpoint(state.select((F.col("v") + 1).alias("v")))
-    tracked = set().union(*ck._gens)
-    assert tracked & pinned(), "expected live checkpoint generations"
-    ck.close()
-    assert not ck._gens
-    assert not (tracked & pinned()), "close() left checkpoint blocks pinned"
+    before = _pinned(spark)
+    with pytest.raises(RuntimeError):
+        with scope() as s:
+            s.checkpoint(s.cache(spark.range(10)))
+            raise RuntimeError("mid-loop failure")
+    assert _pinned(spark) - before == set()
+    assert _nothing_cached(spark)
+
+
+def test_nested_scope_spares_outer_generation(spark):
+    """An inner scope's checkpoints never retire the outer chain's
+    generation, and a result the outer scope keeps survives the inner
+    scope's exit."""
+    from cuttana_spark.plans.checkpoints import scope
+
+    before = _pinned(spark)
+    with scope() as outer:
+        e = outer.checkpoint(spark.range(50).select(F.col("id").alias("v")))
+        with scope() as inner:
+            x = inner.checkpoint(e.select("v", (F.col("v") + 1).alias("w")))
+            for _ in range(3):
+                x = inner.checkpoint(x.select("v", (F.col("w") + 1).alias("w")))
+            assert _rdd_id(e) in _pinned(spark)
+            out = outer.keep(e.join(x, "v"))
+        pinned = _pinned(spark)
+        assert _rdd_id(e) in pinned and _rdd_id(x) not in pinned
+    assert _pinned(spark) - before == {_rdd_id(out)}
+    assert sorted((r.v, r.w) for r in out.collect()) == [(v, v + 4) for v in range(50)]
 
 
 def test_block_store_arena_sharing_and_invalidation(spark, tmp_path, monkeypatch):
