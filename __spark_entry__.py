@@ -626,11 +626,11 @@ def _q_pagerank_csr_transcripts(spark, sf_dir):
     """CSR-block PageRank over Cuttana partitions, checked against the
     df-join engine in one graded query. ``pagerank_csr`` gathers against
     the executor-resident block store (blockstore.py: only the O(V)
-    frontier enters each superstep's plan; workers mmap decoded blocks from
-    the node-shared arena); ``resident_match`` asserts its per-vertex
-    e9-rounded scores equal the df-join ``pagerank``'s after the same 3
-    supersteps — a different engine, so a transport bug (stale arena, wrong
-    pid routing, dropped chunk) or a kernel bug fails the driver hash. The
+    frontier enters each superstep's plan; workers map the store's packed
+    .npy files); ``resident_match`` asserts its per-vertex e9-rounded
+    scores equal the df-join ``pagerank``'s after the same 3 supersteps — a
+    different engine, so a transport bug (stale store handle, wrong pid
+    routing, dropped chunk) or a kernel bug fails the driver hash. The
     two engines' scores differ only in summation order, far below e9.
     Oracled: the scores are partition-independent, so 3 unrolled relational
     PR supersteps (_pagerank_csr_sql) check the CSR gather-scatter

@@ -5,38 +5,52 @@ contraction pre-pass all gather over packed CSR blocks (csr.py), and all of
 them keep those blocks here, next to the workers:
 
 * ``write_block_store`` packs the blocks ONCE (csr.pack_blocks — one
-  routing shuffle) and lays them out as a parquet dataset partitioned by
-  ``partition_id`` — one directory per Cuttana partition, readable without
-  Spark by any worker (local disk here; DFS/object store on a cluster).
+  routing shuffle). Each pack task writes its partition's arrays straight
+  into the store directory in the layout workers map: one ``.npy`` file
+  per array (``<pid>.src_idx.npy``, ``.ud``, ``.inv``, ``.ps``, chunks back
+  to back) and a ``<pid>.meta.json`` with every chunk's offsets and the
+  partition's vertex-set header (n_verts, v_min, v_max, v_digest). The pack
+  writes no intermediate format, so nothing is decoded or copied later.
 * ``gather`` runs one kernel spec (csr.PR / csr.LPA / csr.MIN) as
   ``applyInPandas`` over the frontier ALONE, grouped by partition_id.
-  Blocks never enter the plan: workers materialize them from the store
-  through a NODE-SHARED mmap arena (see the arena section below) — decoded
-  once per node, mapped read-only by every worker process — so a
-  steady-state superstep moves O(V) rows through Arrow and zero block
-  bytes: gather·multiply·bincount against shared memory-resident arrays.
+  Blocks never enter the plan: each worker ``np.load(mmap_mode="r")``s its
+  partition's files, so every Python worker on a node shares the one
+  page-cache copy of the store instead of holding a copy per process (a
+  reused worker gets a random subset of groups every superstep, so
+  per-process copies would both warm slowly and multiply RSS by the worker
+  count). A steady-state superstep moves O(V) rows through Arrow and zero
+  block bytes: gather·multiply·bincount against mapped arrays.
 * ``resident_store`` is the transport choice every algorithm shares: reuse
   (or pack) the store at a caller-given path, or pack a call-scoped store
   and drop it when the call returns.
 
-Cache coherence: arena directories and handle-cache keys include the
-store's ``_SUCCESS`` mtime at NANOSECOND resolution (``st_mtime_ns`` — a
-store rewritten within the same wall-clock second still re-keys), so
-rewriting a store under the same path invalidates stale entries naturally;
-``drop_block_store`` removes a store and every arena generation derived
-from it. Store identity: ``write_block_store`` records the input plans'
-``semanticHash`` + pack version in a ``_CUTTANA_STORE_FP`` marker, and
-``ensure_block_store`` re-packs on any mismatch — a stale store built from
-different edges/weights over the same vertex set (which the kernel's
-frontier guard cannot see) is never silently reused. At 1000-executor
-scale each node's arena holds only the partitions its tasks actually serve
-— the same working-set behavior as a JVM-cached edge RDD in GraphX,
-without shipping edges through Python and without one copy per Python
-worker. The arena obeys a byte budget (``CUTTANA_ARENA_BYTES``, default
-25% of the base filesystem) with LRU whole-partition eviction and falls
-back to the local tempdir when the tmpfs base is absent or full — a node
-serving many partitions degrades to page-cache speed instead of
-exhausting /dev/shm.
+Where the store lives: workers reach it only through POSIX file calls, so
+``block_store`` must be a plain path (no ``s3://``, ``hdfs://`` or
+``file:`` scheme — those raise) that the driver and every executor see at
+the same location: a local directory under a ``local[...]`` master, a
+shared mount (NFS, Lustre, a FUSE-mounted bucket) on a cluster. A partition
+whose meta file a worker cannot see raises, naming the store and the
+partition, instead of reading as "no edges".
+
+Commit protocol: a partition is complete when its meta file exists. Arrays
+are committed first and meta last, each through a private tmp name and
+``os.replace``, so a reader never maps a half-written partition, and a
+retried or speculative pack task rewrites identical bytes harmlessly. The
+driver then writes the ``_CUTTANA_STORE_FP`` fingerprint and last the
+``_SUCCESS`` marker.
+
+Cache coherence: each worker keeps its mapped views in a handle cache keyed
+by the store path AND its ``_SUCCESS`` mtime at NANOSECOND resolution
+(``st_mtime_ns``). A store rewritten under the same path — even within the
+same wall-clock second — re-keys, so a reused worker never serves views of
+the previous generation's (unlinked) files; the next cache miss also
+forgets the handles of dropped or rewritten stores, whose mappings would
+otherwise pin the dead files' pages. Store identity: ``write_block_store``
+records the input plans' ``semanticHash`` + pack version in the
+``_CUTTANA_STORE_FP`` marker, and ``ensure_block_store`` re-packs on any
+mismatch — a stale store built from different edges/weights over the same
+vertex set (which the kernel's frontier guard cannot see) is never silently
+reused, and a store of an older layout is repacked, never misread.
 
 Measured: the resident store was the fastest PageRank transport at bench
 scale (round 5: 9.17 s vs cached-cogroup 10.20 s / df-join 11.01 s, 5
@@ -44,9 +58,12 @@ supersteps) and the best-scaling one (N→4N efficiency 0.81-0.87, CPU-seconds
 +7-13% where the cogroup path inflated +34%). The cached-cogroup and
 bucketed-table transports, which re-fed every block byte through Arrow each
 superstep, were removed once no measured regime favored them (BENCH.md,
-"One block transport"). Scores from different transports, maps or chunk
-sizes are equal up to summation order, not bit-identical: the kernels add a
-vertex's contributions block by block.
+"One block transport"). Writing the mapped layout directly, instead of a
+parquet dataset that each node decoded into a mapped copy, cut the traced
+wall of perfbench's three CSR calls by 23 % (BENCH.md, "Block store
+layout"). Scores from
+different transports, maps or chunk sizes are equal up to summation order,
+not bit-identical: the kernels add a vertex's contributions block by block.
 
 The reference (Jacob-Chmura/cuttana, src/partitioner.rs) is the partitioner
 that PRODUCES the vertex→partition map; this store is how the analytics
@@ -55,15 +72,14 @@ layer monetizes that map's locality at scale.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import re
+import shutil
 import tempfile
 from collections import OrderedDict
 from contextlib import contextmanager
+from urllib.parse import urlparse
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from cuttana_spark.analytics.csr import (
@@ -72,6 +88,8 @@ from cuttana_spark.analytics.csr import (
     _check_frontier,
     _sorted_frontier,
     _vertex_digest,
+    has_partition,
+    map_partition,
     pack_blocks,
 )
 
@@ -99,16 +117,38 @@ def store_fingerprint(g) -> str:
     return f"pack{PACK_VERSION}|{g.kind}|{h1}|{h2}|{sp}"
 
 
+def _check_plain_path(path: str) -> None:
+    """Workers open the store with POSIX file calls, which a URI cannot
+    name: refuse one before any job runs."""
+    if urlparse(path).scheme:
+        raise ValueError(
+            f"block_store {path!r} is a URI; it must be a plain path shared "
+            "by the driver and every executor (workers read it with POSIX "
+            "file calls)"
+        )
+
+
 def write_block_store(g, path: str) -> None:
     """Pack graphstore.Graph ``g`` into CSR blocks (one edge shuffle,
-    csr.pack_blocks) and write them as a parquet dataset partitioned by
-    partition_id. Overwrites ``path``; the _SUCCESS marker's mtime_ns
-    versions the store for every worker-side cache, and a _CUTTANA_STORE_FP
-    marker records the input fingerprint for ensure_block_store's reuse
-    check."""
-    pack_blocks(g).write.partitionBy("partition_id").mode("overwrite").parquet(path)
-    with open(os.path.join(path, _FP_MARKER), "w") as fh:
+    csr.pack_blocks) written straight into the directory ``path``, which is
+    cleared first. Then the _CUTTANA_STORE_FP marker records the input
+    fingerprint for ensure_block_store's reuse check, and the _SUCCESS
+    marker, written last, versions the store for every worker-side handle
+    cache by its mtime_ns."""
+    _check_plain_path(path)
+    p = os.path.abspath(path)
+    shutil.rmtree(p, ignore_errors=True)
+    os.makedirs(p)
+    for row in pack_blocks(g, p).collect():
+        if not has_partition(p, row.partition_id):
+            raise FileNotFoundError(
+                f"partition {row.partition_id} was packed but the driver cannot "
+                f"see its files under {p!r}: block_store must be a path shared "
+                "by the driver and every executor"
+            )
+    with open(os.path.join(p, _FP_MARKER), "w") as fh:
         fh.write(store_fingerprint(g))
+    open(os.path.join(p, "_SUCCESS"), "w").close()
 
 
 def ensure_block_store(g, path: str) -> None:
@@ -133,45 +173,11 @@ def ensure_block_store(g, path: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# node-shared mmap arena + per-worker handle cache
-#
-# A reused Python worker has no say in WHICH frontier groups the scheduler
-# hands it: group->worker assignment is effectively random every superstep,
-# so a purely per-process cache warms coupon-collector slowly (measured:
-# 54% miss rate after 20 supersteps at 64 partitions x 32 workers) and
-# duplicates the decoded store once per process (32x RSS on one box). The
-# fix is to share the DECODED arrays at the node level: the first worker to
-# touch a partition decodes it ONCE into flat .npy files in an arena
-# directory (tmpfs by default), committed atomically (arrays first, meta
-# last, os.replace); every other worker then np.load(mmap_mode="r")s the
-# same files, so all processes on the node share one page-cache copy and
-# every partition is warm after the first superstep (which touches all of
-# them). On a multi-node cluster each node builds only the partitions its
-# tasks actually serve; the arena is keyed by the store's _SUCCESS
-# st_mtime_ns so a rewritten store never serves stale bytes (nanosecond
-# resolution: two rewrites within one second still re-key). Concurrent
-# builders are harmless: the decode is deterministic, so last-replace-wins
-# is identical content.
-#
-# Lifecycle at scale: arena files live under a byte budget
-# (CUTTANA_ARENA_BYTES; default 25% of the base filesystem's capacity
-# available to us). Before building a new partition's files, whole
-# partitions are evicted least-recently-USED first (every successful
-# _load_arena touches the partition's meta mtime) until the new build fits.
-# Evicting a partition another process has mmap'd is safe on Linux — the
-# pages survive until the last unmap; subsequent readers rebuild. If the
-# tmpfs base is absent, or a build still hits ENOSPC after evicting
-# everything evictable, the build falls back to the local tempdir (disk) —
-# readers probe both bases, and a reader that misses simply rebuilds
-# (deterministic content), so the worst case is duplicated decode work,
-# never a wrong or missing answer.
+# per-worker handle cache over the mapped store
 # ---------------------------------------------------------------------------
 
 _CACHE: "OrderedDict[tuple, list]" = OrderedDict()
 _CACHE_ENTRIES = 4096  # mmap handles are cheap; cap guards pathological stores
-
-_ARRAYS = ("src_idx", "ud", "inv", "ps")
-_DTYPES = {"src_idx": np.int32, "ud": np.int64, "inv": np.int32, "ps": np.float64}
 
 
 def _store_key(path: str) -> tuple:
@@ -183,216 +189,17 @@ def _store_key(path: str) -> tuple:
     return (p, mtime_ns)
 
 
-def _arena_bases() -> list[str]:
-    """Candidate arena base dirs, preferred first. CUTTANA_BLOCK_ARENA pins
-    a single base (tests, or a cluster-configured local dir); the default is
-    tmpfs with a disk fallback."""
-    env = os.environ.get("CUTTANA_BLOCK_ARENA")
-    if env is not None:
-        return [env]
-    bases = []
-    if os.path.isdir("/dev/shm"):
-        bases.append("/dev/shm")
-    if tempfile.gettempdir() not in bases:
-        bases.append(tempfile.gettempdir())
-    return bases
-
-
-def _arena_name(path: str) -> str:
-    p, mtime_ns = _store_key(path)
-    h = hashlib.sha1(p.encode()).hexdigest()[:16]
-    return f"cuttana_arena_{h}_{mtime_ns}"
-
-
-def _arena_budget(base: str, usage: int) -> int:
-    """Byte budget for ALL cuttana arenas under ``base``. Explicit via
-    CUTTANA_ARENA_BYTES; default 25% of the capacity currently available to
-    us (free space + what our arenas already occupy — so a warm arena does
-    not shrink its own budget measurement)."""
-    env = os.environ.get("CUTTANA_ARENA_BYTES")
-    if env is not None:
-        return int(env)
-    try:
-        st = os.statvfs(base)
-        free = st.f_bavail * st.f_frsize
-    except OSError:
-        return 1 << 62  # unmeasurable fs: effectively unbudgeted
-    return int(0.25 * (free + usage))
-
-
-def _arena_groups(base: str) -> list[tuple[float, int, list[str]]]:
-    """All committed (meta-present) partition groups under ``base``'s
-    cuttana arenas: (meta_mtime, total_bytes, [file paths]) per group."""
-    import glob
-
-    groups = []
-    for meta in glob.glob(os.path.join(base, "cuttana_arena_*", "*.meta.json")):
-        pid_prefix = meta[: -len("meta.json")]
-        files = [meta] + [f"{pid_prefix}{a}.npy" for a in _ARRAYS]
-        try:
-            mt = os.path.getmtime(meta)
-            sz = sum(os.path.getsize(f) for f in files if os.path.exists(f))
-        except OSError:
-            continue  # concurrently evicted
-        groups.append((mt, sz, files))
-    return groups
-
-
-def _evict_for(base: str, need: int, keep_prefix: str) -> None:
-    """Evict least-recently-used whole-partition groups under ``base`` until
-    ``need`` more bytes fit in the budget (or nothing evictable remains).
-    Meta is unlinked FIRST — its presence is the readers' commit point — so
-    a half-evicted group is never served.
-
-    Accounting bound (ADVICE r6): usage counts COMMITTED groups only —
-    in-flight ``*.tmp<pid>`` files of concurrent builders and the new
-    group's meta.json are invisible to it, so with B concurrent builders
-    actual bytes can transiently exceed the budget by up to B×(largest
-    group)+meta sizes. The ENOSPC fallback in _build_arena catches the
-    physical limit; the configured budget is a steady-state bound, not a
-    hard cap during concurrent builds."""
-    groups = _arena_groups(base)
-    usage = sum(sz for _, sz, _ in groups)
-    budget = _arena_budget(base, usage)
-    if usage + need <= budget:
-        return
-    for _, sz, files in sorted(groups, key=lambda g: g[0]):
-        if files[0].startswith(keep_prefix):
-            continue
-        for f in files:  # meta first = files[0]
-            try:
-                os.unlink(f)
-            except OSError:
-                pass
-        usage -= sz
-        if usage + need <= budget:
-            return
-
-
 def drop_block_store(path: str) -> None:
-    """Remove a store directory AND every arena ever derived from it (any
-    mtime generation, any base). Benches/tests should use this instead of a
-    bare rmtree so tmpfs arenas don't outlive their store."""
-    import glob
-    import shutil
-
-    p = os.path.abspath(path)
-    shutil.rmtree(p, ignore_errors=True)
-    h = hashlib.sha1(p.encode()).hexdigest()[:16]
-    for base in {*_arena_bases(), "/dev/shm", tempfile.gettempdir()}:
-        if base and os.path.isdir(base):
-            for d in glob.glob(os.path.join(base, f"cuttana_arena_{h}_*")):
-                shutil.rmtree(d, ignore_errors=True)
-
-
-_META_FIELDS = ("n_verts", "v_min", "v_max", "v_digest")
-
-
-def _decode_table(tbl) -> list:
-    cols = tbl.to_pydict()
-    blocks = []
-    for i in range(tbl.num_rows):
-        blocks.append(
-            {
-                "n_verts": int(cols["n_verts"][i]),
-                "v_min": int(cols["v_min"][i]),
-                "v_max": int(cols["v_max"][i]),
-                "v_digest": int(cols["v_digest"][i]),
-                "src_idx": np.frombuffer(cols["src_idx"][i], np.int32),
-                "ud": np.frombuffer(cols["ud"][i], np.int64),
-                "inv": np.frombuffer(cols["inv"][i], np.int32),
-                "ps": np.frombuffer(cols["ps"][i], np.float64),
-            }
-        )
-    return blocks
-
-
-def _build_arena(part_dir: str, arena: str, pid: int) -> None:
-    """Decode one partition's parquet into flat per-array .npy files +
-    a chunk-offset meta. Commit order: arrays via os.replace first, meta
-    last — meta presence IS the commit point readers key on. Before
-    writing, LRU-evicts other partitions' arena files if the build would
-    exceed the base's byte budget. Raises OSError (ENOSPC) to the caller
-    if the base is simply full — load_blocks then falls back to the next
-    base."""
-    import pyarrow.parquet as pq
-
-    blocks = _decode_table(pq.read_table(part_dir))
-    need = sum(int(b[a].nbytes) for b in blocks for a in _ARRAYS)
-    _evict_for(
-        os.path.dirname(arena), need, os.path.join(arena, f"{pid}.")
-    )
-    os.makedirs(arena, exist_ok=True)
-    meta, cat = [], {a: [] for a in _ARRAYS}
-    offs = {a: 0 for a in _ARRAYS}
-    for b in blocks:
-        ent = {k: b[k] for k in _META_FIELDS}
-        for a in _ARRAYS:
-            ent[a] = [offs[a], offs[a] + b[a].shape[0]]
-            offs[a] += b[a].shape[0]
-            cat[a].append(b[a])
-        meta.append(ent)
-    tag = f".tmp{os.getpid()}"
-    try:
-        for a in _ARRAYS:
-            arr = (
-                np.concatenate(cat[a]) if cat[a] else np.empty(0, _DTYPES[a])
-            )
-            tmp = os.path.join(arena, f"{pid}.{a}.npy{tag}")
-            with open(tmp, "wb") as fh:
-                np.save(fh, arr)
-            os.replace(tmp, os.path.join(arena, f"{pid}.{a}.npy"))
-        mt = os.path.join(arena, f"{pid}.meta.json{tag}")
-        with open(mt, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(mt, os.path.join(arena, f"{pid}.meta.json"))
-    except OSError:
-        # base full mid-write: remove this group's partials (meta was last,
-        # so nothing half-committed is visible) and let the caller fall back
-        for a in _ARRAYS:
-            for f in (
-                os.path.join(arena, f"{pid}.{a}.npy{tag}"),
-                os.path.join(arena, f"{pid}.{a}.npy"),
-            ):
-                try:
-                    os.unlink(f)
-                except OSError:
-                    pass
-        raise
-
-
-def _load_arena(arena: str, pid: int):
-    meta_p = os.path.join(arena, f"{pid}.meta.json")
-    if not os.path.exists(meta_p):
-        return None
-    try:
-        with open(meta_p) as fh:
-            meta = json.load(fh)
-        mm = {
-            a: np.load(os.path.join(arena, f"{pid}.{a}.npy"), mmap_mode="r")
-            for a in _ARRAYS
-        }
-    except OSError:
-        return None  # evicted between the existence check and the open
-    blocks = []
-    for ent in meta:
-        b = {k: ent[k] for k in _META_FIELDS}
-        for a in _ARRAYS:
-            lo, hi = ent[a]
-            b[a] = mm[a][lo:hi]
-        blocks.append(b)
-    try:
-        os.utime(meta_p)  # LRU touch: this partition was just used
-    except OSError:
-        pass
-    return blocks
+    """Remove a store directory. Workers forget their handles on it at their
+    next cache miss (_drop_stale_handles)."""
+    shutil.rmtree(os.path.abspath(path), ignore_errors=True)
 
 
 def _drop_stale_handles() -> None:
     """Forget cached handles of stores that were dropped or rewritten since:
-    a mapped view keeps its arena file's pages (tmpfs: RAM) alive even after
-    drop_block_store unlinks it, so call-scoped stores would otherwise pin
-    one dead arena per call in every reused worker."""
+    a mapped view keeps its file's pages alive even after drop_block_store
+    unlinks it, so call-scoped stores would otherwise pin one dead store per
+    call in every reused worker."""
     live: dict = {}
     for key in list(_CACHE):
         store, path = key[0], key[0][0]
@@ -403,52 +210,18 @@ def _drop_stale_handles() -> None:
 
 
 def load_blocks(path: str, pid: int) -> list:
-    """Decoded CSR blocks for one partition: mmap views onto the node-shared
-    arena (built on first touch by whichever worker gets there first), held
-    in a small per-process handle cache. Missing partition directory (a
-    partition with vertices but no edges, or the pid=-1 dangling bucket)
-    → []. Chunk-row order within a partition is irrelevant to the kernels
-    (cross-chunk merge is np.unique-keyed). Arena bases are probed in
-    preference order (tmpfs, then disk); a build that hits ENOSPC on one
-    base falls through to the next."""
+    """CSR blocks of one partition: read-only views onto the store's own
+    .npy files, held in a small per-process handle cache. A negative
+    ``pid`` (vertices a table map lacks) has no blocks → []; a partition
+    without a meta file raises. Chunk order within a partition is irrelevant
+    to the kernels (cross-chunk merge is np.unique-keyed)."""
     key = (_store_key(path), int(pid))
     hit = _CACHE.get(key)
     if hit is not None:
         _CACHE.move_to_end(key)
         return hit
     _drop_stale_handles()
-    part_dir = os.path.join(os.path.abspath(path), f"partition_id={int(pid)}")
-    blocks = None
-    if not os.path.isdir(part_dir):
-        blocks = []
-    else:
-        name = _arena_name(path)
-        bases = _arena_bases()
-        for i, base in enumerate(bases):
-            arena = os.path.join(base, name)
-            blocks = _load_arena(arena, pid)
-            if blocks is not None:
-                break
-            try:
-                _build_arena(part_dir, arena, pid)
-            except OSError:
-                if i == len(bases) - 1:
-                    raise
-                continue
-            blocks = _load_arena(arena, pid)
-            if blocks is not None:
-                break
-        if blocks is None:
-            # terminal fallback (round 7, ADVICE r6): under a tiny arena
-            # budget with concurrent builders, a freshly built group can be
-            # evicted from every base before _load_arena runs. Decode the
-            # parquet partition straight into process memory instead of
-            # failing the superstep — the content is deterministic, so the
-            # only cost is this process forgoing the shared mmap (RSS for
-            # one partition), never a wrong or missing answer.
-            import pyarrow.parquet as pq
-
-            blocks = _decode_table(pq.read_table(part_dir))
+    blocks = [] if pid < 0 else map_partition(key[0][0], int(pid))
     _CACHE[key] = blocks
     while len(_CACHE) > _CACHE_ENTRIES:
         _CACHE.popitem(last=False)
@@ -465,14 +238,16 @@ def resident_store(spark: SparkSession, g, block_store: str | None):
     """Yield the path of a block store packed from graphstore.Graph ``g``.
 
     ``block_store`` set: ensure_block_store at that path (reused when its
-    fingerprint matches) — the caller owns its lifetime. ``block_store``
-    None: pack into a call-scoped ``tempfile.mkdtemp`` store and
-    drop_block_store it on exit, so the caller's result must be eagerly
-    checkpointed before the ``with`` block ends. A call-scoped store lives on
-    the driver's local disk, which only a ``local[...]`` master's workers can
-    read: load_blocks treats a missing partition directory as a partition
-    with no edges, so executors elsewhere would silently gather nothing."""
+    fingerprint matches) — the caller owns its lifetime, and the path must
+    be a plain path shared by the driver and every executor (a URI raises
+    ValueError). ``block_store`` None: pack into a call-scoped
+    ``tempfile.mkdtemp`` store and drop_block_store it on exit, so the
+    caller's result must be eagerly checkpointed before the ``with`` block
+    ends. A call-scoped store lives on the driver's local disk, which only a
+    ``local[...]`` master's workers can read, so any other master raises
+    ValueError up front instead of failing inside the pack."""
     if block_store is not None:
+        _check_plain_path(block_store)
         ensure_block_store(g, block_store)
         yield block_store
         return

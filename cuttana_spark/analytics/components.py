@@ -108,7 +108,7 @@ def connected_components(
     is below ``accel_min_edges``.
 
     WHEN IT PAYS (measured): the pre-pass moves O(V) per round where a star
-    round moves O(E), and its blocks stay in the node-resident mmap arena
+    round moves O(E), and its blocks stay in the mapped block store
     (blockstore.py), so it wins when E ≫ V. On the E≈V bench graph it is a
     wash — keep it off unless the graph is dense. ``block_store``:
     directory for the packed blocks, owned by the caller (drop_block_store

@@ -1,10 +1,13 @@
 """CSR-packed per-partition adjacency blocks + the gather-scatter kernel.
 
 pack_blocks: edges are routed to the Cuttana partition of their SOURCE
-vertex (one shuffle, done once) and packed into numpy CSR-ish arrays stored
-as binary columns — several chunk rows per partition so a single row never
-exceeds ~32 MB even at 10^12-edge scale. Round 5: the two per-superstep
-sorts are hoisted to pack time — each chunk stores
+vertex (one shuffle, done once) and packed into numpy CSR-ish arrays, cut
+into chunks of at most CHUNK_EDGES edges so one chunk never exceeds ~32 MB
+even at 10^12-edge scale. The pack task writes each partition's arrays
+straight into the block store directory in the layout workers map
+(blockstore.py): one ``.npy`` file per array, chunks back to back, plus a
+``<pid>.meta.json`` holding every chunk's offsets. Round 5: the two
+per-superstep sorts are hoisted to pack time — each chunk stores
 
   * ``src_idx`` (int32): the position of every edge's source in the
     partition's SORTED vertex array (replaces a per-superstep
@@ -40,6 +43,9 @@ per edge.
 
 from __future__ import annotations
 
+import json
+import os
+import uuid
 import zlib
 from typing import Callable, NamedTuple
 
@@ -52,14 +58,15 @@ CHUNK_EDGES = 2_000_000
 
 # bump when the chunk layout changes — blockstore's fingerprint includes it,
 # so stores packed by an older layout are repacked, never misread
-PACK_VERSION = 2
+PACK_VERSION = 3
 
-BLOCK_SCHEMA = (
-    "partition_id int, n_verts long, v_min long, v_max long, v_digest long, "
-    "src_idx binary, ud binary, inv binary, ps binary"
-)
+# a store holds, per partition, <pid>.<array>.npy for each of ARRAYS (the
+# chunks back to back) and <pid>.meta.json: one entry per chunk with the
+# META_FIELDS and each array's [lo, hi) offsets
+ARRAYS = ("src_idx", "ud", "inv", "ps")
+META_FIELDS = ("n_verts", "v_min", "v_max", "v_digest")
 
-_PD_DTYPES = {"int": "int32", "long": "int64", "double": "float64", "binary": object}
+_PD_DTYPES = {"int": "int32", "long": "int64", "double": "float64"}
 
 
 def empty_frame(schema: str) -> pd.DataFrame:
@@ -68,20 +75,24 @@ def empty_frame(schema: str) -> pd.DataFrame:
     return pd.DataFrame({name: pd.Series(dtype=_PD_DTYPES[t]) for name, t in cols})
 
 
-def pack_blocks(g) -> DataFrame:
-    """CSR blocks per partition_id of a graphstore.Graph: ``g.trans``
-    (src, dst, p) routed by the source's partition.
+def pack_blocks(g, path: str) -> DataFrame:
+    """Pack the CSR blocks of a graphstore.Graph into the store directory
+    ``path``: ``g.trans`` (src, dst, p) routed by the source's partition.
+    Lazy: the returned DataFrame holds one row (partition_id) per packed
+    partition, and each row's task writes that partition's files
+    when an action runs it. ``path`` must exist and be readable and
+    writable at the same location on the driver and every executor.
 
-    ``g.vp`` must map EXACTLY the graph's vertex set (the Cuttana
-    partitioner over the same graph's adjacency does). Edges are routed by
-    a left join (or by ``g.src_pid`` under an expression map, no join): an
-    edge whose source the map lacks lands in partition -1 and the pack
-    raises, and a partition map with extra vertices later fails the
-    kernel's frontier guard."""
+    Every partition of ``g.vp`` gets a meta file, a partition whose vertices
+    have no out-edges one with zero chunks. ``g.vp`` must map EXACTLY the
+    graph's vertex set (the Cuttana partitioner over the same graph's
+    adjacency does). Edges are routed by a left join (or by ``g.src_pid``
+    under an expression map, no join): an edge whose source the map lacks
+    lands in partition -1 and the pack raises, and a partition map with
+    extra vertices later fails the kernel's frontier guard."""
+    store = os.path.abspath(path)
 
     def pack(key, edge_pdf: pd.DataFrame, vp_pdf: pd.DataFrame):
-        if edge_pdf.empty:
-            return empty_frame(BLOCK_SCHEMA)
         pid = int(key[0])
         verts = np.sort(vp_pdf["vertex"].to_numpy(np.int64))
         srcs = edge_pdf["src"].to_numpy(np.int64)
@@ -98,26 +109,30 @@ def pack_blocks(g) -> DataFrame:
                 "vertex_partitions — the partition map must span the graph's "
                 "full vertex set"
             )
-        pos = pos.astype(np.int32)
-        dg = _vertex_digest(verts)
-        rows = []
+        head = {
+            "n_verts": int(verts.shape[0]),
+            "v_min": int(verts[0]),
+            "v_max": int(verts[-1]),
+            "v_digest": _vertex_digest(verts),
+        }
+        inv = np.empty(srcs.shape[0], np.int32)
+        uds, meta, n_ud = [], [], 0
         for lo in range(0, srcs.shape[0], CHUNK_EDGES):
-            hi = lo + CHUNK_EDGES
-            ud, inv = np.unique(dsts[lo:hi], return_inverse=True)
-            rows.append(
-                {
-                    "partition_id": pid,
-                    "n_verts": verts.shape[0],
-                    "v_min": int(verts[0]),
-                    "v_max": int(verts[-1]),
-                    "v_digest": dg,
-                    "src_idx": pos[lo:hi].tobytes(),
-                    "ud": ud.tobytes(),
-                    "inv": inv.astype(np.int32).tobytes(),
-                    "ps": ps[lo:hi].tobytes(),
-                }
-            )
-        return pd.DataFrame(rows)
+            hi = min(lo + CHUNK_EDGES, srcs.shape[0])
+            ud, idx = np.unique(dsts[lo:hi], return_inverse=True)
+            inv[lo:hi] = idx
+            uds.append(ud)
+            span, ud_span = [lo, hi], [n_ud, n_ud + ud.shape[0]]
+            meta.append({**head, "src_idx": span, "ud": ud_span, "inv": span, "ps": span})
+            n_ud += ud.shape[0]
+        arrays = {
+            "src_idx": pos.astype(np.int32),
+            "ud": np.concatenate(uds) if uds else np.empty(0, np.int64),
+            "inv": inv,
+            "ps": ps,
+        }
+        _write_partition(store, pid, arrays, meta)
+        return pd.DataFrame({"partition_id": [pid]})
 
     # alias the routing key so the cogroup's two sides don't share the same
     # partition_id attribute (the map feeds both — Spark rejects the
@@ -133,8 +148,62 @@ def pack_blocks(g) -> DataFrame:
     return (
         routed.groupby("pid")
         .cogroup(g.vp.groupby("partition_id"))
-        .applyInPandas(pack, BLOCK_SCHEMA)
+        .applyInPandas(pack, "partition_id int")
     )
+
+
+def _part_file(store: str, pid: int, name: str) -> str:
+    """Path of partition ``pid``'s file ``name`` (an ARRAYS entry, or
+    "meta") in the store directory ``store``."""
+    return os.path.join(store, f"{pid}.{name}.{'json' if name == 'meta' else 'npy'}")
+
+
+def _write_partition(store: str, pid: int, arrays: dict, meta: list) -> None:
+    """Commit one partition's files: every array through a private tmp name
+    and os.replace, then the meta file the same way. Meta goes last because
+    its presence is what map_partition takes as "this partition is
+    complete". A retried or speculative task writes identical bytes under
+    its own tmp names, so whichever replace lands last leaves the same
+    files."""
+    tag = f".tmp{uuid.uuid4().hex}"
+    for a in ARRAYS:
+        final = _part_file(store, pid, a)
+        with open(final + tag, "wb") as fh:
+            np.save(fh, arrays[a])
+        os.replace(final + tag, final)
+    final = _part_file(store, pid, "meta")
+    with open(final + tag, "w") as fh:
+        json.dump(meta, fh)
+    os.replace(final + tag, final)
+
+
+def has_partition(store: str, pid: int) -> bool:
+    """Whether this process sees partition ``pid``'s committed files."""
+    return os.path.exists(_part_file(store, pid, "meta"))
+
+
+def map_partition(store: str, pid: int) -> list:
+    """Partition ``pid``'s chunks as dicts of META_FIELDS plus read-only
+    views onto its memory-mapped ARRAYS files; raises FileNotFoundError,
+    naming the store and the partition, when its meta file is missing."""
+    try:
+        with open(_part_file(store, pid, "meta")) as fh:
+            meta = json.load(fh)
+    except FileNotFoundError:
+        raise FileNotFoundError(
+            f"block store {store!r} has no partition {pid} (no "
+            f"{pid}.meta.json): the store must be complete and on a path "
+            "shared by the driver and every executor"
+        ) from None
+    mm = {a: np.load(_part_file(store, pid, a), mmap_mode="r") for a in ARRAYS}
+    blocks = []
+    for ent in meta:
+        b = {k: ent[k] for k in META_FIELDS}
+        for a in ARRAYS:
+            lo, hi = ent[a]
+            b[a] = mm[a][lo:hi]
+        blocks.append(b)
+    return blocks
 
 
 def _vertex_digest(sorted_verts: np.ndarray) -> int:
@@ -173,7 +242,7 @@ def _check_frontier(row, sv: np.ndarray, sv_digest: int | None = None) -> None:
 
 
 def pr_partials(blocks: list, ss: np.ndarray) -> pd.DataFrame:
-    """PageRank gather kernel over decoded blocks: per-chunk gather ·
+    """PageRank gather kernel over mapped blocks: per-chunk gather ·
     multiply · bincount, then an order-insensitive np.unique merge of chunk
     partials. ``ss``: frontier scores sorted by vertex (the blocks' order)."""
     outs: list[np.ndarray] = []
@@ -195,7 +264,7 @@ def pr_partials(blocks: list, ss: np.ndarray) -> pd.DataFrame:
 
 
 def lpa_partials(blocks: list, lb: np.ndarray) -> pd.DataFrame:
-    """Label-count gather kernel over decoded blocks: lexsort by (inv,
+    """Label-count gather kernel over mapped blocks: lexsort by (inv,
     label) + run-length counts — at most one row per (chunk, dst, label).
     ``lb``: frontier labels sorted by vertex."""
     dd, ll, cc = [], [], []
@@ -222,7 +291,7 @@ def lpa_partials(blocks: list, lb: np.ndarray) -> pd.DataFrame:
 
 
 def min_partials(blocks: list, lb: np.ndarray) -> pd.DataFrame:
-    """Min-label gather kernel over decoded blocks: per-dst MINIMUM of the
+    """Min-label gather kernel over mapped blocks: per-dst MINIMUM of the
     gathered source labels — one row per (chunk, dst). Lexsort by (label,
     inv) then keep the first row of each inv run: that row's label is the
     run minimum. Empty-edge chunks contribute nothing. ``lb``: frontier

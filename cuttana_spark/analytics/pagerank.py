@@ -313,8 +313,9 @@ def pagerank_csr(
     block_store: directory for the executor-resident block store
     (blockstore.py) — packed once, reused fingerprint-checked by later
     calls, and owned by the caller (drop_block_store when done). Each
-    superstep moves only the O(V) frontier through Arrow; workers mmap the
-    blocks from a node-shared arena. None (default): the blocks are packed
+    superstep moves only the O(V) frontier through Arrow; workers map the
+    store's own files. It must be a plain path shared by the driver and
+    every executor (a URI raises ValueError). None (default): the blocks are packed
     into a call-scoped temporary store that is dropped before returning,
     which needs a ``local[...]`` master (blockstore.resident_store).
 

@@ -4,7 +4,9 @@
 the ``jobs/`` benchmark and profiling scripts build their session here, so
 these settings hold for every plan they run. (The two spark-submit entry
 points, ``jobs/run_pagerank.py`` and ``jobs/run_corpus_pipeline.py``, take
-their master and conf from spark-submit instead.)
+their master and the rest of their conf from spark-submit; the one setting
+they take from here is ``CODEGEN_CACHE_ENTRIES``, which they pass to their
+session builder because it must be set before the JVM's first plan.)
 
 - **Defaults fit the host.** The master is ``local[N]`` with N the CPUs this
   process may run on (``default_parallelism``), and the driver heap is half

@@ -12,7 +12,7 @@ efficiency ratio. On a real N→4N cluster per-JVM allocation rate stays
 
 This protocol removes it from the measured path instead of tuning around
 it: per fresh-JVM rep, run ONE untimed warmup dag (3 supersteps — JIT,
-codegen, arena decode, shuffle paths), then ONE timed fixed-iteration dag
+codegen, block-store page-in, shuffle paths), then ONE timed fixed-iteration dag
 of TIMED_ITERS supersteps with checkpoint_interval == TIMED_ITERS (single
 eager materialization at the end; intermediate supersteps chain lazily as
 reusable shuffle outputs). sec/superstep = dag_wall / TIMED_ITERS. Both

@@ -51,7 +51,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName("cuttana-corpus").getOrCreate()
+    from cuttana_spark import session
+
+    spark = (
+        SparkSession.builder.appName("cuttana-corpus")
+        .config("spark.sql.codegen.cache.maxEntries", str(session.CODEGEN_CACHE_ENTRIES))
+        .getOrCreate()
+    )
 
     from cuttana_spark.operators.dedup import exact_dedup, minhash_pairs
     from cuttana_spark.operators.text import (

@@ -13,6 +13,12 @@ jobs/run_pagerank.py --transcripts fixtures/transcripts_2000.parquet ...
 
 Resumable: re-running with the same --warehouse/--job continues from the
 last committed superstep (kill -9 safe — snapshots commit atomically).
+
+``--engine csr`` packs its block store at ``<--output>_blocks``, and every
+executor's Python workers read that store with POSIX file calls: with the
+csr engine, ``--output`` must be a plain path on storage shared by the
+driver and every executor (not an ``s3://`` or ``hdfs://`` URI, which
+raises).
 """
 
 from __future__ import annotations
@@ -45,7 +51,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = SparkSession.builder.appName(f"cuttana-{args.job}").getOrCreate()
+    from cuttana_spark import session
+
+    spark = (
+        SparkSession.builder.appName(f"cuttana-{args.job}")
+        .config("spark.sql.codegen.cache.maxEntries", str(session.CODEGEN_CACHE_ENTRIES))
+        .getOrCreate()
+    )
 
     from cuttana_spark.analytics.pagerank import pagerank, pagerank_csr
     from cuttana_spark.operators import edges as E
@@ -78,9 +90,7 @@ def main() -> None:
         adj = E.adjacency(eids)
         res = cuttana_partition_df_batched(adj, args.k)
         vp = res.to_spark_df(spark).select("vertex", "partition_id")
-        # every executor reads the block store through the filesystem, so
-        # for the csr engine --output must be a path all nodes mount; a
-        # killed job that resumes reuses the store, fingerprint-checked
+        # a killed job that resumes reuses the store, fingerprint-checked
         block_store = args.output.rstrip("/") + "_blocks"
         pr = pagerank_csr(
             spark, sym, vp, max_iter=args.iters, tol=args.tol, runner=runner,

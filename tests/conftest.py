@@ -12,22 +12,6 @@ from cuttana_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 
-@pytest.fixture(scope="session", autouse=True)
-def _block_arena_in_tmp(tmp_path_factory):
-    """Point the blockstore's node-shared mmap arena at a pytest temp dir
-    for the whole session (unless a test overrides it): tests that create
-    block stores under tmp_path and let pytest reap them would otherwise
-    leak one tmpfs arena per store path in /dev/shm — tmpfs is RAM."""
-    prev = os.environ.get("CUTTANA_BLOCK_ARENA")
-    arena = str(tmp_path_factory.mktemp("block_arena"))
-    os.environ["CUTTANA_BLOCK_ARENA"] = arena
-    yield
-    if prev is None:
-        os.environ.pop("CUTTANA_BLOCK_ARENA", None)
-    else:
-        os.environ["CUTTANA_BLOCK_ARENA"] = prev
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app="cuttana-spark-tests", master="local[8]", shuffle_partitions=8)

@@ -160,12 +160,11 @@ def test_connected_components_accel_matches_star(spark):
             assert base[v] == rep
 
 
-def test_connected_components_accel_block_store(spark, tmp_path, monkeypatch):
+def test_connected_components_accel_block_store(spark, tmp_path):
     """block_store mode: the contraction gathers run against a caller-owned
     store instead of a call-scoped one — identical labelling."""
     import networkx as nx
 
-    monkeypatch.setenv("CUTTANA_BLOCK_ARENA", str(tmp_path / "arena"))
     G = nx.Graph()
     H = _ba_graph(n=80, m=2, seed=11)
     G.add_edges_from(H.edges())
@@ -617,18 +616,20 @@ def test_nested_scope_spares_outer_generation(spark):
     assert sorted((r.v, r.w) for r in out.collect()) == [(v, v + 4) for v in range(50)]
 
 
-def test_block_store_arena_sharing_and_invalidation(spark, tmp_path, monkeypatch):
-    """Driver-side unit test of the node-shared arena: the first touch of a
-    partition decodes parquet once into the arena; later touches — including
-    from a FRESH process cache (another worker) — mmap the arena without
-    re-reading parquet; rewriting a store under the same path (new _SUCCESS
-    mtime) re-keys the arena; drop_block_store removes every generation."""
+def test_block_store_mapped_sharing_and_invalidation(spark, tmp_path):
+    """Driver-side unit test of the mapped store: the first load maps the
+    store's own .npy files (no decode, no copy); a FRESH process cache
+    (another worker) maps the same files without a repack; rewriting the
+    store under the same path (new _SUCCESS mtime) re-keys the handle cache;
+    drop_block_store removes the directory. A non-negative partition
+    without a meta file raises instead of reading as "no edges"."""
     import os as _os
     import time as _time
 
+    import numpy as _np
+
     import cuttana_spark.analytics.blockstore as B
 
-    monkeypatch.setenv("CUTTANA_BLOCK_ARENA", str(tmp_path / "arena"))
     edges = spark.createDataFrame(
         [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0), (3, 0, 1.0)],
         "src long, dst long, weight double",
@@ -638,46 +639,134 @@ def test_block_store_arena_sharing_and_invalidation(spark, tmp_path, monkeypatch
     )
     path = str(tmp_path / "store")
     B.write_block_store(Graph(edges, vp, "trans", None), path)
+    key = B._store_key(path)
     B._CACHE.clear()
-    calls = {"n": 0}
-    real = __import__("pyarrow.parquet", fromlist=["read_table"]).read_table
-
-    def counting(p, *a, **k):
-        calls["n"] += 1
-        return real(p, *a, **k)
-
-    monkeypatch.setattr("pyarrow.parquet.read_table", counting)
     b1 = B.load_blocks(path, 0)
-    assert calls["n"] == 1 and len(b1) == 1
+    assert len(b1) == 1
+    for a in ("src_idx", "ud", "inv", "ps"):  # views onto the store's files
+        assert isinstance(b1[0][a], _np.memmap)
+        assert b1[0][a].filename == _os.path.join(_os.path.abspath(path), f"0.{a}.npy")
     b2 = B.load_blocks(path, 0)
-    assert calls["n"] == 1 and b2 is b1  # handle-cache hit, no re-read
-    assert B.load_blocks(path, 99) == []  # missing pid dir -> empty
+    assert b2 is b1  # handle-cache hit
+    with pytest.raises(FileNotFoundError, match="no partition 99"):
+        B.load_blocks(path, 99)
+    assert B.load_blocks(path, -1) == []  # vertices a table map lacks
 
-    # ANOTHER worker (fresh process cache) must hit the shared arena — the
-    # parquet decode happens once per NODE, not once per process
+    # ANOTHER worker (fresh process cache) maps the same files: no repack
     B._CACHE.clear()
     b3 = B.load_blocks(path, 0)
-    assert calls["n"] == 1  # no parquet re-read: mmap'd from the arena
-    assert [(x["n_verts"], x["v_min"], x["v_max"]) for x in b3] == [
-        (x["n_verts"], x["v_min"], x["v_max"]) for x in b1
+    assert B._store_key(path) == key
+    assert [(x["n_verts"], x["v_min"], x["v_max"], x["v_digest"]) for x in b3] == [
+        (x["n_verts"], x["v_min"], x["v_max"], x["v_digest"]) for x in b1
     ]
-    import numpy as _np
-
     for a in ("src_idx", "ud", "inv", "ps"):
+        assert b3[0][a].filename == b1[0][a].filename
         assert _np.array_equal(_np.asarray(b3[0][a]), _np.asarray(b1[0][a]))
 
-    # rewrite under same path -> new _SUCCESS mtime -> new arena generation
+    # rewrite under same path -> new _SUCCESS mtime -> the handle cache re-keys
     _time.sleep(0.05)
     B.write_block_store(Graph(edges, vp, "trans", None), path)
     _os.utime(_os.path.join(path, "_SUCCESS"))
-    before = calls["n"]
-    B.load_blocks(path, 0)
-    assert calls["n"] == before + 1  # stale key+arena missed, re-decoded
+    assert B._store_key(path) != key
+    b4 = B.load_blocks(path, 0)
+    assert b4 is not b3
+    assert [k[0] for k in B._CACHE] == [B._store_key(path)]  # stale handles gone
 
-    # drop_block_store removes the store and every arena generation
+    # drop_block_store removes the store
     B.drop_block_store(path)
     assert not _os.path.exists(path)
-    assert _os.listdir(str(tmp_path / "arena")) == []
+
+
+def test_block_store_rejects_uri_paths(spark, tmp_path):
+    """Workers read the store with POSIX file calls, so a URI block_store
+    must raise ValueError before any job runs — never pack somewhere the
+    workers cannot read."""
+    from types import SimpleNamespace
+
+    import cuttana_spark.analytics.blockstore as B
+    from cuttana_spark.analytics.pagerank import pagerank_csr
+
+    edges = spark.createDataFrame([(0, 1, 1.0)], "src long, dst long, p double")
+    vp = spark.createDataFrame([(0, 0), (1, 0)], "vertex long, partition_id int")
+    g = Graph(edges, vp, "trans", None)
+    local = SimpleNamespace(sparkContext=SimpleNamespace(master="local[2]"))
+    for uri in ("s3://bucket/store", "hdfs://nn/store", f"file:{tmp_path}/store"):
+        with pytest.raises(ValueError, match="plain path shared"):
+            B.write_block_store(g, uri)
+        with pytest.raises(ValueError, match="plain path shared"):
+            with B.resident_store(local, g, uri):
+                pass
+    assert not (tmp_path / "store").exists()
+    with pytest.raises(ValueError, match="plain path shared"):
+        pagerank_csr(
+            spark,
+            edges.withColumnRenamed("p", "weight"),
+            vp,
+            max_iter=1,
+            block_store="s3://bucket/pr",
+        )
+
+
+def test_gather_raises_on_missing_partition_files(spark, tmp_path, monkeypatch):
+    """A store whose partition files a worker cannot see (deleted here; on
+    a cluster, a path some executors do not mount) must make the gather
+    raise and name the partition, not read that partition as edgeless. A
+    pack whose files the driver cannot see raises at write time."""
+    import os as _os
+
+    import cuttana_spark.analytics.blockstore as B
+    from cuttana_spark.analytics.csr import PR
+
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, 1.0), (2, 0, 1.0), (3, 0, 1.0)],
+        "src long, dst long, p double",
+    )
+    vp = spark.createDataFrame(
+        [(0, 0), (1, 0), (2, 1), (3, 1)], "vertex long, partition_id int"
+    )
+    path = str(tmp_path / "store")
+    B.write_block_store(Graph(edges, vp, "trans", None), path)
+    for f in _os.listdir(path):
+        if f.startswith("1."):
+            _os.unlink(_os.path.join(path, f))
+    scores = vp.withColumn("score", F.lit(1.0))
+    with pytest.raises(Exception, match="has no partition 1"):
+        B.gather(path, scores, PR).collect()
+
+    monkeypatch.setattr(B, "has_partition", lambda store, pid: pid != 1)
+    with pytest.raises(FileNotFoundError, match="partition 1 was packed"):
+        B.write_block_store(Graph(edges, vp, "trans", None), path)
+    B.drop_block_store(path)
+
+
+def test_sink_only_partition_gathers(spark, tmp_path):
+    """A partition whose vertices have no out-edges is packed as a meta file
+    with zero chunks, so its absence can be told from "no edges"; the gather
+    over it contributes nothing and the other partition's sums are exact."""
+    import json as _json
+    import os as _os
+
+    import cuttana_spark.analytics.blockstore as B
+    from cuttana_spark.analytics.csr import PR
+
+    edges = spark.createDataFrame(
+        [(0, 2, 0.5), (0, 3, 0.5), (1, 2, 1.0)], "src long, dst long, p double"
+    )
+    vp = spark.createDataFrame(  # partition 1 holds only the sinks 2 and 3
+        [(0, 0), (1, 0), (2, 1), (3, 1)], "vertex long, partition_id int"
+    )
+    path = str(tmp_path / "store")
+    B.write_block_store(Graph(edges, vp, "trans", None), path)
+    with open(_os.path.join(path, "1.meta.json")) as fh:
+        assert _json.load(fh) == []
+    assert B.load_blocks(path, 1) == []
+    scores = spark.createDataFrame(
+        [(0, 0.1, 0), (1, 0.2, 0), (2, 0.3, 1), (3, 0.4, 1)],
+        "vertex long, score double, partition_id int",
+    )
+    got = {r.dst: r.contrib for r in B.gather(path, scores, PR).collect()}
+    assert got == {2: pytest.approx(0.05 + 0.2), 3: pytest.approx(0.05)}
+    B.drop_block_store(path)
 
 
 def test_resident_superstep_plan_has_no_block_scan(spark, tmp_path):
@@ -738,7 +827,7 @@ def test_csr_frontier_interior_mismatch_guard(spark, tmp_path):
     drop_block_store(path)
 
 
-def test_block_store_fingerprint_repack(spark, tmp_path, monkeypatch):
+def test_block_store_fingerprint_repack(spark, tmp_path):
     """Round-6 ADVICE: ensure_block_store must not reuse a store packed from
     DIFFERENT inputs over the same path — the _CUTTANA_STORE_FP plan-hash
     marker forces a re-pack; matching inputs reuse without rewriting."""
@@ -746,7 +835,6 @@ def test_block_store_fingerprint_repack(spark, tmp_path, monkeypatch):
 
     import cuttana_spark.analytics.blockstore as B
 
-    monkeypatch.setenv("CUTTANA_BLOCK_ARENA", str(tmp_path / "arena"))
     e1 = spark.createDataFrame(
         [(0, 1, 1.0), (1, 2, 1.0)], "src long, dst long, p double"
     )
@@ -770,52 +858,6 @@ def test_block_store_fingerprint_repack(spark, tmp_path, monkeypatch):
     scores = vp.withColumn("score", F.lit(1.0))
     got = {r.dst: r.contrib for r in B.gather(path, scores, PR).collect()}
     assert got == {2: pytest.approx(1.0)}  # e2's graph, not e1's
-    B.drop_block_store(path)
-
-
-def test_block_store_arena_budget_eviction(spark, tmp_path, monkeypatch):
-    """Round-6: under a tiny injected CUTTANA_ARENA_BYTES budget the arena
-    LRU-evicts whole-partition groups instead of growing without bound, and
-    supersteps stay correct throughout (evicted partitions are rebuilt on
-    demand)."""
-    import glob as _glob
-    import os as _os
-
-    import numpy as _np
-
-    import cuttana_spark.analytics.blockstore as B
-
-    monkeypatch.setenv("CUTTANA_BLOCK_ARENA", str(tmp_path / "arena"))
-    # ~6.4k edges per partition x 16B/edge ~= 100KB/partition across 4 pids
-    n = 25600
-    edges = spark.range(n).select(
-        F.col("id").alias("src"),
-        ((F.col("id") + 1) % n).alias("dst"),
-        F.lit(1.0).alias("p"),
-    )
-    vp = spark.range(n).select(
-        F.col("id").alias("vertex"),
-        (F.col("id") % 4).cast("int").alias("partition_id"),
-    )
-    path = str(tmp_path / "store")
-    B.write_block_store(Graph(edges, vp, "trans", None), path)
-    # budget fits roughly 2 of the 4 partition groups
-    monkeypatch.setenv("CUTTANA_ARENA_BYTES", str(220_000))
-    B._CACHE.clear()
-    expect = {pid: None for pid in range(4)}
-    for sweep in range(3):
-        for pid in range(4):
-            B._CACHE.clear()  # force arena (not handle-cache) hits
-            blocks = B.load_blocks(path, pid)
-            tot = float(sum(b["ps"].sum() for b in blocks))
-            if expect[pid] is None:
-                expect[pid] = tot
-            assert tot == expect[pid]  # rebuilt content identical
-            assert int(sum(b["src_idx"].shape[0] for b in blocks)) == n // 4
-    groups = _glob.glob(str(tmp_path / "arena" / "*" / "*.meta.json"))
-    assert 0 < len(groups) < 4  # eviction actually happened
-    usage = sum(sz for _, sz, _ in B._arena_groups(str(tmp_path / "arena")))
-    assert usage <= 220_000
     B.drop_block_store(path)
 
 
@@ -872,7 +914,7 @@ def test_kcore_self_loops_consistent(spark):
     assert a == {v for v, c in nx.core_number(G).items() if c >= 3}
 
 
-def test_shared_block_store_serves_kcore_lpa_cc(spark, tmp_path, monkeypatch):
+def test_shared_block_store_serves_kcore_lpa_cc(spark, tmp_path):
     """Round 6 (VERDICT item 6): k-core, LPA and CC built over the SAME
     edges DataFrame through the canonical sym-unit payload
     (graphstore.open_graph "sym-unit") share ONE block store — the fingerprint
@@ -888,7 +930,6 @@ def test_shared_block_store_serves_kcore_lpa_cc(spark, tmp_path, monkeypatch):
         label_propagation_csr,
     )
 
-    monkeypatch.setenv("CUTTANA_BLOCK_ARENA", str(tmp_path / "arena"))
     # BA core (min degree 2 -> 2-core converges fast) + a short tail chain
     # that peels round-by-round + a separate component for CC
     G = nx.barabasi_albert_graph(150, 2, seed=13)
@@ -938,7 +979,7 @@ def test_shared_block_store_serves_kcore_lpa_cc(spark, tmp_path, monkeypatch):
     edges.unpersist(False)
 
 
-def test_pagerank_trans_store_shared_across_runs(spark, tmp_path, monkeypatch):
+def test_pagerank_trans_store_shared_across_runs(spark, tmp_path):
     """Round 7 (VERDICT r6 item 6): pagerank_csr(hash_partitions=) packs the
     canonical transition payload (graphstore.open_graph "trans") ONCE; a second run
     over the same edges DataFrame reuses the store fingerprint-checked (no
@@ -951,7 +992,6 @@ def test_pagerank_trans_store_shared_across_runs(spark, tmp_path, monkeypatch):
     from cuttana_spark.analytics.pagerank import pagerank, pagerank_csr
     from pyspark.sql import functions as F
 
-    monkeypatch.setenv("CUTTANA_BLOCK_ARENA", str(tmp_path / "arena"))
     G = nx.barabasi_albert_graph(120, 2, seed=7)
     und = spark.createDataFrame(
         [(int(a), int(b), 1) for a, b in G.edges()], "src long, dst long, weight long"
@@ -1059,16 +1099,14 @@ def test_csr_routing_needs_exactly_one_map(spark, algo, both):
 @pytest.mark.parametrize("algo", CSR_ALGOS)
 def test_call_scoped_store_leaves_nothing_behind(spark, tmp_path, monkeypatch, algo):
     """block_store=None packs a call-scoped store. The call must leave no
-    store directory, no arena generation and no persistent RDD beyond its
-    result's checkpoint — and the result must stay readable without them."""
+    store directory and no persistent RDD beyond its result's checkpoint —
+    and the result must stay readable without them."""
     import os
     import tempfile
 
     import cuttana_spark.analytics.blockstore as B
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    arena = os.environ["CUTTANA_BLOCK_ARENA"]
-    arenas = lambda: set(os.listdir(arena)) if os.path.isdir(arena) else set()
     stores = lambda: [d for d in os.listdir(tmp_path) if d.startswith("cuttana-")]
     pinned = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     edges = _cycle_with_chord(spark)
@@ -1077,15 +1115,14 @@ def test_call_scoped_store_leaves_nothing_behind(spark, tmp_path, monkeypatch, a
     real_drop = B.drop_block_store
 
     def spy(path):  # what existed just before the store was dropped
-        seen["stores"], seen["arenas"] = stores(), arenas()
+        seen["stores"] = stores()
         real_drop(path)
 
     monkeypatch.setattr(B, "drop_block_store", spy)
-    arenas0, pinned0 = arenas(), pinned()
+    pinned0 = pinned()
     out = _csr_call(spark, algo, edges, vertex_partitions=vp)
-    assert len(seen["stores"]) == 1 and seen["arenas"] - arenas0  # store was used
+    assert len(seen["stores"]) == 1  # store was used
     assert stores() == []
-    assert arenas() == arenas0
     assert len(pinned() - pinned0) <= 1
     assert out.count() == 30
 
@@ -1105,7 +1142,7 @@ def test_call_scoped_store_needs_local_master():
 
 def test_load_blocks_forgets_dropped_stores(spark, tmp_path):
     """A worker's handle cache must not keep mmap views of a dropped store
-    alive (they pin the unlinked arena files' pages): the next cache miss
+    alive (they pin the unlinked store files' pages): the next cache miss
     sweeps handles whose store is gone."""
     import os
 
