@@ -4,9 +4,8 @@
 code that builds a pack payload or a routing, and every CSR caller opens its
 graph through it:
 
-* ``kind="trans"`` — PageRank's column-stochastic payload p = w / Σ_src w
-  over the DIRECTED edge table (window over src: bit-identical p on
-  count-weighted graphs);
+* ``kind="trans"`` — PageRank's column-stochastic payload (`transition`,
+  which pagerank's join path caches too);
 * ``kind="sym-unit"`` — both directions of every edge, self-loops dropped,
   p = 1.0: the simple graph that k-core, LPA and CC's contraction pre-pass
   all gather over.
@@ -54,6 +53,18 @@ def vertices(edges: DataFrame) -> DataFrame:
     )
 
 
+def transition(edges: DataFrame) -> DataFrame:
+    """PageRank's column-stochastic transition (src, dst, p = w / Σ_src w)
+    over the DIRECTED edge table. A window over src instead of a
+    groupBy + join: no out-weight subtree, and an input already
+    hash-partitioned on src needs no exchange. The sum is exact in any order
+    for integer-valued weights (doubles below 2^53), so p is bit-identical
+    to the join formulation on count-weighted graphs."""
+    e = edges.select("src", "dst", F.col("weight").cast("double"))
+    p = F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))
+    return e.select("src", "dst", p.alias("p"))
+
+
 class Graph(NamedTuple):
     """A pack payload ``trans`` (src, dst, p) routed by ``vp`` (vertex,
     partition_id). ``pid_of`` is the expression map when ``vp`` was built
@@ -92,12 +103,10 @@ def open_graph(
     partitions)."""
     if (vertex_partitions is None) == (hash_partitions is None):
         raise ValueError("pass exactly one of vertex_partitions / hash_partitions")
+    e = edges.select("src", "dst")
     if kind == "trans":
-        e = edges.select("src", "dst", F.col("weight").cast("double"))
-        p = F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))
-        trans = e.select("src", "dst", p.alias("p"))
+        trans = transition(edges)
     elif kind == "sym-unit":
-        e = edges.select("src", "dst")
         trans = (
             e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             .filter(F.col("src") != F.col("dst"))

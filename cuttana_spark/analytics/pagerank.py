@@ -1,33 +1,45 @@
-"""PageRank — two implementations sharing semantics with networkx.pagerank.
+"""PageRank — one recurrence, two contribution steps, a teleport vector.
 
-1. ``pagerank`` — pure declarative DataFrame joins + aggregations. Catalyst
-   gets the whole plan; AQE handles reducer skew; per-iteration lineage is
-   truncated with localCheckpoint. This is the oracle-checkable variant.
+Every PageRank here iterates
 
-2. ``pagerank_csr`` — the scale path from the north star: frontier scores
-   grouped by partition and gathered against CSR-packed per-partition
-   adjacency blocks from the resident block store (blockstore.py) inside an
-   Arrow ``applyInPandas`` UDF (numpy gather-scatter, no per-row Python).
-   Hub-vertex skew is neutralized structurally: each block partially
-   aggregates contributions per dst BEFORE the shuffle (map-side combine), so
-   a degree-10^8 hub receives at most one row per block instead of one per
-   edge. See csr.py for block packing.
+    x'(v) = (1-α)·t(v) + α·(c(v) + d·t(v)),    c(v) = Σ_{u→v} p(u,v)·x(u)
 
-Semantics (matches networkx.pagerank): column-stochastic transition with
-weights, teleport (1-α)/N, dangling mass redistributed uniformly,
-L1 convergence err < N·tol.
+over the column-stochastic transition p = w / Σ_src w
+(graphstore.transition), where d is the score on dangling vertices (no
+out-edge), handed out like the teleport. The public functions differ only
+in how they compute c and in the teleport vector t:
 
-The reference has no analytics at all (SURVEY §0); the oracle is
+* ``pagerank`` — c by a ``trans ⋈ ranks`` join; t = 1/n. Catalyst gets the
+  whole plan; this is the oracle-checkable variant.
+* ``pagerank_csr`` — c by ``blockstore.gather(store, ranks, PR)``: the
+  frontier gathered per partition against the resident CSR blocks inside an
+  Arrow UDF (numpy gather-scatter); t = 1/n. Each block combines its
+  contributions per dst before the shuffle, so a hub receives one row per
+  block, not one per edge (csr.py packs the blocks).
+* ``personalized_pagerank`` — the join step; t = seed indicator / n_seeds
+  (random walk with restart from the seeds).
+
+Written once for all three: the vertex-flags pass (`_vertex_flags`), the
+rank update (`_Recurrence`) and the boundary step of `_iterate` (checkpoint
+cadence, L1 convergence err < n·tol, ``iter_walls``, ``runner`` snapshots).
+With t = 1/n the semantics match networkx.pagerank; the oracle is
 networkx/DuckDB.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import time
+from contextlib import contextmanager, nullcontext
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cuttana_spark.analytics.graphstore import open_graph, vertices
-from cuttana_spark.plans.checkpoints import scope
+from cuttana_spark.analytics.graphstore import open_graph, transition
+from cuttana_spark.plans.checkpoints import Scope, scope
+
+_EMPTY = "vertex long, score double"
+_DM = "dangling_mass"
 
 
 def pagerank(
@@ -51,7 +63,8 @@ def pagerank(
     imposes that layout itself). Returns DataFrame[vertex, score].
     ``runner``: optional supersteps.SuperstepRunner for checkpoint/resume.
     ``checkpoint_interval``: materialize (and truncate lineage) every k-th
-    superstep; intermediate supersteps stay lazily chained in one DAG.
+    superstep (k >= 1); intermediate supersteps stay lazily chained in one
+    DAG.
     ``iter_walls``: optional list — appends each superstep's wall seconds
     (meaningful with checkpoint_interval=1, where every superstep is its own
     job; the scaling bench's steady-state metric). In fused fixed-iteration
@@ -64,6 +77,12 @@ def pagerank(
     upfront repartition+count amortizes over many supersteps — default is
     on for long/tol-driven runs (tol > 0 or max_iter > 8) and off for short
     fixed-iteration runs, where the upfront cost would dominate the wall.
+
+    FUSED fixed-iteration mode (tol <= 0, no runner): between checkpoints
+    the state is the previous superstep's (contribs, dangling_mass) and a
+    score is the update EXPRESSION over them, so the per-superstep
+    `nodes ⋈ contribs` V-row join disappears (5-superstep plan: 194 → 106
+    Exchanges).
 
     AQE: when every superstep materializes as its own job
     (checkpoint_interval=1 or tol-driven), adaptive execution re-plans the
@@ -86,204 +105,20 @@ def pagerank(
     original setting is restored exactly on exit: an explicitly-set value is
     set back, an unset key is unset again (not pinned to a default).
     """
-    import time as _time
-
-    per_superstep_jobs = checkpoint_interval == 1 or tol > 0
-    aqe_touched = False
-    aqe_saved = None
-    if per_superstep_jobs:
-        aqe_saved = spark.conf.get("spark.sql.adaptive.enabled", None)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        aqe_touched = True
-    try:
-        with scope() as s:
-            return _pagerank_impl(
-                spark, s, edges, alpha, max_iter, tol, runner,
-                checkpoint_interval, iter_walls, stable_layout, _time,
-            )
-    finally:
-        if aqe_touched:
-            if aqe_saved is None:
-                spark.conf.unset("spark.sql.adaptive.enabled")
-            else:
-                spark.conf.set("spark.sql.adaptive.enabled", aqe_saved)
-
-
-def _pagerank_impl(
-    spark, s, edges, alpha, max_iter, tol, runner, checkpoint_interval,
-    iter_walls, stable_layout, _time,
-):
+    _check_interval(checkpoint_interval)
     edges = edges.select("src", "dst", F.col("weight").cast("double"))
-    # ONE aggregation pass answers everything the loop needs about the
-    # vertex set: the set itself, the count, and which vertices lack an
-    # out-edge (round 7; was nodes.distinct + srcs.distinct + a left join —
-    # three exchanges over up to 2x the rows). groupBy(max) has map-side
-    # partial aggregation, so the single exchange carries ~V rows.
-    flags = s.cache(
-        edges.select(F.col("src").alias("vertex"), F.lit(1).alias("_has_out"))
-        .unionAll(edges.select(F.col("dst").alias("vertex"), F.lit(0).alias("_has_out")))
-        .groupBy("vertex")
-        .agg(F.max("_has_out").alias("_has_out"))
-    )
-    row = flags.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("_has_out") == 0, 1).otherwise(0)).alias("n_dangling"),
-    ).first()
-    n = row.n
-    if n == 0:
-        return spark.createDataFrame([], "vertex long, score double")
-    has_dangling = row.n_dangling > 0
-    nodes = flags.select("vertex")
-
-    # The transition matrix is STATIC across supersteps and joined on src
-    # every one of them. Built with a window over src (p = w / sum(w) per
-    # src) instead of a groupBy+join: no out_w subtree, and when the input
-    # is already hash-partitioned on src the window adds NO exchange. The
-    # sum is exact in any order for integer-valued weights (doubles below
-    # 2^53), so p is bit-identical to the join formulation on count-weighted
-    # graphs. For LONG runs, lay it out once (explicit hash partitioning on
-    # the join key, no AQE-coalesced odd layout) and materialize it eagerly
-    # — otherwise the first superstep's job mixes cache-fill with gather and
-    # per-superstep walls are unstable (measured: 2.8 s vs 5-50 s stalls at
-    # 10M edges when the cached side kept its ad-hoc post-join layout). For
-    # SHORT fixed-iteration runs the upfront repartition+count costs more
-    # than it saves, so it is conditional.
-    from pyspark.sql import Window
-
-    if stable_layout is None:
-        stable_layout = tol > 0 or max_iter > 8
-    base = edges.repartition("src") if stable_layout else edges
-    trans = s.cache(
-        base.select(
-            "src",
-            "dst",
-            (F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))).alias("p"),
+    per_superstep_jobs = checkpoint_interval == 1 or tol > 0
+    with _aqe_off(spark) if per_superstep_jobs else nullcontext(), scope() as s:
+        nodes, n, dangling = _vertex_flags(s, edges)
+        if n == 0:
+            return spark.createDataFrame([], _EMPTY)
+        pr = _Recurrence(nodes, n, dangling, alpha, n, None)
+        step = _join_step(s, edges, pr, stable_layout, tol > 0 or max_iter > 8)
+        ranks = _iterate(
+            s, pr, step, max_iter, tol, runner, checkpoint_interval, iter_walls,
+            fuse=True, eager_start=False,
         )
-    )
-    if stable_layout:
-        trans.count()
-    dangling_nodes = (
-        flags.filter(F.col("_has_out") == 0).select("vertex")
-        if has_dangling
-        else None
-    )
-
-    start_iter = 0
-    ranks = nodes.withColumn("score", F.lit(1.0 / n))
-    if runner is not None:
-        resumed = runner.resume()
-        if resumed is not None:
-            start_iter, ranks = resumed
-            # resumed state carries real lineage — cut it before looping
-            ranks = s.checkpoint(ranks)
-    # fresh start: ranks is nodes(cached) + a literal column — lineage is
-    # already minimal, a checkpoint here would only cost an extra job
-
-    # FUSED fixed-iteration mode (round 7): between checkpoint boundaries the
-    # full ranks table is never materialized as a relation — the state is
-    # (contribs, dangling_mass), and a vertex's score is the EXPRESSION
-    # cst + α·(coalesce(contrib, 0) + dm/n), identical to the one the
-    # materialized table held. The per-superstep `nodes ⋈ contribs` left
-    # join (a V-row scan + sort-merge per superstep whose only purpose was
-    # re-introducing zero-in-degree vertices) disappears; the transition
-    # join attaches scores by LEFT-joining contribs onto trans.src and
-    # computing the same expression inline. Scores at boundaries are built
-    # with the exact formula/relations of the unfused superstep. Only active
-    # when no convergence test or resume runner needs the full table.
-    use_fused = tol <= 0 and runner is None
-    fused_state = None  # (contribs, dm_prev) when ranks is implicit
-
-    def _attach_scores(rel, key_col, contribs, dm_prev):
-        """LEFT-join contribs onto rel[key_col]; returns (df, score_column)
-        computing the implicit per-vertex score."""
-        c = contribs.select(F.col("dst").alias("_cv"), "contrib")
-        out = rel.join(c, F.col(key_col) == F.col("_cv"), "left")
-        if has_dangling:
-            out = out.crossJoin(F.broadcast(dm_prev))
-            extra = F.col("dangling_mass") / F.lit(float(n))
-        else:
-            extra = F.lit(0.0)
-        score = F.lit((1.0 - alpha) / n) + F.lit(alpha) * (
-            F.coalesce(F.col("contrib"), F.lit(0.0)) + extra
-        )
-        return out, score
-
-    for it in range(start_iter, max_iter):
-        _t_it = _time.monotonic() if iter_walls is not None else 0.0
-        if fused_state is not None:
-            pc, pdm = fused_state
-            att, pscore = _attach_scores(trans, "src", pc, pdm)
-            contribs = att.groupBy("dst").agg(
-                F.sum(F.col("p") * pscore).alias("contrib")
-            )
-            dm = None
-            if has_dangling:
-                datt, dscore = _attach_scores(dangling_nodes, "vertex", pc, pdm)
-                dm = datt.agg(
-                    F.coalesce(F.sum(dscore), F.lit(0.0)).alias("dangling_mass")
-                )
-        else:
-            contribs = (
-                trans.join(ranks, trans.src == ranks.vertex)
-                .groupBy("dst")
-                .agg(F.sum(F.col("p") * F.col("score")).alias("contrib"))
-            )
-            dm = None
-            if has_dangling:
-                # fold the dangling-mass scalar INTO the plan via a broadcast
-                # crossJoin of the 1-row aggregate — no per-superstep driver
-                # action, so fixed-iteration runs stay a single lazy DAG even
-                # on graphs with dangling vertices
-                dm = dangling_nodes.join(ranks, "vertex").agg(
-                    F.coalesce(F.sum("score"), F.lit(0.0)).alias("dangling_mass")
-                )
-        boundary = (
-            tol > 0
-            or runner is not None
-            or (it + 1) % checkpoint_interval == 0
-            or it + 1 == max_iter
-        )
-        if use_fused and not boundary:
-            fused_state = (contribs, dm)
-            if iter_walls is not None:
-                iter_walls.append(_time.monotonic() - _t_it)
-            continue
-        # materialize the full ranks table (and truncate lineage/plan
-        # growth) only at boundaries — intermediate supersteps live as
-        # shuffle outputs that Spark reuses, so a fixed-iteration run
-        # executes as ONE dag with no per-superstep driver round-trip
-        joined = nodes.join(contribs, nodes.vertex == contribs.dst, "left")
-        if has_dangling:
-            joined = joined.crossJoin(F.broadcast(dm))
-            extra = F.col("dangling_mass") / F.lit(float(n))
-        else:
-            extra = F.lit(0.0)
-        new_ranks = joined.select(
-            "vertex",
-            (
-                F.lit((1.0 - alpha) / n)
-                + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra)
-            ).alias("score"),
-        )
-        new_ranks = s.checkpoint(new_ranks)
-        fused_state = None
-        if tol > 0:
-            err = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "vertex")
-                .agg(F.sum(F.abs(F.col("a.score") - F.col("b.score"))))
-                .first()[0]
-            )
-        else:
-            err = float("inf")  # fixed-iteration mode: no convergence action
-        ranks = new_ranks
-        if iter_walls is not None:
-            iter_walls.append(_time.monotonic() - _t_it)
-        if runner is not None:
-            runner.checkpoint(it + 1, ranks, {"err": float(err) if err != float("inf") else -1.0})
-        if err < n * tol:
-            break
-    return s.keep(ranks)
+        return s.keep(ranks).select("vertex", "score")
 
 
 def pagerank_csr(
@@ -330,96 +165,28 @@ def pagerank_csr(
     from cuttana_spark.analytics.blockstore import gather, resident_store
     from cuttana_spark.analytics.csr import PR
 
+    _check_interval(checkpoint_interval)
     g = open_graph(edges, "trans", vertex_partitions, hash_partitions)
-    edges = edges.select("src", "dst", F.col("weight").cast("double"))
-    # carry partition_id through the loop so each superstep needs no extra
-    # score→partition join (vertices without a partition — possible only for
-    # dangling-only ids — contribute nothing and keep pid -1). The dangling
-    # indicator is computed in the SAME aggregation pass that builds the
-    # vertex set (one groupBy(max) exchange of ~V rows), and ONE driver
-    # action fills the cache and answers vertex count + any-dangling.
-    vflags = (
-        edges.select(F.col("src").alias("vertex"), F.lit(1).alias("_has_out"))
-        .unionAll(edges.select(F.col("dst").alias("vertex"), F.lit(0).alias("_has_out")))
-        .groupBy("vertex")
-        .agg(F.max("_has_out").alias("_has_out"))
-    )
     with scope() as s:
-        nodes_flags = s.cache(g.with_pid(vflags))
-        row = nodes_flags.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("_has_out") == 0, 1).otherwise(0)).alias("n_dangling"),
-        ).first()
-        n = row.n
+        # the frontier carries partition_id through the loop, so a superstep
+        # needs no score→partition join (a vertex the map lacks — possible
+        # only for a dangling-only id — keeps pid -1 and contributes nothing)
+        nodes, n, dangling = _vertex_flags(s, edges, g.with_pid)
         if n == 0:
-            return spark.createDataFrame([], "vertex long, score double")
-        has_dangling = row.n_dangling > 0
-        nodes_pid = nodes_flags.select("vertex", "partition_id")  # cache projection
-        dangling_nodes = nodes_flags.filter(F.col("_has_out") == 0).select("vertex")
-
-        start_iter = 0
-        ranks = nodes_pid.withColumn("score", F.lit(1.0 / n))
-        if runner is not None:
-            resumed = runner.resume()
-            if resumed is not None:
-                start_iter, resumed_state = resumed
-                ranks = resumed_state
-                if "partition_id" not in ranks.columns:
-                    ranks = ranks.join(nodes_pid, "vertex")
-        ranks = s.checkpoint(ranks)
-
-        import time as _time
-
+            return spark.createDataFrame([], _EMPTY)
         with resident_store(spark, g, block_store) as store:
-            for it in range(start_iter, max_iter):
-                _t_it = _time.monotonic()
-                contribs = (
-                    gather(store, ranks, PR)
-                    .groupBy("dst")
-                    .agg(F.sum("contrib").alias("contrib"))
+
+            def step(ranks):
+                return gather(store, ranks, PR).groupBy("dst").agg(
+                    F.sum("contrib").alias("contrib")
                 )
-                joined = nodes_pid.join(contribs, nodes_pid.vertex == contribs.dst, "left")
-                if has_dangling:
-                    # in-plan dangling mass (broadcast 1-row aggregate) — see pagerank()
-                    dm = dangling_nodes.join(ranks, "vertex").agg(
-                        F.coalesce(F.sum("score"), F.lit(0.0)).alias("dangling_mass")
-                    )
-                    joined = joined.crossJoin(F.broadcast(dm))
-                    extra = F.col("dangling_mass") / F.lit(float(n))
-                else:
-                    extra = F.lit(0.0)
-                new_ranks = joined.select(
-                    "vertex",
-                    "partition_id",
-                    (
-                        F.lit((1.0 - alpha) / n)
-                        + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra)
-                    ).alias("score"),
-                )
-                # materialize (truncate lineage/plan growth) only periodically —
-                # intermediate supersteps live as shuffle outputs that Spark reuses,
-                # so a fixed-iteration run executes as ONE dag with no per-superstep
-                # driver round-trip
-                interval = max(1, checkpoint_interval)
-                if tol > 0 or runner is not None or (it + 1) % interval == 0 or it + 1 == max_iter:
-                    new_ranks = s.checkpoint(new_ranks)
-                if tol > 0:
-                    err = (
-                        new_ranks.alias("a")
-                        .join(ranks.alias("b"), "vertex")
-                        .agg(F.sum(F.abs(F.col("a.score") - F.col("b.score"))))
-                        .first()[0]
-                    )
-                else:
-                    err = float("inf")  # fixed-iteration mode: no convergence action
-                ranks = new_ranks
-                if iter_walls is not None:
-                    iter_walls.append(_time.monotonic() - _t_it)
-                if runner is not None:
-                    runner.checkpoint(it + 1, ranks, {"err": float(err) if err != float("inf") else -1.0})
-                if err < n * tol:
-                    break
-        return s.keep(ranks).select("vertex", "score")
+
+            pr = _Recurrence(nodes, n, dangling, alpha, n, None)
+            ranks = _iterate(
+                s, pr, step, max_iter, tol, runner, checkpoint_interval, iter_walls,
+                fuse=False, eager_start=True,
+            )
+            return s.keep(ranks).select("vertex", "score")
 
 
 def personalized_pagerank(
@@ -433,75 +200,210 @@ def personalized_pagerank(
     """Personalized PageRank: teleport (and dangling mass) go UNIFORMLY to
     the `seeds` vertex set instead of to all vertices — random walk with
     restart from the seeds. seeds: DataFrame[vertex]. Fixed-iteration,
-    lazily chained like pagerank(); the seed indicator rides along as a
-    column so each superstep's teleport needs no extra join."""
+    lazily chained like pagerank() (a checkpoint every 5 supersteps); the
+    seed indicator rides along as a column of the cached vertex table, so
+    a superstep's teleport needs no extra join."""
     edges = edges.select("src", "dst", F.col("weight").cast("double"))
-    with scope() as s:
-        nodes = s.cache(vertices(edges))
-        n = nodes.count()
-        if n == 0:
-            return spark.createDataFrame([], "vertex long, score double")
-        seed_df = F.broadcast(seeds.select("vertex").distinct().withColumn("is_seed", F.lit(1)))
-        nodes_s = s.cache(
-            nodes.join(seed_df, "vertex", "left").select(
-                "vertex", F.coalesce("is_seed", F.lit(0)).alias("is_seed")
-            )
+    seed = F.broadcast(seeds.select("vertex").distinct().withColumn("seed", F.lit(1.0)))
+
+    def with_seed(flags):
+        return flags.join(seed, "vertex", "left").withColumn(
+            "seed", F.coalesce("seed", F.lit(0.0))
         )
-        n_seeds = nodes_s.agg(F.sum("is_seed")).first()[0]
+
+    with scope() as s:
+        nodes, n, dangling = _vertex_flags(s, edges, with_seed)
+        if n == 0:
+            return spark.createDataFrame([], _EMPTY)
+        n_seeds = int(nodes.agg(F.sum("seed")).first()[0])
         if not n_seeds:
             raise ValueError("personalized_pagerank: no seed vertex exists in the graph")
-
-        from pyspark.sql import Window
-
-        # static across supersteps — window-built (see pagerank), eager join-key
-        # layout only when the run is long enough to amortize it
-        if stable_layout is None:
-            stable_layout = max_iter > 8
-        base = edges.repartition("src") if stable_layout else edges
-        trans = s.cache(
-            base.select(
-                "src",
-                "dst",
-                (F.col("weight") / F.sum("weight").over(Window.partitionBy("src"))).alias("p"),
-            )
+        pr = _Recurrence(nodes, n, dangling, alpha, n_seeds, "seed")
+        step = _join_step(s, edges, pr, stable_layout, max_iter > 8)
+        # not fused: a fused score is an expression over trans rows, which
+        # carry no seed column
+        ranks = _iterate(
+            s, pr, step, max_iter, 0.0, None, 5, None, fuse=False, eager_start=False
         )
-        if stable_layout:
-            trans.count()
-        srcs = edges.select(F.col("src").alias("vertex")).distinct()
-        dangling = s.cache(nodes.join(srcs, "vertex", "left_anti"))
-        has_dangling = dangling.count() > 0
-
-        # start from the restart distribution (uniform over seeds)
-        ranks = s.checkpoint(
-            nodes_s.withColumn(
-                "score", F.col("is_seed").cast("double") / F.lit(float(n_seeds))
-            )
-        )
-        for it in range(max_iter):
-            contribs = (
-                trans.join(ranks, trans.src == ranks.vertex)
-                .groupBy("dst")
-                .agg(F.sum(F.col("p") * F.col("score")).alias("contrib"))
-            )
-            joined = nodes_s.join(contribs, nodes_s.vertex == contribs.dst, "left")
-            if has_dangling:
-                dm = dangling.join(ranks, "vertex").agg(
-                    F.coalesce(F.sum("score"), F.lit(0.0)).alias("dmass")
-                )
-                joined = joined.crossJoin(F.broadcast(dm))
-                extra = F.col("dmass") / F.lit(float(n_seeds))
-            else:
-                extra = F.lit(0.0)
-            restart = F.col("is_seed").cast("double") / F.lit(float(n_seeds))
-            new_ranks = joined.select(
-                "vertex",
-                "is_seed",
-                (
-                    F.lit(1.0 - alpha) * restart
-                    + F.lit(alpha) * (F.coalesce(F.col("contrib"), F.lit(0.0)) + extra * F.col("is_seed"))
-                ).alias("score"),
-            )
-            if (it + 1) % 5 == 0 or it + 1 == max_iter:
-                new_ranks = s.checkpoint(new_ranks)
-            ranks = new_ranks
         return s.keep(ranks).select("vertex", "score")
+
+
+def _check_interval(checkpoint_interval: int) -> None:
+    if checkpoint_interval < 1:
+        raise ValueError(f"checkpoint_interval must be >= 1, got {checkpoint_interval}")
+
+
+@contextmanager
+def _aqe_off(spark: SparkSession):
+    """Run the body with AQE disabled, then restore the session's setting
+    exactly (an unset key is unset again)."""
+    key = "spark.sql.adaptive.enabled"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+def _vertex_flags(s: Scope, edges: DataFrame, annotate: Callable | None = None):
+    """(nodes, n, dangling) from ONE aggregation pass: the cached vertex
+    table, its size, and the vertices without an out-edge (None if there
+    are none). groupBy(max) combines map-side, so its single exchange
+    carries ~V rows, and one driver action fills the cache and answers n and
+    "any dangling". ``annotate`` adds the per-vertex columns the loop
+    carries (partition_id, the seed indicator) before the table is cached."""
+    flags = (
+        edges.select(F.col("src").alias("vertex"), F.lit(1).alias("_has_out"))
+        .unionAll(edges.select(F.col("dst").alias("vertex"), F.lit(0).alias("_has_out")))
+        .groupBy("vertex")
+        .agg(F.max("_has_out").alias("_has_out"))
+    )
+    flags = s.cache(flags if annotate is None else annotate(flags))
+    row = flags.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("_has_out") == 0, 1).otherwise(0)).alias("n_dangling"),
+    ).first()
+    dangling = (
+        flags.filter(F.col("_has_out") == 0).select("vertex") if row.n_dangling else None
+    )
+    return flags.drop("_has_out"), row.n, dangling
+
+
+def _join_step(s: Scope, edges: DataFrame, pr: _Recurrence, stable_layout: bool | None, long_run: bool):
+    """The join engine's contribution step over the cached transition
+    matrix; it reads scores from a ranks table or, fused, from the previous
+    superstep's (contribs, dangling_mass) (`_Recurrence.scored`). For LONG
+    runs (``stable_layout`` None defaults to ``long_run``) the matrix is
+    laid out on the join key and materialized up front: else the first
+    superstep mixes cache fill with gather and per-superstep walls stall
+    (2.8 s vs 5-50 s at 10M edges). For SHORT runs that costs more than it
+    saves."""
+    if stable_layout is None:
+        stable_layout = long_run
+    trans = s.cache(transition(edges.repartition("src") if stable_layout else edges))
+    if stable_layout:
+        trans.count()
+
+    def step(state):
+        if isinstance(state, DataFrame):
+            rel, x = trans.join(state, trans.src == state.vertex), F.col("score")
+        else:
+            rel, x = pr.scored(trans, "src", state)
+        return rel.groupBy("dst").agg(F.sum(F.col("p") * x).alias("contrib"))
+
+    return step
+
+
+class _Recurrence(NamedTuple):
+    """x'(v) = (1-α)·t(v) + α·(c(v) + d·t(v)) over the cached vertex table
+    ``nodes`` (n rows), with t(v) = w(v) / size where w is its ``weight``
+    column (None: 1 at every vertex)."""
+
+    nodes: DataFrame
+    n: int
+    dangling: DataFrame | None
+    alpha: float
+    size: int
+    weight: str | None
+
+    def _t(self, c: Column) -> Column:
+        return c if self.weight is None else c * F.col(self.weight)
+
+    def initial(self) -> DataFrame:
+        return self.nodes.withColumn("score", self._t(F.lit(1.0 / self.size)))
+
+    def score(self, has_dm: bool) -> Column:
+        """x' over a row holding ``contrib`` (null: no in-edge) and, when
+        there are dangling vertices, the broadcast ``dangling_mass``."""
+        extra = self._t(F.col(_DM) / F.lit(float(self.size))) if has_dm else F.lit(0.0)
+        return self._t(F.lit((1.0 - self.alpha) / self.size)) + F.lit(self.alpha) * (
+            F.coalesce(F.col("contrib"), F.lit(0.0)) + extra
+        )
+
+    def dangling_mass(self, state) -> DataFrame | None:
+        """d as a 1-row aggregate, folded into the plan by a broadcast
+        crossJoin: no per-superstep driver action, so a fixed-iteration run
+        stays one lazy DAG even on graphs with dangling vertices."""
+        if self.dangling is None:
+            return None
+        if isinstance(state, DataFrame):
+            rel, x = self.dangling.join(state, "vertex"), F.col("score")
+        else:
+            rel, x = self.scored(self.dangling, "vertex", state)
+        return rel.agg(F.coalesce(F.sum(x), F.lit(0.0)).alias(_DM))
+
+    def scored(self, rel: DataFrame, key: str, state) -> tuple[DataFrame, Column]:
+        """``rel`` with the score of its ``key`` vertex under a FUSED state
+        (contribs, dangling_mass): contribs LEFT-joined on, the score the
+        update expression over them — the value the ranks table would hold."""
+        contribs, dm = state
+        c = contribs.select(F.col("dst").alias("_cv"), "contrib")
+        out = rel.join(c, F.col(key) == F.col("_cv"), "left")
+        if dm is not None:
+            out = out.crossJoin(F.broadcast(dm))
+        return out, self.score(dm is not None)
+
+    def update(self, contribs: DataFrame, dm: DataFrame | None) -> DataFrame:
+        """The ranks table: every vertex (zero in-degree ones included)
+        with its carried columns and x'."""
+        joined = self.nodes.join(contribs, self.nodes.vertex == contribs.dst, "left")
+        if dm is not None:
+            joined = joined.crossJoin(F.broadcast(dm))
+        return joined.select(*self.nodes.columns, self.score(dm is not None).alias("score"))
+
+
+def _iterate(
+    s: Scope, pr: _Recurrence, step, max_iter: int, tol: float, runner,
+    interval: int, iter_walls: list | None, *, fuse: bool, eager_start: bool,
+) -> DataFrame:
+    """Run supersteps of ``pr`` with contribution step ``step`` and return
+    the last ranks table (a generation of ``s``).
+
+    The ranks table is materialized (checkpointed, lineage truncated) only
+    at a boundary: every ``interval``-th superstep, the last one, and every
+    superstep of a tol-driven or ``runner`` run. In between (so only in
+    fixed-iteration runs), supersteps chain lazily — as ranks tables, or
+    with ``fuse`` as the implicit (contribs, dangling_mass) state — and run
+    as one DAG per window with no per-superstep driver round-trip.
+    ``eager_start`` checkpoints the initial ranks; a resumed state is always
+    checkpointed, since it carries real lineage."""
+    start, ranks = 0, pr.initial()
+    resumed = runner.resume() if runner is not None else None
+    if resumed is not None:
+        start, ranks = resumed
+        if set(pr.nodes.columns) - set(ranks.columns):  # e.g. no partition_id
+            ranks = ranks.join(pr.nodes, "vertex")
+    if resumed is not None or eager_start:
+        ranks = s.checkpoint(ranks)
+    state = ranks
+    for it in range(start, max_iter):
+        t_it = time.monotonic()
+        contribs, dm = step(state), pr.dangling_mass(state)
+        err = float("inf")
+        if tol > 0 or runner is not None or (it + 1) % interval == 0 or it + 1 == max_iter:
+            new = s.checkpoint(pr.update(contribs, dm))
+            if tol > 0:  # every superstep is a boundary: state is ranks
+                err = _l1(new, ranks)
+            state = ranks = new
+        else:
+            state = (contribs, dm) if fuse else pr.update(contribs, dm)
+        if iter_walls is not None:
+            iter_walls.append(time.monotonic() - t_it)
+        if runner is not None:  # a runner makes every superstep a boundary
+            runner.checkpoint(it + 1, ranks, {"err": float(err) if tol > 0 else -1.0})
+        if err < pr.n * tol:
+            break
+    return ranks
+
+
+def _l1(new: DataFrame, old: DataFrame) -> float:
+    return (
+        new.alias("a")
+        .join(old.alias("b"), "vertex")
+        .agg(F.sum(F.abs(F.col("a.score") - F.col("b.score"))))
+        .first()[0]
+    )

@@ -28,6 +28,8 @@ class SuperstepRunner:
         interval: int = 1,
         fail_after: int | None = None,  # test hook: die after N checkpoints
     ):
+        if interval < 1:
+            raise ValueError(f"interval must be >= 1, got {interval}")
         self.spark = spark
         self.wh = warehouse
         self.job = job
